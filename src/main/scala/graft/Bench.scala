@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver benchmark: every registered query at the given SF, best-of-2.
   *
@@ -20,60 +19,15 @@ import org.apache.spark.sql.SparkSession
   * one heavy query.
   */
 object Bench {
-  // shared with tools/TimeQueries so bench tags and adjudication
-  // re-timings can never diverge on how steal/load are read
-  import graft.util.HostMetrics.{loadAvg, stealSec}
+  import graft.util.HostMetrics.{TaskCpu, loadAvg, timed}
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The separated sweeps put ~288 queries between a query's two
-      // attempts; at the default 100-entry codegen class cache, sweep B
-      // re-Janino-compiles every stage of every query — measured +30%
-      // on the total and +8 s on codegen-heavy x187 with ZERO steal.
-      // Sized to hold both sweeps' generated classes (~2k stages).
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // ANSI mode (Spark 4's new default) pays an overflow-check branch on
-      // every integer op; paired A/B (r15, same session, interleaved, min
-      // of reps) measured x187's hot wedge aggregate at −52% task CPU and
-      // −2.8 s wall with ANSI off, x213 −5 cpu-s, the rest neutral. The
-      // engine's arithmetic is overflow-audited (DECIMAL wherever a sum
-      // can exceed BIGINT — see x193's t³ note), so ANSI's only effect on
-      // declared queries is the per-op check cost; result-identity under
-      // the flip is proven by the full DuckDB oracle diff run with the
-      // same setting (graft.Verify). SPARK_GRAFT_ANSI=true restores
-      // strict mode at no code change (scale-deployment escape hatch).
-      .config("spark.sql.ansi.enabled", sys.env.getOrElse("SPARK_GRAFT_ANSI", "false"))
-      .getOrCreate()
+    val spark = graft.util.HostMetrics.session()
     spark.sparkContext.setLogLevel("WARN")
-    // Executor task-CPU accounting (r13, shared rationale with
-    // tools/TimeQueries): hypervisor steal stretches WALL time but not
-    // CPU consumed, so each kept attempt's CPU seconds is the
-    // steal-immune adjudication signal — a real per-row regression shows
-    // up in CPU, pure steal does not. Listener events are async; the
-    // settle poll attributes every task to its rep before the next starts.
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) cpuNanos.addAndGet(m.executorCpuTime)
-      }
-    })
-    def settledCpu(): Long = {
-      // bounded settle (ADVICE r13): if task-end events keep trickling in
-      // (any background activity), proceed with the last read after ~2 s —
-      // CPU attribution is advisory and must never hang the bench
-      var prev = -1L; var cur = cpuNanos.get(); var polls = 0
-      while (cur != prev && polls < 40) {
-        Thread.sleep(50); prev = cur; cur = cpuNanos.get(); polls += 1
-      }
-      cur
-    }
+    // each kept attempt's task-CPU seconds is the steal-immune
+    // round-over-round comparator (see HostMetrics.TaskCpu)
+    val cpu = TaskCpu.on(spark)
     // Warm the session (codegen compiler, shuffle machinery, parquet reader)
     // so the first measured query doesn't absorb ~6s of JVM startup.
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -88,32 +42,18 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
     // One timed execution: (seconds or -1 on failure, load average at
     // start, hypervisor steal seconds DURING the attempt, executor task
-    // CPU seconds DURING it). The cache clear after each query drops any
-    // persisted frames a query left behind so later queries aren't taxed
-    // by someone else's cache.
+    // CPU seconds DURING it). `timed` clears the cache and frees staged
+    // blocks after each query so later queries aren't taxed by someone
+    // else's cache.
     def once(name: String): (Double, Double, Double, Double) = {
       val la = loadAvg()
-      val c0 = settledCpu()
-      val st0 = stealSec()
-      val t0 = System.nanoTime()
-      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val st = stealSec()
-      val stolen = if (st0 < 0 || st < 0) -1.0
-        else math.round((st - st0) * 100) / 100.0
-      val cpu = math.round((settledCpu() - c0) / 1e7) / 100.0
-      spark.catalog.clearCache()
-      // clearCache drops SQL-cached relations but NOT localCheckpoint
-      // blocks (Staging.LocalCheckpoint is eager and registers in the
-      // block manager; ContextCleaner only frees them on a driver GC,
-      // every 30 min by default). 576 executions of accumulation turn
-      // into eviction churn that inflated heavy late-sweep queries
-      // (x189 in-bench 7-13 s vs 1.6 s isolated, zero steal) — free
-      // each query's staged blocks as soon as its timing is recorded.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      (if (ok) dt else -1.0, la, stolen, cpu)
+      var ok = true
+      val t = timed(spark, cpu) {
+        ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+          catch { case _: Throwable => false }
+      }
+      val stolen = if (t.steal < 0) -1.0 else math.round(t.steal * 100) / 100.0
+      (if (ok) t.wall else -1.0, la, stolen, math.round(t.cpu * 100) / 100.0)
     }
     // Sweep A: every query once, sorted order. Sweep B: every query again.
     // No result reuse between sweeps — the cache clear means both runs

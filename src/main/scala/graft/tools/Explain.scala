@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection / micro-profiling entry point:
   *   runMain graft.tools.Explain <sfDir> <query> [reps] [--plan]
   * Times a SparkEntry query `reps` times (first run includes planning; later
@@ -23,14 +21,7 @@ object Explain {
       else nameArgs.toSeq
     val reps = numArgs.headOption.map(_.toInt).getOrElse(2)
     val showPlan = args.contains("--plan")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", sys.env.getOrElse("SPARK_GRAFT_ANSI", "false")) // match Bench
-      .getOrCreate()
+    val spark = graft.util.HostMetrics.session()
     spark.sparkContext.setLogLevel("ERROR")
     graft.util.Fs.warmStorage(sfDir)
     names.foreach { name =>

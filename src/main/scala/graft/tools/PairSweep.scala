@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.HostMetrics.{TaskCpu, timed}
 
 /** Paired conf A/B (dev only): for each named query, alternate executions
   * with the candidate conf OFF (baseline) and ON, in counterbalanced order
@@ -19,50 +19,23 @@ object PairSweep {
       val Array(k, v) = kv.split("=", 2); (k, v)
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", sys.env.getOrElse("SPARK_GRAFT_ANSI", "false")) // match Bench
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val spark = graft.util.HostMetrics.session()
     spark.sparkContext.setLogLevel("ERROR")
     val baselineVals = confs.map { case (k, _) => k -> spark.conf.get(k) }
     println(s"[pair] candidate: ${confs.map(c => s"${c._1}=${c._2}").mkString(";")}" +
       s" (baseline: ${baselineVals.map(c => s"${c._1}=${c._2}").mkString(";")})")
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) cpuNanos.addAndGet(m.executorCpuTime)
-      }
-    })
-    def settledCpu(): Long = {
-      var prev = -1L; var cur = cpuNanos.get(); var polls = 0
-      while (cur != prev && polls < 40) {
-        Thread.sleep(50); prev = cur; cur = cpuNanos.get(); polls += 1
-      }
-      cur
-    }
+    val cpu = TaskCpu.on(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()
     graft.util.Fs.warmStorage(sfDir)
     val names =
       if (args.drop(1).contains("all")) graft.SparkEntry.queries.keys.toSeq.sorted
       else args.drop(1).toSeq
-    def run(n: String, cand: Boolean): (Double, Double) = {
+    def run(n: String, cand: Boolean) = {
       confs.zip(baselineVals).foreach { case ((k, v), (_, bv)) =>
         spark.conf.set(k, if (cand) v else bv)
       }
-      val c0 = settledCpu(); val t0 = System.nanoTime()
-      graft.SparkEntry.queries(n)(spark, sfDir).count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val cpu = (settledCpu() - c0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      (dt, cpu)
+      timed(spark, cpu) { graft.SparkEntry.queries(n)(spark, sfDir).count() }
     }
     var totBase = 0.0; var totCand = 0.0; var totBaseCpu = 0.0; var totCandCpu = 0.0
     names.zipWithIndex.foreach { case (n, i) =>
@@ -70,8 +43,8 @@ object PairSweep {
       val runs = (1 to reps).flatMap(_ => order.map(c => c -> run(n, c)))
       val base = runs.filter(!_._1).map(_._2)
       val cand = runs.filter(_._1).map(_._2)
-      val (bw, bc) = (base.map(_._1).min, base.map(_._2).min)
-      val (cw, cc) = (cand.map(_._1).min, cand.map(_._2).min)
+      val (bw, bc) = (base.map(_.wall).min, base.map(_.cpu).min)
+      val (cw, cc) = (cand.map(_.wall).min, cand.map(_.cpu).min)
       totBase += bw; totCand += cw; totBaseCpu += bc; totCandCpu += cc
       println(f"[pair] $n%-30s base $bw%6.2f/$bc%6.2f  cand $cw%6.2f/$cc%6.2f  " +
         f"dWall ${cw - bw}%+6.2f  dCpu ${cc - bc}%+6.2f")

@@ -28,13 +28,16 @@ object PlanHygiene {
     require(args.nonEmpty,
       "usage: runMain graft.tools.PlanHygiene <sfDir> [outFile | --show <query>]")
     val sfDir = args(0)
+    // not the bench session: the baseline is checked by PlanHygieneSpec
+    // in the test session (graft.TestSpark), so it is generated in one
+    // with the same master and shuffle partitions
+    val spark = SparkSession.builder().master("local[8]")
+      .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
     if (args.lift(1).contains("--show")) {
       val name = args(2)
-      val spark = SparkSession.builder().master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       // re-derive the repeated fragments with full tree detail
       val plan = df.queryExecution.analyzed
@@ -66,14 +69,6 @@ object PlanHygiene {
       return
     }
     val out = args.lift(1).getOrElse("dev/plan_hygiene_baseline.txt")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val lines = findings(spark, sfDir)
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (lines.mkString("\n") + "\n").getBytes("UTF-8"))

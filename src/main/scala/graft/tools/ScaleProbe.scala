@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.x.Dedup
 
@@ -16,11 +16,10 @@ object ScaleProbe {
     val onlyProbes = sys.env.get("SPARK_GRAFT_PROBES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def on(tag: String): Boolean = onlyProbes.forall(_.contains(tag))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.util.HostMetrics.session()
     spark.sparkContext.setLogLevel("ERROR")
+    // executor task-CPU, the steal-immune channel the graph probes report
+    val cpu = graft.util.HostMetrics.TaskCpu.on(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     // warm the session so factor-1 isn't charged for JVM startup,
     // and the storage cache so fixture reads aren't cold-disk luck
@@ -1276,20 +1275,6 @@ object ScaleProbe {
     // dominate), CPU linear; super-linear CPU or climbing rounds would
     // name a real defect.
     if (on("graph")) {
-      val cpuNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) cpuNanos.addAndGet(m.executorCpuTime)
-        }
-      })
-      def settledCpu(): Long = {
-        var prev = -1L; var cur = cpuNanos.get(); var polls = 0
-        while (cur != prev && polls < 40) {
-          Thread.sleep(50); prev = cur; cur = cpuNanos.get(); polls += 1
-        }
-        cur
-      }
       Seq(1, 4, 16).foreach { k =>
         val n = 100000L * k
         val half = n / 2
@@ -1323,18 +1308,18 @@ object ScaleProbe {
         println(f"[scale-graph] k=$k built edges=$ne — running scc")
 
         var sccRounds = 0
-        var c0 = settledCpu(); var t0 = System.nanoTime()
+        var c0 = cpu.settled(); var t0 = System.nanoTime()
         val comps = graft.x.Graph.stronglyConnectedComponents(edges, "src", "dst",
           maxRounds = 30, maxDepth = 96, roundObserver = r => sccRounds = r)
         val nComp = comps.select("comp").distinct().count()
         val unconv = comps.filter(!col("converged")).count()
         val tScc = (System.nanoTime() - t0) / 1e9
-        val cScc = (settledCpu() - c0) / 1e9
+        val cScc = (cpu.settled() - c0) / 1e9
         spark.catalog.clearCache()
         println(f"[scale-graph] k=$k scc done in $tScc%.1fs ($sccRounds rounds) — running kcore")
 
         var coreRounds = 0
-        c0 = settledCpu(); t0 = System.nanoTime()
+        c0 = cpu.settled(); t0 = System.nanoTime()
         // k=3: the cycle+jump halves sit at degree ~4 with sparse
         // degree-3 defect nodes (neighbor coincidences) — a k=4 gate
         // unravels the WHOLE graph through the defects (measured: 13
@@ -1343,7 +1328,7 @@ object ScaleProbe {
         val core = graft.x.Graph.kCore(edges, "src", "dst", k = 3,
           roundObserver = r => coreRounds = r).count()
         val tCore = (System.nanoTime() - t0) / 1e9
-        val cCore = (settledCpu() - c0) / 1e9
+        val cCore = (cpu.settled() - c0) / 1e9
         println(f"[scale-graph] edges=$ne%8d  scc=$tScc%6.2fs cpu=$cScc%7.2fs " +
           f"rounds=$sccRounds%2d comps=$nComp%7d unconverged=$unconv%4d  " +
           f"kcore3=$tCore%6.2fs cpu=$cCore%7.2fs rounds=$coreRounds%2d nodes=$core%7d")
@@ -1357,20 +1342,6 @@ object ScaleProbe {
     // the r14 row measured the from-scratch version on — rounds flat,
     // core exact, CPU/wall vs the recorded 9.4/33.3/124.6 cpu-s row
     if (on("kcore3")) {
-      val cpuNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) cpuNanos.addAndGet(m.executorCpuTime)
-        }
-      })
-      def settledCpu(): Long = {
-        var prev = -1L; var cur = cpuNanos.get(); var polls = 0
-        while (cur != prev && polls < 40) {
-          Thread.sleep(50); prev = cur; cur = cpuNanos.get(); polls += 1
-        }
-        cur
-      }
       factors.foreach { k =>
         val n = 100000L * k
         val half = n / 2
@@ -1395,11 +1366,11 @@ object ScaleProbe {
           .repartition(32).localCheckpoint(true)
         val ne = edges.count()
         var coreRounds = 0
-        val c0 = settledCpu(); val t0 = System.nanoTime()
+        val c0 = cpu.settled(); val t0 = System.nanoTime()
         val core = graft.x.Graph.kCore(edges, "src", "dst", k = 3,
           roundObserver = r => coreRounds = r).count()
         val tCore = (System.nanoTime() - t0) / 1e9
-        val cCore = (settledCpu() - c0) / 1e9
+        val cCore = (cpu.settled() - c0) / 1e9
         println(f"[scale-kcore3] edges=$ne%8d  kcore3=$tCore%6.2fs " +
           f"cpu=$cCore%7.2fs rounds=$coreRounds%2d nodes=$core%7d")
         spark.catalog.clearCache()
@@ -1433,20 +1404,6 @@ object ScaleProbe {
     // rows regardless of reach — the property the probe checks by
     // verifying CPU stays ~linear while REACH grows multiplicatively.
     if (on("graph2")) {
-      val cpuNanos2 = new java.util.concurrent.atomic.AtomicLong(0L)
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) cpuNanos2.addAndGet(m.executorCpuTime)
-        }
-      })
-      def settledCpu2(): Long = {
-        var prev = -1L; var cur = cpuNanos2.get(); var polls = 0
-        while (cur != prev && polls < 40) {
-          Thread.sleep(50); prev = cur; cur = cpuNanos2.get(); polls += 1
-        }
-        cur
-      }
       Seq(1, 4, 16).foreach { k =>
         val n = 100000L * k
         val half = n / 2
@@ -1463,11 +1420,11 @@ object ScaleProbe {
 
         // LPA: fixed 3 rounds; per round ONE exchange-free label⋈edge
         // join + ONE hash(node) mode-agg — CPU must track K linearly
-        var c0 = settledCpu2(); var t0 = System.nanoTime()
+        var c0 = cpu.settled(); var t0 = System.nanoTime()
         val nLabels = graft.x.Graph.labelPropagation(edges, "src", "dst", iters = 3)
           .select("label").distinct().count()
         val tLpa = (System.nanoTime() - t0) / 1e9
-        val cLpa = (settledCpu2() - c0) / 1e9
+        val cLpa = (cpu.settled() - c0) / 1e9
         spark.catalog.clearCache()
 
         // bipartite projection: n/8 left keys × degree 8 → 28 pairs per
@@ -1481,22 +1438,22 @@ object ScaleProbe {
             lit(-1L).as("order_id"), col("id").as("part_id")))
           .repartition(32).localCheckpoint(true)
         membership.count()
-        c0 = settledCpu2(); t0 = System.nanoTime()
+        c0 = cpu.settled(); t0 = System.nanoTime()
         val pairs = graft.x.Graph.bipartiteProject(
           membership, "order_id", "part_id", maxLeftDegree = 100).count()
         val tProj = (System.nanoTime() - t0) / 1e9
-        val cProj = (settledCpu2() - c0) / 1e9
+        val cProj = (cpu.settled() - c0) / 1e9
         val dropped = graft.x.Graph.oversizedLeftKeys(
           membership, "order_id", "part_id", 100).count()
         spark.catalog.clearCache()
 
         // HyperBall: 3 hops over the jump graph (balls double per hop) —
         // state stays 256 registers/node, so CPU must track K, not reach
-        c0 = settledCpu2(); t0 = System.nanoTime()
+        c0 = cpu.settled(); t0 = System.nanoTime()
         val hb = graft.x.Graph.hyperBall(edges, "src", "dst", maxHops = 3)
           .agg(max("total_reach")).head().getDouble(0)
         val tHb = (System.nanoTime() - t0) / 1e9
-        val cHb = (settledCpu2() - c0) / 1e9
+        val cHb = (cpu.settled() - c0) / 1e9
         println(f"[scale-graph2] edges=$ne%8d  lpa3=$tLpa%6.2fs cpu=$cLpa%7.2fs " +
           f"labels=$nLabels%7d  proj=$tProj%6.2fs cpu=$cProj%7.2fs pairs=$pairs%9d " +
           f"dropped=$dropped  hb3=$tHb%6.2fs cpu=$cHb%7.2fs reach=$hb%12.0f")

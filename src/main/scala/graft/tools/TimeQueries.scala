@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.util.HostMetrics.{TaskCpu, timed}
 
 /** Targeted re-timer for individual registry queries (dev only).
   *
@@ -10,66 +10,36 @@ import org.apache.spark.sql.SparkSession
   * Runs each named query REPS times after the standard bench warm-up and
   * prints every attempt with the hypervisor steal seconds accrued during
   * it — the adjudication tool for "is this bench entry a regression or
-  * host contamination" (see Bench.stealSec rationale). Min-of-reps with
+  * host contamination" (see HostMetrics.stealSec). Min-of-reps with
   * ~zero steal is the steady-state number comparable to bench budgets.
   *
-  * Also prints per-rep executor CPU seconds (sum of task executorCpuTime
-  * via a listener): steal stretches WALL time but not CPU consumed, so
-  * when the host is too contaminated for wall-clock adjudication, compare
-  * min-of-reps CPU between two builds run back-to-back — a real per-row
-  * regression shows up in CPU; pure steal does not.
+  * Also prints per-rep executor CPU seconds (HostMetrics.TaskCpu): steal
+  * stretches WALL time but not CPU consumed, so when the host is too
+  * contaminated for wall-clock adjudication, compare min-of-reps CPU
+  * between two builds run back-to-back — a real per-row regression shows
+  * up in CPU; pure steal does not.
   */
 object TimeQueries {
-  import graft.util.HostMetrics.stealSec
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "pass at least one registry query name")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", sys.env.getOrElse("SPARK_GRAFT_ANSI", "false")) // match Bench
-      .config("spark.sql.codegen.cache.maxEntries", "4096") // match Bench
-      .getOrCreate()
+    val spark = graft.util.HostMetrics.session()
     spark.sparkContext.setLogLevel("ERROR")
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) cpuNanos.addAndGet(m.executorCpuTime)
-      }
-    })
-    // listener events are async: poll until the counter is quiet so a
-    // rep's tasks are all attributed to it before the next rep starts
-    def settledCpu(): Long = {
-      var prev = -1L; var cur = cpuNanos.get()
-      while (cur != prev) { Thread.sleep(150); prev = cur; cur = cpuNanos.get() }
-      cur
-    }
+    val cpu = TaskCpu.on(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
     graft.util.Fs.warmStorage(sfDir)
     val unknown = args.filterNot(graft.SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
     for (name <- args) {
-      val reps2 = (1 to reps).map { i =>
-        val c0 = settledCpu(); val s0 = stealSec(); val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        val st = stealSec() - s0
-        val cpu = (settledCpu() - c0) / 1e9
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))  // free staged blocks (match Bench)
-        println(f"[time] $name rep$i: $dt%.2fs (steal $st%.2fs, cpu $cpu%.2fs)")
-        (dt, cpu)
+      val runs = (1 to reps).map { i =>
+        val t = timed(spark, cpu) { graft.SparkEntry.queries(name)(spark, sfDir).count() }
+        println(f"[time] $name rep$i: ${t.wall}%.2fs (steal ${t.steal}%.2fs, cpu ${t.cpu}%.2fs)")
+        t
       }
-      println(f"[time] $name MIN: ${reps2.map(_._1).min}%.2fs over $reps reps" +
-        f" (min cpu ${reps2.map(_._2).min}%.2fs)")
+      println(f"[time] $name MIN: ${runs.map(_.wall).min}%.2fs over $reps reps" +
+        f" (min cpu ${runs.map(_.cpu).min}%.2fs)")
     }
     spark.stop()
   }

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.util.HostMetrics.{TaskCpu, signature, timed}
 
 /** Paired CODE-variant A/B (dev only; the PairSweep of implementation
   * shapes): times two DataFrame constructions of the SAME result in one
@@ -9,71 +11,49 @@ import org.apache.spark.sql.functions._
   * only comparison immune to this host's regime storms (a cross-build
   * TimeQueries pair put x213's old build at 103 cpu-s when its bench
   * kept-CPU was 15.7; same-session interleaving cannot be fooled that
-  * way). Also asserts both variants return identical sorted results
-  * before timing, so an inequivalent "optimization" fails loudly here
-  * instead of at the oracle.
+  * way). Also asserts both variants return identical content
+  * (HostMetrics.signature) before timing, so an inequivalent
+  * "optimization" fails loudly here instead of at the oracle.
   *
   * Usage: runMain graft.tools.VariantSweep <case>[ <case>...]
-  * Cases: prefs | bipartite | all
+  * Cases: prefs | bipartite | bfs | kcore | all
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_REPS (default 3)
   */
 object VariantSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    val cases = if (args.isEmpty || args.contains("all"))
-      Seq("prefs", "bipartite") else args.toSeq
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", sys.env.getOrElse("SPARK_GRAFT_ANSI", "false"))
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
+    val known = Seq("prefs", "bipartite", "bfs", "kcore")
+    val cases = if (args.isEmpty || args.contains("all")) known else args.toSeq
+    val unknown = cases.filterNot(known.contains)
+    require(unknown.isEmpty,
+      s"unknown cases: ${unknown.mkString(", ")} (known: ${known.mkString(" | ")} | all)")
+    val spark = graft.util.HostMetrics.session()
     spark.sparkContext.setLogLevel("ERROR")
-    val cpuNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) cpuNanos.addAndGet(m.executorCpuTime)
-      }
-    })
-    def settled(): Long = {
-      var prev = -1L; var cur = cpuNanos.get(); var polls = 0
-      while (cur != prev && polls < 40) { Thread.sleep(50); prev = cur; cur = cpuNanos.get(); polls += 1 }
-      cur
-    }
+    val cpu = TaskCpu.on(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()
     graft.util.Fs.warmStorage(sfDir)
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-
-    def once(f: () => DataFrame): (Double, Double) = {
-      val c0 = settled(); val t0 = System.nanoTime()
-      f().count()
-      val dt = (System.nanoTime() - t0) / 1e9
-      val cpu = (settled() - c0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      (dt, cpu)
+    // consecutive-part edges within each order: the graph the bfs and
+    // kcore cases run on
+    def edgeFrame(): DataFrame = {
+      val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
+      li.select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
+        .withColumn("dst", lead("l_partkey", 1).over(w))
+        .filter(col("dst").isNotNull)
+        .select(col("l_partkey").as("src"), col("dst"))
     }
+
+    def once(f: () => DataFrame) = timed(spark, cpu) { f().count() }
     def ab(name: String, a: () => DataFrame, b: () => DataFrame): Unit = {
-      // equality gate first (counts + full sorted content hash)
-      val cols = a().columns.sorted.map(col).toSeq
-      def sig(df: DataFrame): (Long, Long) = {
-        val h = df.select(cols: _*)
-          .select(xxhash64(cols: _*).as("h"))
-          .agg(count(lit(1)), sum(col("h"))).collect()(0)
-        (h.getLong(0), h.getLong(1))
-      }
-      val (sa, sb) = (sig(a()), sig(b()))
+      // equality gate first: same columns, row count and content hash
+      val (sa, sb) = (signature(a()), signature(b()))
       require(sa == sb, s"$name: variants DISAGREE a=$sa b=$sb")
       println(s"[var] $name: equal ($sa)")
       val runs = (1 to reps).flatMap(_ => Seq("A" -> once(a), "B" -> once(b)))
       def mins(tag: String) = {
         val xs = runs.filter(_._1 == tag).map(_._2)
-        (xs.map(_._1).min, xs.map(_._2).min)
+        (xs.map(_.wall).min, xs.map(_.cpu).min)
       }
       val (aw, ac) = mins("A"); val (bw, bc) = mins("B")
       println(f"[var] $name%-12s A $aw%6.2f/$ac%7.2f  B $bw%6.2f/$bc%7.2f  " +
@@ -113,171 +93,9 @@ object VariantSweep {
         graft.x.Graph.bipartiteProject(li, "l_orderkey", "l_partkey", cap)
       ab("bipartite", bipOld(100) _, bipNew(100) _)
     }
-    if (cases.contains("bp")) {
-      // frequentTriples' basket-pair stage: staged kept → (b, x, y) pairs
-      val m = li.select(col("l_orderkey").as("b"), col("l_partkey").as("i")).distinct()
-      // parquet round-trip, NOT localCheckpoint: once()'s post-run
-      // unpersist sweep would free a checkpoint shared across reps
-      val keptPath = java.nio.file.Files
-        .createTempDirectory("varsweep-kept").toString
-      m.join(
-        m.groupBy("b").agg(count(lit(1)).as("__sz"))
-          .filter(col("__sz") <= 1000).select("b"), "b")
-        .write.mode("overwrite").parquet(keptPath)
-      val kept = spark.read.parquet(keptPath)
-      def bpOld(): DataFrame =
-        kept.select(col("b"), col("i").as("x"))
-          .join(kept.select(col("b"), col("i").as("y")), "b")
-          .filter(col("x") < col("y"))
-      def bpNew(): DataFrame =
-        kept.groupBy("b")
-          .agg(sort_array(collect_list(col("i"))).as("__ns"))
-          .filter(size(col("__ns")) >= 2)
-          .select(col("b"), col("__ns"),
-            explode(expr("sequence(1, size(__ns) - 1)")).as("__i"))
-          .select(col("b"), expr("element_at(__ns, __i)").as("x"),
-            explode(expr("slice(__ns, __i + 1, size(__ns) - __i)")).as("y"))
-      ab("bp", bpOld _, bpNew _)
-    }
-    if (cases.contains("spearman")) {
-      // A: the pre-r15 3-corpus-pass spearman; B: the pair-count rewrite
-      def spearmanOld(): DataFrame = {
-        val base = li.select(floor(col("l_quantity")).as("xq"),
-          floor(col("l_extendedprice") * 100).as("yc"))
-          .filter(col("xq").isNotNull && col("yc").isNotNull)
-          .select(col("xq").as("__x"), col("yc").as("__y"))
-        def midranks(valueCol: String, tag: String): DataFrame = {
-          val counts = base.groupBy(col(valueCol).as("__v"))
-            .agg(count(lit(1)).as("__c"))
-          val parts = spark.sessionState.conf.numShufflePartitions
-          val ranged = counts.repartitionByRange(parts, col("__v"))
-            .withColumn("__pid", spark_partition_id()).localCheckpoint(true)
-          val wOff = org.apache.spark.sql.expressions.Window.orderBy("__pid")
-            .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-          val off = ranged.groupBy("__pid").agg(sum("__c").as("__t"))
-            .withColumn("__off", coalesce(sum("__t").over(wOff), lit(0L)))
-            .select("__pid", "__off")
-          val wIn = org.apache.spark.sql.expressions.Window
-            .partitionBy("__pid").orderBy("__v")
-            .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-          ranged.join(broadcast(off), Seq("__pid"))
-            .select(col("__v").as(valueCol),
-              (lit(2L) * (col("__off") + sum("__c").over(wIn) - col("__c")) +
-                col("__c") + 1L).as(s"__r2_$tag"))
-        }
-        val withRanks = base
-          .join(midranks("__x", "x"), Seq("__x"))
-          .join(midranks("__y", "y"), Seq("__y"))
-        val d38 = "decimal(38,0)"
-        val rx = col("__r2_x").cast(d38)
-        val ry = col("__r2_y").cast(d38)
-        withRanks
-          .agg(count(lit(1)).cast(d38).as("__n"),
-            sum(rx).as("__sx"), sum(ry).as("__sy"),
-            sum(rx * ry).cast(d38).as("__sxy"),
-            sum(rx * rx).cast(d38).as("__sxx"),
-            sum(ry * ry).cast(d38).as("__syy"))
-          .select(col("__n").cast("long").as("n"),
-            round(expr(
-              "CASE WHEN (__n * __sxx - __sx * __sx) > 0 " +
-                "AND (__n * __syy - __sy * __sy) > 0 THEN " +
-                "CAST(__n * __sxy - __sx * __sy AS DOUBLE) / " +
-                "(SQRT(CAST(__n * __sxx - __sx * __sx AS DOUBLE)) * " +
-                "SQRT(CAST(__n * __syy - __sy * __sy AS DOUBLE))) END"), 6)
-              .as("spearman_rho"))
-      }
-      def spearmanNew(): DataFrame = {
-        val s = li.select(floor(col("l_quantity")).as("xq"),
-          floor(col("l_extendedprice") * 100).as("yc"))
-        graft.x.Profiler.spearman(s, "xq", "yc")
-      }
-      // C: old 3-pass shape, counts staged before repartitionByRange so
-      // the range sampler reads a checkpoint instead of re-running the agg
-      def spearmanStagedCounts(): DataFrame = {
-        val base = li.select(floor(col("l_quantity")).as("xq"),
-          floor(col("l_extendedprice") * 100).as("yc"))
-          .filter(col("xq").isNotNull && col("yc").isNotNull)
-          .select(col("xq").as("__x"), col("yc").as("__y"))
-        def midranks(valueCol: String, tag: String): DataFrame = {
-          val counts = base.groupBy(col(valueCol).as("__v"))
-            .agg(count(lit(1)).as("__c")).localCheckpoint(true)
-          val parts = spark.sessionState.conf.numShufflePartitions
-          val ranged = counts.repartitionByRange(parts, col("__v"))
-            .withColumn("__pid", spark_partition_id()).localCheckpoint(true)
-          val wOff = org.apache.spark.sql.expressions.Window.orderBy("__pid")
-            .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-          val off = ranged.groupBy("__pid").agg(sum("__c").as("__t"))
-            .withColumn("__off", coalesce(sum("__t").over(wOff), lit(0L)))
-            .select("__pid", "__off")
-          val wIn = org.apache.spark.sql.expressions.Window
-            .partitionBy("__pid").orderBy("__v")
-            .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-          ranged.join(broadcast(off), Seq("__pid"))
-            .select(col("__v").as(valueCol),
-              (lit(2L) * (col("__off") + sum("__c").over(wIn) - col("__c")) +
-                col("__c") + 1L).as(s"__r2_$tag"))
-        }
-        val withRanks = base
-          .join(midranks("__x", "x"), Seq("__x"))
-          .join(midranks("__y", "y"), Seq("__y"))
-        val d38 = "decimal(38,0)"
-        val rx = col("__r2_x").cast(d38)
-        val ry = col("__r2_y").cast(d38)
-        withRanks
-          .agg(count(lit(1)).cast(d38).as("__n"),
-            sum(rx).as("__sx"), sum(ry).as("__sy"),
-            sum(rx * ry).cast(d38).as("__sxy"),
-            sum(rx * rx).cast(d38).as("__sxx"),
-            sum(ry * ry).cast(d38).as("__syy"))
-          .select(col("__n").cast("long").as("n"),
-            round(expr(
-              "CASE WHEN (__n * __sxx - __sx * __sx) > 0 " +
-                "AND (__n * __syy - __sy * __sy) > 0 THEN " +
-                "CAST(__n * __sxy - __sx * __sy AS DOUBLE) / " +
-                "(SQRT(CAST(__n * __sxx - __sx * __sx AS DOUBLE)) * " +
-                "SQRT(CAST(__n * __syy - __sy * __sy AS DOUBLE))) END"), 6)
-              .as("spearman_rho"))
-      }
-      ab("spearman", spearmanOld _, spearmanNew _)
-      ab("sp-stagedcnt", spearmanOld _, spearmanStagedCounts _)
-    }
-    if (cases.contains("drift")) {
-      // x226: is the staged drift-exact frame (a sequential barrier) worth
-      // it, or does runtime exchange reuse carry its two consumers in one
-      // job when unstaged?
-      val emb = spark.read.parquet(
-        sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1") +
-          "/embeddings.parquet")
-      def shape(st: graft.util.Staging): () => DataFrame = () => {
-        val codes = emb.select(col("vec_id"),
-          graft.x.Similarity.int8Codes(col("embedding")).as("c"))
-        val corpus = codes.filter(col("vec_id") < 490 || col("vec_id") >= 500)
-        val queries = codes.filter(col("vec_id") >= 490 && col("vec_id") < 500)
-          .select(col("vec_id").as("q_id"), col("c"))
-        val stale = codes.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("centroid_id"), col("c"))
-        val fresh = graft.x.Similarity.int8LloydUpdate(corpus, stale,
-          "vec_id", "centroid_id", "c").localCheckpoint(true)
-        graft.x.Similarity.ivfRecallDrift(corpus, queries, stale, fresh,
-          "vec_id", "q_id", "centroid_id", "c", k = 10, nprobe = 2,
-          staging = st)
-      }
-      val noStage = new graft.util.Staging {
-        override def stage(df: DataFrame, hint: String): DataFrame = df
-      }
-      ab("drift", shape(graft.util.Staging.LocalCheckpoint), shape(noStage))
-    }
     if (cases.contains("bfs")) {
       // A: pre-r15 bfsHops (no frontier broadcast gate, no empty-frontier
       // break); B: probe-gated broadcasts
-      import org.apache.spark.sql.expressions.Window
-      def edgeFrame(): DataFrame = {
-        val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
-        li.select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-          .withColumn("dst", lead("l_partkey", 1).over(w))
-          .filter(col("dst").isNotNull)
-          .select(col("l_partkey").as("src"), col("dst"))
-      }
       def bfsOld(): DataFrame = {
         val directed = edgeFrame().filter(col("src") =!= col("dst"))
           .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
@@ -307,14 +125,6 @@ object VariantSweep {
     if (cases.contains("kcore")) {
       // A: pre-r15 kCore (degrees recomputed from the shrinking edge list,
       // edge list re-staged per round); B: incremental-degree kCore
-      import org.apache.spark.sql.expressions.Window
-      def edgeFrame(): DataFrame = {
-        val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
-        li.select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-          .withColumn("dst", lead("l_partkey", 1).over(w))
-          .filter(col("dst").isNotNull)
-          .select(col("l_partkey").as("src"), col("dst"))
-      }
       def kcoreOld(): DataFrame = {
         val k = 30; val broadcastWeakLimit = 1000000L; val maxIters = 50
         var e = edgeFrame().filter(col("src") =!= col("dst"))
@@ -346,101 +156,6 @@ object VariantSweep {
       def kcoreNew(): DataFrame =
         graft.x.Graph.kCore(edgeFrame(), "src", "dst", k = 30)
       ab("kcore", kcoreOld _, kcoreNew _)
-    }
-    if (cases.contains("tri")) {
-      // x106/x113: does staging e + deg beat runtime exchange reuse on the
-      // triangle machinery (plan shows the edge subtree duplicated)?
-      import org.apache.spark.sql.expressions.Window
-      def edgeFrame(): DataFrame = {
-        val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
-        li.select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-          .withColumn("dst", lead("l_partkey", 1).over(w))
-          .filter(col("dst").isNotNull)
-          .select(col("l_partkey").as("src"), col("dst"))
-      }
-      def canon(e: DataFrame): DataFrame = e
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-        .distinct()
-      def degs(e: DataFrame): DataFrame =
-        e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-          .groupBy("v").agg(count(lit(1)).as("deg"))
-      def triBody(e: DataFrame, deg: DataFrame): DataFrame = {
-        val oriented = e
-          .join(deg.select(col("v").as("a"), col("deg").as("__da")), "a")
-          .join(deg.select(col("v").as("b"), col("deg").as("__db")), "b")
-          .select(
-            when(struct(col("__da"), col("a")) < struct(col("__db"), col("b")),
-              struct(col("a").as("u"), col("b").as("w")))
-              .otherwise(struct(col("b").as("u"), col("a").as("w"))).as("__e"))
-          .select(col("__e.u").as("u"), col("__e.w").as("w"))
-        val tri = oriented.select(col("u"), col("w").as("x"))
-          .join(oriented.select(col("u"), col("w").as("y")), "u")
-          .filter(col("x") < col("y"))
-          .join(e.select(col("a").as("x"), col("b").as("y")), Seq("x", "y"))
-        val perNode = tri
-          .select(explode(array(col("u"), col("x"), col("y"))).as("v"))
-          .groupBy("v").agg(count(lit(1)).as("triangles"))
-        deg.join(perNode, Seq("v"), "left")
-          .withColumn("triangles", coalesce(col("triangles"), lit(0L)))
-          .withColumn("coeff", when(col("deg") >= 2,
-            (col("triangles") * 2).cast("double") /
-              (col("deg") * (col("deg") - 1)).cast("double"))
-            .otherwise(lit(0.0)))
-          .select(col("v").as("node"), col("deg").cast("long").as("deg"),
-            col("triangles").cast("long").as("triangles"), col("coeff"))
-      }
-      def triOld(): DataFrame = { val e = canon(edgeFrame()); triBody(e, degs(e)) }
-      def triStaged(): DataFrame = {
-        val e = canon(edgeFrame()).localCheckpoint(true)
-        val deg = degs(e).localCheckpoint(true)
-        triBody(e, deg)
-      }
-      ab("tri", triOld _, triStaged _)
-    }
-    if (cases.contains("assort")) {
-      // x116: is staging canonical edges + degrees cheaper than letting
-      // exchange reuse carry the 6-consumer re-evaluation?
-      import org.apache.spark.sql.expressions.Window
-      def edgeFrame(): DataFrame = {
-        val w = Window.partitionBy("l_orderkey").orderBy("l_linenumber", "l_partkey")
-        li.select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))
-          .withColumn("dst", lead("l_partkey", 1).over(w))
-          .filter(col("dst").isNotNull)
-          .select(col("l_partkey").as("src"), col("dst"))
-      }
-      def canon(e: DataFrame): DataFrame = e
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-        .distinct()
-      def degs(e: DataFrame): DataFrame =
-        e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-          .groupBy("v").agg(count(lit(1)).as("deg"))
-      def moments(e: DataFrame, deg: DataFrame): DataFrame = {
-        val d38 = "decimal(38,0)"
-        val sym = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
-          .join(deg.select(col("v").as("a"), col("deg").as("__x")), "a")
-          .join(deg.select(col("v").as("b"), col("deg").as("__y")), "b")
-        sym.agg(count(lit(1)).cast(d38).as("__n"),
-            sum(col("__x").cast(d38)).as("__sx"),
-            sum((col("__x") * col("__x")).cast(d38)).as("__sxx"),
-            sum((col("__x") * col("__y")).cast(d38)).as("__sxy"))
-          .select((col("__n") / 2).cast("long").as("n_edges"),
-            ((col("__n") * col("__sxy") - col("__sx") * col("__sx")).cast("double") /
-             (col("__n") * col("__sxx") - col("__sx") * col("__sx")).cast("double"))
-              .as("assortativity"))
-      }
-      def assortOld(): DataFrame = {
-        val e = canon(edgeFrame()); moments(e, degs(e))
-      }
-      def assortNew(): DataFrame = {
-        val e = canon(edgeFrame()).localCheckpoint(true)
-        val deg = degs(e).localCheckpoint(true)
-        moments(e, deg)
-      }
-      ab("assort", assortOld _, assortNew _)
     }
     spark.stop()
   }

@@ -477,4 +477,49 @@ class GuardsSpec extends AnyFunSuite {
     val s2 = graft.util.HostMetrics.stealSec()
     assert(s2 >= s1, s"steal not monotone: $s1 -> $s2")
   }
+
+  test("HostMetrics signature gate holds under ANSI; task-CPU settle is bounded") {
+    import graft.util.HostMetrics.{TaskCpu, signature}
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    val cpu = TaskCpu.on(spark)
+    try {
+      val base = spark.range(1000).select(col("id"), (col("id") % 7).as("g"))
+      // the data does overflow a BIGINT sum of row hashes under ANSI —
+      // the failure the DECIMAL signature exists to avoid
+      intercept[ArithmeticException] {
+        base.select(sum(xxhash64(col("g"), col("id")))).head()
+      }
+      val sig = signature(base)
+      assert(sig._2 == 1000L)
+      // shuffled row order and column order: same content, same signature
+      assert(signature(base.repartition(5).orderBy(rand(7)).select("g", "id")) == sig)
+      // one changed value
+      assert(signature(base.withColumn("g",
+        when(col("id") === 500L, lit(99L)).otherwise(col("g")))) != sig)
+      // one duplicated row
+      val dup = signature(base.unionAll(base.filter(col("id") === 3L)))
+      assert(dup._2 == 1001L && dup._3 != sig._3)
+
+      // settled CPU after a job that does work is positive
+      val c0 = cpu.settled()
+      spark.range(0, 3000000, 1, 4).selectExpr("sum(id * id % 13)").head()
+      assert(cpu.settled() > c0)
+      // and a settle returns within its ~2 s bound even while task-end
+      // events keep arriving from a concurrent job stream
+      @volatile var busy = true
+      val bg = new Thread(() => while (busy) spark.range(0, 20000, 1, 8).count())
+      bg.start()
+      try {
+        Thread.sleep(300)
+        val t0 = System.nanoTime()
+        cpu.settled()
+        val secs = (System.nanoTime() - t0) / 1e9
+        assert(secs < 3.0, s"settle took ${secs}s")
+      } finally { busy = false; bg.join() }
+    } finally {
+      spark.sparkContext.removeSparkListener(cpu)
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+    }
+  }
 }
