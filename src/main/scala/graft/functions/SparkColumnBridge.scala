@@ -27,6 +27,11 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry.registerFunction(ident, info, builder)
 
+  /** The local-checkpoint RDDs `df`'s plan reads (a staged frame is one). */
+  def checkpointRdds(df: org.apache.spark.sql.Dataset[Row]): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].logicalPlan
+      .collect { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
+
   /** Drop a checkpointed frame's PRESERVED statistics when they are
     * garbage (r14, found by the `[scale-graph]` probe). Spark 4's
     * `Dataset.localCheckpoint` truncates lineage but carries the ORIGIN

@@ -3,44 +3,73 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StringType
 
 /** Phase-2 validation operators (reference: /root/reference/spark.json:40-52,
   * threshold gate spark.json:7, reconciliation spark.json:80). Each validator
   * returns (good, bad) so the caller can route `bad` to the error sink
   * (spark.json:97-101) with an `error_reason` column.
   *
-  * Scale notes: nullKeyCheck is a pure narrow filter (no shuffle).
-  * dedup shuffles once on the primary keys — unavoidable for keyed dedup —
-  * and uses `row_number` so it is one hash-partitioned sort, not a self-join.
+  * The null-key and dedup rules also come as TAGGING steps over one frame
+  * ([[untagged]] → [[tagNullKeys]] / [[tagDuplicates]] → [[route]]): each
+  * step sets the nullable `error_reason` of the rows it rejects, so a
+  * job's whole validation chain is one plan that can be materialized once
+  * and split into good and bad rows without recomputation.
+  * [[nullKeyCheck]] and [[dedup]] are that chain with a single rule.
+  *
+  * Scale notes: the null-key rule is a pure narrow projection (no shuffle).
+  * The dedup rule shuffles once on the primary keys — unavoidable for keyed
+  * dedup — and uses `row_number` so it is one hash-partitioned sort, not a
+  * self-join.
   */
 object Validations {
 
   final case class Routed(good: DataFrame, bad: DataFrame)
 
-  /** V1 null-key validation (spark.json:43-46): rows with NULL in ANY
-    * declared primary key are invalid. */
-  def nullKeyCheck(df: DataFrame, primaryKeys: Seq[String]): Routed = {
+  /** The rejection column the tagging rules set and the error sink keeps. */
+  val ErrorReason = "error_reason"
+
+  /** `df` with an all-null `error_reason`: the start of a tagging chain. */
+  def untagged(df: DataFrame): DataFrame =
+    df.withColumn(ErrorReason, lit(null).cast(StringType))
+
+  /** Split a tagged frame: untagged rows (without the column) are good,
+    * tagged rows (with their reason) are bad. */
+  def route(tagged: DataFrame): Routed = Routed(
+    good = tagged.filter(col(ErrorReason).isNull).drop(ErrorReason),
+    bad = tagged.filter(col(ErrorReason).isNotNull))
+
+  /** V1 null-key rule (spark.json:43-46): rows with NULL in ANY declared
+    * primary key are invalid. A row an earlier rule rejected keeps its
+    * first reason. */
+  def tagNullKeys(tagged: DataFrame, primaryKeys: Seq[String]): DataFrame = {
     val anyNull: Column = primaryKeys.map(col(_).isNull).reduce(_ || _)
-    Routed(
-      good = df.filter(!anyNull),
-      bad = df.filter(anyNull).withColumn("error_reason", lit("null_primary_key"))
-    )
+    tagged.withColumn(ErrorReason,
+      coalesce(col(ErrorReason), when(anyNull, lit("null_primary_key"))))
   }
 
-  /** V2 duplicate-record validation (spark.json:47-52): among rows sharing
+  /** V2 duplicate-record rule (spark.json:47-52): among rows sharing
     * `primaryKeys`, keep the first by `orderByCols` DESC; rest are invalid.
-    * One shuffle on the keys; map-side nothing to combine (row-level op). */
-  def dedup(df: DataFrame, primaryKeys: Seq[String], orderByCols: Seq[String]): Routed = {
+    * Only rows every earlier rule passed compete (the flag joins the
+    * window key), so the chain routes exactly as running the rules one
+    * after another over each rule's good rows. Ties on `orderByCols` are
+    * broken arbitrarily, once per evaluation of the plan. */
+  def tagDuplicates(tagged: DataFrame, primaryKeys: Seq[String],
+      orderByCols: Seq[String]): DataFrame = {
     val w = Window
-      .partitionBy(primaryKeys.map(col): _*)
+      .partitionBy(primaryKeys.map(col) :+ col(ErrorReason).isNull: _*)
       .orderBy(orderByCols.map(col(_).desc): _*)
-    val rn = df.withColumn("__rn", row_number().over(w))
-    Routed(
-      good = rn.filter(col("__rn") === 1).drop("__rn"),
-      bad = rn.filter(col("__rn") > 1).drop("__rn")
-        .withColumn("error_reason", lit("duplicate_record"))
-    )
+    tagged.withColumn(ErrorReason, coalesce(col(ErrorReason),
+      when(row_number().over(w) > 1, lit("duplicate_record"))))
   }
+
+  /** V1 null-key validation as a split: [[tagNullKeys]] alone. */
+  def nullKeyCheck(df: DataFrame, primaryKeys: Seq[String]): Routed =
+    route(tagNullKeys(untagged(df), primaryKeys))
+
+  /** V2 duplicate-record validation as a split: [[tagDuplicates]] alone. */
+  def dedup(df: DataFrame, primaryKeys: Seq[String], orderByCols: Seq[String]): Routed =
+    route(tagDuplicates(untagged(df), primaryKeys, orderByCols))
 
   /** Referential-integrity validation (extension of the phase-2 family):
     * child rows whose foreign-key tuple has no match in `parent` are
@@ -77,8 +106,10 @@ object Validations {
   }
 
   /** V4 threshold gate (spark.json:7, e.g. "30%"): abort when the invalid
-    * fraction exceeds the limit. Counts force one action each — callers
-    * should pass already-persisted frames when both counts are needed. */
+    * fraction exceeds the limit. Takes counts, not frames: the caller
+    * derives both from whatever it already materialized (the
+    * orchestrator takes them from one aggregate over its staged, tagged
+    * input). */
   def thresholdGate(goodCount: Long, badCount: Long, limit: Double): Unit = {
     val total = goodCount + badCount
     if (total > 0 && badCount.toDouble / total > limit)

@@ -46,6 +46,13 @@ object Staging {
         .capCheckpointStats(df.localCheckpoint(true))
   }
 
+  /** Free the executor blocks of the local checkpoints `df` reads — what
+    * [[LocalCheckpoint]] staged for it; frames from [[PathStaging]] hold
+    * none. Non-blocking; `df` must not be evaluated afterwards. */
+  def release(df: DataFrame): Unit =
+    org.apache.spark.sql.graftbridge.ColumnBridge.checkpointRdds(df)
+      .foreach(_.unpersist(blocking = false))
+
   /** Durable parquet staged tables under `root` — one numbered directory
     * per stage call. Call [[cleanup]] when the job's outputs are safely
     * materialized (the staged intermediates are scratch, not results).

@@ -2,9 +2,14 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import graft.config.JobConfig
 import graft.run.{Orchestrator, PipelineRunner, PipelineStep}
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
 
 /** End-to-end job + pipeline runs mirroring the reference's 4-step
   * share-price DAG shape (fetch → calculate_daily_range → register → scd2,
@@ -15,6 +20,156 @@ class OrchestratorSpec extends AnyFunSuite {
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft-orch").toString
+
+  /** Over the tasks that end while it is registered: the rows read from
+    * storage (files, cached and checkpointed blocks alike) and the rows CSV
+    * file scans output (their "number of output rows" metric). */
+  private final class ReadProbe extends SparkListener {
+    val recordsRead, csvScanRows = new AtomicLong
+    private val csvScanMetrics = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    private val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    private def scans(p: SparkPlanInfo): Unit = {
+      if (p.nodeName.startsWith("Scan csv"))
+        p.metrics.filter(_.name == "number of output rows")
+          .foreach(m => csvScanMetrics.add(m.accumulatorId))
+      p.children.foreach(scans)
+    }
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart          => scans(s.sparkPlanInfo)
+      case u: SparkListenerSQLAdaptiveExecutionUpdate => scans(u.sparkPlanInfo)
+      case _                                          =>
+    }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+      if (e.taskMetrics != null) recordsRead.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      e.taskInfo.accumulables.foreach { a =>
+        if (csvScanMetrics.contains(a.id))
+          a.update.foreach(v => csvScanRows.addAndGet(v.asInstanceOf[Long]))
+      }
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.add(e.jobId); () }
+
+    /** Wait until the listener has seen every event posted so far: a
+      * fence job's end arrives after them on the same queue. */
+    def drain(): Unit = {
+      val f = spark.sparkContext.parallelize(Seq(1), 1).countAsync()
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration(60, "s"))
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!f.jobIds.forall(ended.contains) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(f.jobIds.forall(ended.contains), "listener bus did not drain")
+    }
+  }
+
+  /** What a [[ReadProbe]] saw while `body` ran. */
+  private def probing(body: => Unit): ReadProbe = {
+    val probe = new ReadProbe
+    spark.sparkContext.addSparkListener(probe)
+    try { body; probe.drain(); probe }
+    finally spark.sparkContext.removeSparkListener(probe)
+  }
+
+  private def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** A 20-row CSV day-drop over (order_key, line_no) with a null-key rule
+    * on part_key and a dedup rule keeping the highest ingest_seq:
+    *  - 8 clean rows;
+    *  - n1, n2: only a null key;
+    *  - d_keep beats d_drop1, d_drop2: only duplicates;
+    *  - b_null has a null key AND outranks its duplicate b_keep, which,
+    *    once b_null is routed out, has no rival left and survives;
+    *  - bb1, bb2: null keys and duplicates of each other;
+    *  - t_a, t_b, t_c: one key, tied on ingest_seq — one survives.
+    * Sequentially routed: 5 null-key rows, then 4 duplicates, 11 good. */
+  private def validatedCsvJob(dir: String, threshold: String, sinkLoad: String = "truncateInsert") = {
+    val rows = Seq(
+      "1,1,10,1,c1", "1,2,11,1,c2", "2,1,12,1,c3", "3,1,13,1,c4",
+      "4,1,14,1,c5", "5,1,15,1,c6", "6,1,16,1,c7", "7,1,17,1,c8",
+      "8,1,,1,n1", "9,1,,1,n2",
+      "10,1,20,5,d_keep", "10,1,20,3,d_drop1", "10,1,21,1,d_drop2",
+      "11,1,,9,b_null", "11,1,30,2,b_keep",
+      "12,1,,1,bb1", "12,1,,2,bb2",
+      "13,1,40,7,t_a", "13,1,41,7,t_b", "13,1,42,7,t_c")
+    Files.createDirectories(Paths.get(dir, "drop"))
+    Files.writeString(Paths.get(dir, "drop", "day.csv"),
+      ("ORDER_KEY,LINE_NO,PART_KEY,SEQ,PAYLOAD" +: rows).mkString("", "\n", "\n"))
+    Files.writeString(Paths.get(dir, "mapping.json"),
+      """[{"sourceColumn": "ORDER_KEY", "targetColumn": "order_key", "dataType": "bigint"},
+        | {"sourceColumn": "LINE_NO", "targetColumn": "line_no", "dataType": "int"},
+        | {"sourceColumn": "PART_KEY", "targetColumn": "part_key", "dataType": "bigint"},
+        | {"sourceColumn": "SEQ", "targetColumn": "ingest_seq", "dataType": "bigint"},
+        | {"sourceColumn": "PAYLOAD", "targetColumn": "payload", "dataType": "string"}]""".stripMargin)
+    JobConfig.parse(
+      s"""{
+         |"jobName": "validated_drop",
+         |"thresholdLimit": "$threshold",
+         |"inputs": [{"dataFrameName": "raw", "format": "csv", "path": "$dir/drop", "header": true,
+         |  "options": {"inferSchema": "false"}, "metadataPath": "$dir/mapping.json"}],
+         |"validations": [
+         |  {"type": "nullValueCheck", "dataFrameName": "raw", "primaryKeys": ["part_key"]},
+         |  {"type": "duplicateRecordCheck", "dataFrameName": "raw",
+         |   "primaryKeys": ["order_key", "line_no"], "orderByCols": ["ingest_seq"]}],
+         |"transformations": [{"functionName": "keep", "outputDFName": "kept",
+         |  "sqlQuery": "SELECT order_key, line_no, part_key, ingest_seq, payload FROM raw"}],
+         |"sinks": [{"dataFrameName": "kept", "loadType": "$sinkLoad", "format": "parquet",
+         |  "path": "$dir/kept", "reconciliation": true}],
+         |"errorSink": {"dataFrameName": "errors", "format": "parquet", "savemode": "append",
+         |  "path": "$dir/errors"}
+         |}""".stripMargin)
+  }
+
+  test("validated CSV step: one staged pass routes as the sequential rules, " +
+      "reads the CSV once, and the gate trips at the same share") {
+    val dir = tmpDir()
+    val cfg = validatedCsvJob(dir, "45%") // 9 of 20 rejected: 45% passes
+    val probe = probing(new PipelineRunner(spark).run(Seq(PipelineStep("drop", cfg))))
+    assert(probe.csvScanRows.get == 20,
+      s"CSV scans output ${probe.csvScanRows.get} rows: the 20-row input was parsed more than once")
+
+    val errs = spark.read.parquet(s"$dir/errors")
+    def payloads(reason: String) = errs.filter(col("error_reason") === reason)
+      .select("payload").collect().map(_.getString(0)).sorted.toSeq
+    assert(payloads("null_primary_key") == Seq("b_null", "bb1", "bb2", "n1", "n2"))
+    val dups = payloads("duplicate_record")
+    assert(dups.count(_.startsWith("d_")) == 2 && dups.contains("d_drop1") &&
+      dups.contains("d_drop2"), s"dedup rejects: $dups")
+    assert(dups.count(_.startsWith("t_")) == 2, s"one of three tied rows survives: $dups")
+    assert(errs.count() == 9)
+
+    // one tie-break decision: rejected + written = the input, as a multiset
+    val cols = Seq("order_key", "line_no", "part_key", "ingest_seq", "payload")
+    val kept = spark.read.parquet(s"$dir/kept")
+    assert(kept.count() == 11 && kept.filter(col("payload") === "b_keep").count() == 1)
+    val input = spark.read.option("header", "true").csv(s"$dir/drop")
+      .select(col("ORDER_KEY").cast("bigint").as("order_key"),
+        col("LINE_NO").cast("int").as("line_no"), col("PART_KEY").cast("bigint").as("part_key"),
+        col("SEQ").cast("bigint").as("ingest_seq"), col("PAYLOAD").as("payload"))
+    val routed = errs.select(cols.map(col): _*).unionByName(kept.select(cols.map(col): _*))
+    assert(routed.exceptAll(input).isEmpty && input.exceptAll(routed).isEmpty)
+
+    // the gate: 9 of 20 is 45% — over a 44% limit, at a 45% limit not
+    val e = intercept[IllegalStateException](
+      new Orchestrator(spark).run(validatedCsvJob(tmpDir(), "44%")))
+    assert(e.getMessage.contains("9/20 invalid"), e.getMessage)
+  }
+
+  test("staged blocks: freed after a step, and after every failed attempt; " +
+      "a direct run's result stays usable") {
+    val before = persisted()
+    new PipelineRunner(spark).run(Seq(PipelineStep("ok", validatedCsvJob(tmpDir(), "50%"))))
+    assert((persisted() -- before).isEmpty, "a successful step left staged blocks behind")
+
+    val failing = validatedCsvJob(tmpDir(), "50%", sinkLoad = "noSuchLoad")
+    val e = intercept[IllegalStateException](
+      new PipelineRunner(spark).run(Seq(PipelineStep("bad", failing, retries = 2))))
+    assert(e.getMessage.contains("after 3 attempts"), e.getMessage)
+    assert((persisted() -- before).isEmpty, "failed attempts left staged blocks behind")
+
+    // a direct caller's result reads the staged blocks, so they stay
+    val out = new Orchestrator(spark).run(validatedCsvJob(tmpDir(), "50%"))
+    val held = persisted() -- before
+    assert(held.nonEmpty)
+    assert(out.count() == 11)
+    held.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
+  }
 
   test("single job: inputs → validations → SQL chain → parquet sink → error sink") {
     val out = tmpDir()
@@ -65,15 +220,23 @@ class OrchestratorSpec extends AnyFunSuite {
          |],
          |"sinks": [$sinkJson]
          |}""".stripMargin)
-    // plain-format append: target grows by exactly the batch on every run
+    // plain-format append: target grows by exactly the batch on every run;
+    // the target already holds 2,000 rows of earlier runs, which the check
+    // must not read (it counts only the files the write added)
+    spark.read.parquet(s"$sf/nation.parquet").select("n_nationkey", "n_name")
+      .crossJoin(spark.range(80)).drop("id").write.parquet(s"$out/pq")
     val pq =
       s"""{"dataFrameName": "picked", "loadType": "simpleInsert", "format": "parquet",
          | "path": "$out/pq", "savemode": "append", "reconciliation": true}""".stripMargin
-    new Orchestrator(spark).run(cfg(pq))
-    new Orchestrator(spark).run(cfg(pq))
-    assert(spark.read.parquet(s"$out/pq").count() == 50) // 25 nations × 2 appends
-    // delta-format append: the change feed replays the batch for a FULL
-    // count+checksum reconcile (stronger than the count-delta above)
+    val probe = probing {
+      new Orchestrator(spark).run(cfg(pq))
+      new Orchestrator(spark).run(cfg(pq))
+    }
+    assert(spark.read.parquet(s"$out/pq").count() == 2050) // + 25 nations × 2 appends
+    assert(probe.recordsRead.get < 2000,
+      s"reconciling two 25-row appends read ${probe.recordsRead.get} rows")
+    // delta-format append: the change feed replays exactly this batch,
+    // whose row count is reconciled
     val dl =
       s"""{"dataFrameName": "picked", "loadType": "simpleInsert", "format": "delta",
          | "path": "$out/dl", "savemode": "append", "reconciliation": true}""".stripMargin
