@@ -2586,8 +2586,8 @@ object SparkEntry {
         .select(col("vec_id").as("centroid_id"), col("c"))
       // the refreshed quantizer feeds both sides of its probe (corpus
       // assignment + query cells) — staged so the Lloyd aggs run once
-      val fresh = Similarity.int8LloydUpdate(corpus, stale, "vec_id",
-        "centroid_id", "c").localCheckpoint(true)
+      val fresh = graft.util.Staging.LocalCheckpoint.stage(Similarity.int8LloydUpdate(
+        corpus, stale, "vec_id", "centroid_id", "c"), "ivf-fresh-quantizer")
       Similarity.ivfRecallDrift(corpus, queries, stale, fresh,
           "vec_id", "q_id", "centroid_id", "c", k = 10, nprobe = 2)
         .orderBy("q_id")
@@ -2817,9 +2817,8 @@ object SparkEntry {
       // the distinct edge list feeds BOTH the LPA prelude and modularity's
       // three subtrees (m, degrees, intra-edge join) — staged once so the
       // lineitem scan + distinct exchange run once, not per consumer
-      val edges = s.table("lineitem").select(col("l_partkey").as("src"),
-        (col("l_suppkey") + lit(1000000L)).as("dst")).distinct()
-        .localCheckpoint(true)
+      val edges = graft.util.Staging.LocalCheckpoint.stage(s.table("lineitem").select(
+        col("l_partkey").as("src"), (col("l_suppkey") + lit(1000000L)).as("dst")).distinct(), "x202-edges")
       val labels = Graph.labelPropagation(edges, "src", "dst", iters = 3)
       Graph.modularity(edges, "src", "dst", labels)
         .select(col("label"), col("n_nodes"), col("d_tot").cast("long")

@@ -32,41 +32,39 @@ object ColumnBridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].logicalPlan
       .collect { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
 
-  /** Drop a checkpointed frame's PRESERVED statistics when they are
-    * garbage (r14, found by the `[scale-graph]` probe). Spark 4's
-    * `Dataset.localCheckpoint` truncates lineage but carries the ORIGIN
-    * plan's estimated `Statistics` onto the `LogicalRDD`
-    * (`LogicalRDD.fromDataset` → `rewriteStatsAndConstraints`,
-    * unconditionally). In an iterative operator whose next plan
-    * references the previous checkpoint MORE THAN ONCE (union with an
-    * anti-join against the accumulated set — the SCC closure, kCore,
-    * bfsHops shape), the estimated sizeInBytes therefore SQUARES per
-    * iteration: by depth ~20 the preserved BigInt has millions of digits
-    * and Catalyst's stats visitor spends MINUTES in
-    * `BigInteger.multiply` per planning pass — measured 20+ min of
-    * driver CPU on a 200k-edge graph whose execution takes seconds.
-    *
-    * The threshold is the estimate's BIT LENGTH, not a size cutoff:
-    * merely-overflowed estimates (a 3-way join of modest scans crosses
-    * 8 EiB immediately) are routine, harmless — an estimate that large
-    * never broadcasts, and stripping it would ALSO strip downstream
-    * frames' realistic broadcast hints (measured: 7 bench queries
-    * regressed 2× when r14 first capped at Long.MaxValue) — so those
-    * are KEPT, and only estimates past 2^1024 bytes (~10^308 — beyond
-    * IEEE double, reachable only by a multiplicative feedback loop) are
-    * dropped. Squaring then self-limits: digits double per iteration
-    * from the 63-bit default, cross the threshold within ~5 iterations,
-    * reset — BigInts stay ≤ ~2 kbit forever, and planning stays O(plan). */
-  def capCheckpointStats(df: org.apache.spark.sql.Dataset[Row]): org.apache.spark.sql.DataFrame = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-    ds.logicalPlan match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD
-          if lr.stats.sizeInBytes.bitLength > 1024 =>
-        val stripped = org.apache.spark.sql.execution.LogicalRDD(
-          lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
-          lr.isStreaming, lr.stream)(ds.sparkSession, None, None)
-        org.apache.spark.sql.classic.Dataset.ofRows(ds.sparkSession, stripped)
-      case _ => ds
-    }
+  /** A local checkpoint of `df` whose `LogicalRDD` carries EXACT
+    * statistics. One job over the lazily checkpointed RDD materializes its
+    * blocks and returns each partition's row count and `UnsafeRow` bytes;
+    * the `LogicalRDD` is rebuilt with those as its origin statistics,
+    * keeping its output, RDD, partitioning and ordering. An eager
+    * `localCheckpoint` runs the same one job but carries the origin
+    * plan's ESTIMATED statistics instead, which compound in loops that
+    * read the previous stage twice (union + anti-join). */
+  def localCheckpointWithStats(df: org.apache.spark.sql.Dataset[Row]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+    val cp = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].localCheckpoint(false)
+    val lr = cp.logicalPlan.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+    val otherRowBytes = 8L + lr.output.map(_.dataType.defaultSize.toLong).sum
+    val parts = lr.rdd.sparkContext.runJob(lr.rdd, (it: Iterator[InternalRow]) => {
+      var rows, bytes = 0L
+      it.foreach { r =>
+        rows += 1
+        bytes += (r match { case u: UnsafeRow => u.getSizeInBytes.toLong; case _ => otherRowBytes })
+      }
+      (rows, bytes)
+    })
+    val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
+      sizeInBytes = BigInt(math.max(1L, parts.map(_._2).sum)),
+      rowCount = Some(BigInt(parts.map(_._1).sum)))
+    val exact = org.apache.spark.sql.execution.LogicalRDD(
+      lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
+      lr.isStreaming, lr.stream)(cp.sparkSession, Some(stats), Some(lr.constraints))
+    org.apache.spark.sql.classic.Dataset.ofRows(cp.sparkSession, exact)
   }
+
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes (−1: off). */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
 }

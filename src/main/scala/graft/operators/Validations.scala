@@ -117,9 +117,9 @@ object Validations {
         f"validation threshold exceeded: $badCount/$total invalid (${badCount.toDouble / total}%.3f > $limit%.3f)")
   }
 
-  /** V3 transformed-count validation (spark.json:66). */
-  def countValidation(df: DataFrame, minRows: Long): Long = {
-    val n = df.count()
+  /** V3 transformed-count validation (spark.json:66) of a frame with `n`
+    * rows: the orchestrator takes `n` from the frame's staged statistics. */
+  def countValidation(n: Long, minRows: Long): Long = {
     if (n < minRows)
       throw new IllegalStateException(s"count validation failed: $n rows < expected $minRows")
     n

@@ -162,11 +162,20 @@ class Orchestrator(spark: SparkSession) {
           .foreach(f => System.err.println(
             s"[plan-audit] ${t.outputDFName}: ${f.severity} ${f.node} — ${f.detail}"))
       }
-      out.createOrReplaceTempView(t.outputDFName)
-      t.countValidation match {
-        case Some(min) => rows(t.outputDFName) = Validations.countValidation(out, min)
-        case None      => rows -= t.outputDFName
+      // a count-validated output is staged once: its exact staged row
+      // count is the check, and the sinks and reconciliation read the same
+      // blocks instead of evaluating the transformation a second time. The
+      // caller still gets the transformation's own frame, whose plan the
+      // plan lints (PlanAudit, PlanHygiene) read.
+      val view = t.countValidation match {
+        case Some(min) =>
+          val counted = Staging.LocalCheckpoint.stage(out, s"counted_${t.outputDFName}")
+          staged += counted
+          rows(t.outputDFName) = Validations.countValidation(Staging.stagedRows(counted), min)
+          counted
+        case None => rows -= t.outputDFName; out
       }
+      view.createOrReplaceTempView(t.outputDFName)
       last = out
     }
 

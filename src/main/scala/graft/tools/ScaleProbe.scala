@@ -732,10 +732,10 @@ object ScaleProbe {
 
     // kcore probe: K disjoint graph copies — per-copy peel structure is
     // identical, so the round count stays fixed and wall time must track
-    // K linearly. The cascade frontier stays under broadcastWeakLimit
+    // K linearly. The cascade frontier stays under the broadcast threshold
     // throughout, so every round ≥2 runs the broadcast anti-join path
     // (the shape GraphSpec pins); superlinear growth would mean the
-    // degree agg or the weak-set probe degenerated.
+    // degree agg or the per-round weak-set aggregate degenerated.
     if (on("kcore")) {
       val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"))

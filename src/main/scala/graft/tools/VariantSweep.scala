@@ -95,7 +95,7 @@ object VariantSweep {
     }
     if (cases.contains("bfs")) {
       // A: pre-r15 bfsHops (no frontier broadcast gate, no empty-frontier
-      // break); B: probe-gated broadcasts
+      // break); B: size-gated broadcasts (Staging.broadcastIfSmall)
       def bfsOld(): DataFrame = {
         val directed = edgeFrame().filter(col("src") =!= col("dst"))
           .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))

@@ -1,6 +1,8 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Where multi-pass operators materialize reused intermediates.
   *
@@ -32,25 +34,41 @@ trait Staging {
 
 object Staging {
 
-  /** Eager local checkpoint: executor-memory blocks, no durability.
-    * The checkpoint's PRESERVED origin statistics are dropped when they
-    * exceed any physically possible size — in iterative loops that
-    * reference the previous stage twice (union + anti-join), preserved
-    * estimates SQUARE per iteration until Catalyst's stats visitor
-    * spends minutes multiplying million-digit BigInts per planning pass
-    * (found by the r14 `[scale-graph]` probe; see
-    * [[org.apache.spark.sql.graftbridge.ColumnBridge.capCheckpointStats]]). */
+  /** Eager local checkpoint: executor-memory blocks, no durability. The
+    * one job that materializes the blocks also counts their rows and
+    * bytes, and the staged frame carries both as its statistics
+    * ([[org.apache.spark.sql.graftbridge.ColumnBridge.localCheckpointWithStats]]).
+    * Catalyst's join selection and [[broadcastIfSmall]] then see true
+    * sizes, read as [[stagedRows]] with no further job, and the statistics
+    * cannot compound across a loop that joins each stage to the last. */
   object LocalCheckpoint extends Staging {
     override def stage(df: DataFrame, hint: String): DataFrame =
-      org.apache.spark.sql.graftbridge.ColumnBridge
-        .capCheckpointStats(df.localCheckpoint(true))
+      ColumnBridge.localCheckpointWithStats(df)
+  }
+
+  /** The exact row count of a frame [[LocalCheckpoint]] staged. */
+  def stagedRows(df: DataFrame): Long = df.queryExecution.optimizedPlan.stats.rowCount.get.toLong
+
+  /** `df` with a broadcast hint when its size is at most the session's
+    * `spark.sql.autoBroadcastJoinThreshold` (−1 never broadcasts). Runs
+    * no job: the size is the optimized plan's, exact for a
+    * [[LocalCheckpoint]]-staged frame and an upper bound for a filter or
+    * projection of one. A caller that knows a bound on the row count
+    * (an aggregate it already took) passes it as `maxRows`, and the size
+    * is that many rows of `df`'s schema. */
+  def broadcastIfSmall(df: DataFrame, maxRows: Option[Long] = None): DataFrame = {
+    val size = maxRows match {
+      case Some(n) => BigInt(n) * (8 + df.schema.map(_.dataType.defaultSize).sum)
+      case None    => df.queryExecution.optimizedPlan.stats.sizeInBytes
+    }
+    if (size <= ColumnBridge.broadcastThreshold(df.sparkSession)) broadcast(df) else df
   }
 
   /** Free the executor blocks of the local checkpoints `df` reads — what
     * [[LocalCheckpoint]] staged for it; frames from [[PathStaging]] hold
     * none. Non-blocking; `df` must not be evaluated afterwards. */
   def release(df: DataFrame): Unit =
-    org.apache.spark.sql.graftbridge.ColumnBridge.checkpointRdds(df)
+    ColumnBridge.checkpointRdds(df)
       .foreach(_.unpersist(blocking = false))
 
   /** Durable parquet staged tables under `root` — one numbered directory

@@ -505,24 +505,19 @@ object EventAnalytics {
     * Shape per round: the games list is staged ONCE hash(i)-sorted (the
     * [[graft.x.Graph.pageRank]] pinned-layout discipline), and the
     * strengths frame — one row per ITEM, orders of magnitude below the
-    * games frame — joins both endpoints by BROADCAST whenever the item
-    * count fits `broadcastItemLimit`. Size the limit against the REAL
-    * broadcast-relation footprint, not the raw row bytes: a
-    * BroadcastHashRelation carries row + hash-map overhead (~40-80 bytes
-    * per (id, decimal) entry), and the relation is built and shipped
-    * TWICE per iteration (winner and loser endpoints) — the 300k default
-    * keeps each build ≤ ~25 MB. With the broadcast in place the
+    * games frame — joins both endpoints by BROADCAST whenever the staged
+    * strengths frame fits the session's broadcast threshold
+    * ([[graft.util.Staging.broadcastIfSmall]], read off its exact staged
+    * size with no job; the relation is built and shipped twice per
+    * iteration, once per endpoint). With the broadcast in place the
     * per-opponent term is computed map-side and the denominator sum
     * aggregates IN PLACE on the staged hash(i) layout — zero exchanges
-    * of the games frame per round. Past the limit the joins fall back to
-    * shuffles, the correct plan for two genuinely big sides. */
+    * of the games frame per round. Past the threshold the joins fall
+    * back to shuffles, the correct plan for two genuinely big sides. */
   def bradleyTerry(prefs: DataFrame, winnerCol: String, loserCol: String,
       nCol: String, iters: Int = 3,
-      broadcastItemLimit: Long = 300000L,
       staging: graft.util.Staging = graft.util.Staging.LocalCheckpoint): DataFrame = {
     require(iters >= 1 && iters <= 16, s"iters $iters out of range")
-    require(broadcastItemLimit >= 0,
-      s"broadcastItemLimit must be >= 0, got $broadcastItemLimit")
     val d188 = "decimal(18,8)"
     val p = prefs.select(col(winnerCol).cast("long").as("w"),
       col(loserCol).cast("long").as("l"), col(nCol).cast("long").as("n"))
@@ -540,17 +535,12 @@ object EventAnalytics {
       .withColumn("s", lit(1L).cast(d188))
       .join(wins, Seq("i"), "left")
       .withColumn("wins", coalesce(col("wins"), lit(0L))), "bt-str-0")
-    // one driver scalar decides the per-round join strategy for the run.
-    // The probe limit is clamped to Int range BEFORE the +1 so sentinel
-    // values like Long.MaxValue can't wrap; limits past Int.MaxValue−1
-    // behave as "always broadcast" (a limit() can't count higher anyway)
-    val probeLimit = math.min(broadcastItemLimit, Int.MaxValue.toLong - 1).toInt
-    val bcastItems = str.limit(probeLimit + 1).count() <= broadcastItemLimit
-    def side(df: DataFrame): DataFrame = if (bcastItems) broadcast(df) else df
     for (k <- 1 to iters) {
       val denom = games
-        .join(side(str.select(col("i"), col("s").as("__si"))), Seq("i"))
-        .join(side(str.select(col("i").as("j"), col("s").as("__sj"))), Seq("j"))
+        .join(graft.util.Staging.broadcastIfSmall(
+          str.select(col("i"), col("s").as("__si"))), Seq("i"))
+        .join(graft.util.Staging.broadcastIfSmall(
+          str.select(col("i").as("j"), col("s").as("__sj"))), Seq("j"))
         .withColumn("__t", (col("n").cast("double") /
           (col("__si").cast("double") + col("__sj").cast("double")))
           .cast(d188))

@@ -568,12 +568,9 @@ object Graph {
     * division per output row for the support ratio. */
   def frequentTriples(df: DataFrame, basketCol: String, itemCol: String,
       minSupport: Long = 2, maxBasketSize: Int = 1000,
-      broadcastPairLimit: Long = 1000000L,
       staging: Staging = Staging.LocalCheckpoint): DataFrame = {
     require(minSupport >= 1, s"minSupport must be >= 1, got $minSupport")
     require(maxBasketSize >= 3, s"maxBasketSize must be >= 3, got $maxBasketSize")
-    require(broadcastPairLimit >= 0 && broadcastPairLimit < Int.MaxValue,
-      s"broadcastPairLimit $broadcastPairLimit out of range")
     val m = df.select(col(basketCol).as("b"), col(itemCol).as("i")).distinct()
     // Stage the reused frames: `kept` feeds the pair self-join (both
     // sides), the z-item join, and N; `bp` — the capped basket self-join,
@@ -601,20 +598,14 @@ object Graph {
         Seq("y", "z"), "left_semi"), "ft-cands")
     // minSupport prunes freqPairs (and cands, bounded below it by
     // downward closure) to a sliver of bp — 3.6k pairs vs 1.2M basket
-    // pairs at sf0.1 — yet both semi joins planned as SortMergeJoins
-    // that SORT bp twice (checkpointed frames hide their size from
-    // Catalyst). Broadcast the pruned sides behind the kCore limit-probe
-    // (r15): bp then flows filter→join→filter→count in one unshuffled
-    // span until the triple aggregation; past the limit the semi joins
-    // fall back to shuffles, the correct plan for a weakly-pruned pair
-    // layer. Both probes scan staged frames and short-circuit at
-    // limit+1 rows.
-    val probeLimit = math.min(broadcastPairLimit, Int.MaxValue.toLong - 1).toInt
-    def probed(pruned: DataFrame): DataFrame =
-      if (pruned.limit(probeLimit + 1).count() <= broadcastPairLimit)
-        broadcast(pruned) else pruned
-    val fpSide = probed(freqPairs)
-    val candsSide = probed(cands)
+    // pairs at sf0.1. Broadcast the pruned sides when their staged size
+    // fits the broadcast threshold: bp then flows filter→join→filter→count
+    // in one unshuffled span until the triple aggregation, where two
+    // SortMergeJoins would SORT bp twice; past the threshold the semi
+    // joins fall back to shuffles, the correct plan for a weakly-pruned
+    // pair layer.
+    val fpSide = Staging.broadcastIfSmall(freqPairs)
+    val candsSide = Staging.broadcastIfSmall(cands)
     val total = kept.select(countDistinct(col("b")).cast("long").as("__n"))
     bp.join(fpSide, Seq("x", "y"), "left_semi")
       .join(kept.select(col("b"), col("i").as("z")), "b")
@@ -651,18 +642,18 @@ object Graph {
     *
     * The weak frontier (after the first peel, typically tiny) BROADCASTS
     * into the removed-edge semi-joins and the survivor anti-join whenever
-    * it fits within `broadcastWeakLimit` rows (explicit hints bypass
-    * autoBroadcastJoinThreshold, so the limit IS the byte gate), leaving
-    * the staged edge side entirely unshuffled — per-round shuffle bytes
-    * are O(edges removed) + O(nodes), never O(|E|); a huge first peel
-    * (sparse graph, high k) exceeds the limit and falls back to shuffled
-    * joins, the correct plan for two big sides. The per-round driver
-    * scalar is ONE count+sum aggregate over the staged node-scale deg
-    * frame (never the edge list): the count answers "converged?" and
-    * gates the frontier broadcast, the weak-degree sum bounds the
-    * removed-edge frame and gates ITS broadcast — a removed frame that
-    * might exceed the limit falls back to the shuffled outer join
-    * instead of an unbounded broadcast build.
+    * it fits the session's broadcast threshold
+    * ([[graft.util.Staging.broadcastIfSmall]]), leaving the staged edge
+    * side entirely unshuffled — per-round shuffle bytes are O(edges
+    * removed) + O(nodes), never O(|E|); a huge first peel (sparse graph,
+    * high k) exceeds it and falls back to shuffled joins, the correct
+    * plan for two big sides. The per-round driver scalar is ONE count+sum
+    * aggregate over the staged node-scale deg frame (never the edge
+    * list): the count answers "converged?" and sizes the frontier, the
+    * weak-degree sum bounds the removed-edge frame's rows and sizes ITS
+    * broadcast — a removed frame that might exceed the threshold falls
+    * back to the shuffled outer join instead of an unbounded broadcast
+    * build.
     * The deg frame re-stages per round to cut lineage, the
     * [[pageRank]] loop discipline — node-scale, not edge-scale. Rounds
     * are data-dependent but bounded by `maxIters`.
@@ -671,23 +662,21 @@ object Graph {
     * round count reproduces it exactly (extra unrolled rounds are
     * no-ops). */
   def kCore(edgesIn: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxIters: Int = 50, broadcastWeakLimit: Long = 1000000L,
+      maxIters: Int = 50,
       staging: Staging = Staging.LocalCheckpoint,
       roundObserver: Int => Unit = _ => ()): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    require(broadcastWeakLimit >= 0 && broadcastWeakLimit < Int.MaxValue,
-      s"broadcastWeakLimit $broadcastWeakLimit out of range")
     val e0 = staging.stage(canonicalEdges(edgesIn, srcCol, dstCol), "kcore-edges-0")
     var deg = staging.stage(degrees(e0), "kcore-deg-0")
     var round = 0
     var converged = false
     while (!converged && round < maxIters) {
       val weakAll = deg.filter(col("deg") < k).select("v")
-      // per-round probe: one aggregate over the STAGED node-scale deg frame
-      // (the pre-r15 probe recomputed degrees from the full edge list just
-      // to count the weak set). The weak-degree SUM is a provable upper
-      // bound on this round's removed-edge rows, so it gates the removed
-      // frame's broadcast the same way the count gates the frontier's.
+      // per-round check: one aggregate over the STAGED node-scale deg frame
+      // (the pre-r15 check recomputed degrees from the full edge list just
+      // to count the weak set). The count ends the loop and sizes the weak
+      // frontier; the weak-degree SUM is a provable upper bound on this
+      // round's removed-edge rows, so it sizes the removed frame.
       val probe = deg.filter(col("deg") < k)
         .agg(count(lit(1)), coalesce(sum("deg"), lit(0L))).first()
       val (nWeak, weakDegSum) = (probe.getLong(0), probe.getLong(1))
@@ -695,8 +684,7 @@ object Graph {
       else {
         round += 1
         roundObserver(round)
-        val weak =
-          if (nWeak <= broadcastWeakLimit) broadcast(weakAll) else weakAll
+        val weak = Staging.broadcastIfSmall(weakAll, Some(nWeak))
         // alive edges lost to this round's peel, counted per survivor:
         // e0 rows whose OTHER endpoint is weak (see exactness note above)
         val removedAll = e0.join(weak.select(col("v").as("a")), Seq("a"), "left_semi")
@@ -705,9 +693,7 @@ object Graph {
             e0.join(weak.select(col("v").as("b")), Seq("b"), "left_semi")
               .select(col("a").as("v")))
           .groupBy("v").agg(count(lit(1)).as("__rm"))
-        val removed =
-          if (weakDegSum <= broadcastWeakLimit) broadcast(removedAll)
-          else removedAll
+        val removed = Staging.broadcastIfSmall(removedAll, Some(weakDegSum))
         deg = staging.stage(
           deg.join(weak, Seq("v"), "left_anti")
             .join(removed, Seq("v"), "left")
@@ -846,19 +832,19 @@ object Graph {
     *
     * Per round ONE join: frontier ⋈ staged edges, one distinct, one
     * anti-join against the visited set. The frontier BROADCASTS into the
-    * edge join behind a `limit(broadcastFrontierLimit+1)` probe (r15):
-    * without the hint Catalyst's fixture-scale estimates broadcast-built
-    * the EDGE list each round (and at scale would re-shuffle it into a
-    * sort-merge join) — with it the staged edges stream map-side and a
-    * round's shuffle bytes are O(frontier fan-out), never O(|E|). The
-    * visited set broadcasts into the anti-join under the same limit,
-    * gated for free: |visited| = Σ probed frontier sizes, a running
-    * driver scalar, no extra job (probe counts saturate at limit+1, so
-    * once either gate closes it stays closed — conservative, correct).
-    * Past a limit the joins fall back to shuffles, the right plan for a
-    * frontier/visited set that big. An EMPTY frontier short-circuits the
-    * remaining rounds outright — they would union nothing (output
-    * identical), and at fixture scale those no-op rounds were real wall.
+    * edge join when it fits the session's broadcast threshold
+    * ([[graft.util.Staging.broadcastIfSmall]]; its size is bounded by the
+    * staged visited set it filters): without the hint Catalyst could
+    * broadcast-build the EDGE list each round (and at scale would
+    * re-shuffle it into a sort-merge join) — with it the staged edges
+    * stream map-side and a round's shuffle bytes are O(frontier
+    * fan-out), never O(|E|). The visited set broadcasts into the
+    * anti-join under the same threshold, read off its exact staged
+    * size. Past the threshold the joins fall back to shuffles, the right
+    * plan for a frontier/visited set that big. An EMPTY frontier
+    * short-circuits the remaining rounds outright — they would union
+    * nothing (output identical), and at fixture scale those no-op rounds
+    * were real wall.
     * Synchronous frontiers make `dist` the true
     * BFS layer number: a node is labeled the FIRST round it is reached,
     * and the anti-join keeps later rounds from relabeling it. The
@@ -869,12 +855,9 @@ object Graph {
     * no-ops). */
   def bfsHops(edgesIn: DataFrame, srcCol: String, dstCol: String,
       seeds: Seq[Long], maxHops: Int,
-      broadcastFrontierLimit: Long = 1000000L,
       staging: Staging = Staging.LocalCheckpoint): DataFrame = {
     require(maxHops >= 1, s"bfsHops needs maxHops >= 1, got $maxHops")
     require(seeds.nonEmpty, "bfsHops needs at least one seed")
-    require(broadcastFrontierLimit >= 0 && broadcastFrontierLimit < Int.MaxValue,
-      s"broadcastFrontierLimit $broadcastFrontierLimit out of range")
     val directed = edgesIn.filter(col(srcCol) =!= col(dstCol))
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
     val edges = staging.stage(
@@ -883,27 +866,15 @@ object Graph {
         .sortWithinPartitions("src"), "bfs-edges")
     val spark = edgesIn.sparkSession
     import spark.implicits._
-    val probeLimit = broadcastFrontierLimit.toInt
     var frontier = seeds.toDF("node")
     var visited = staging.stage(frontier.withColumn("dist", lit(0L)), "bfs-v0")
-    var visitedCount = 0L // accumulates the probed frontier sizes
     var h = 1
     var exhausted = false
     while (h <= maxHops && !exhausted) {
-      // bounded probe: gates this round's frontier broadcast AND (summed)
-      // the visited-set broadcast; stops scanning at limit+1 rows
-      val nF = frontier.limit(probeLimit + 1).count()
-      visitedCount += nF
-      if (nF == 0L) exhausted = true
+      if (frontier.isEmpty) exhausted = true
       else {
-        val fSide =
-          if (nF <= broadcastFrontierLimit)
-            broadcast(frontier.withColumnRenamed("node", "src"))
-          else frontier.withColumnRenamed("node", "src")
-        val vSide =
-          if (visitedCount <= broadcastFrontierLimit)
-            broadcast(visited.select("node"))
-          else visited.select("node")
+        val fSide = Staging.broadcastIfSmall(frontier.withColumnRenamed("node", "src"))
+        val vSide = Staging.broadcastIfSmall(visited.select("node"))
         val next = edges
           .join(fSide, Seq("src"))
           .select(col("dst").as("node")).distinct()
@@ -1340,34 +1311,25 @@ object Graph {
   def modularity(edgesIn: DataFrame, srcCol: String, dstCol: String,
       labels: DataFrame, nodeCol: String = "node",
       labelCol: String = "label",
-      broadcastLabelLimit: Long = 1000000L,
       staging: Staging = Staging.LocalCheckpoint): DataFrame = {
     val e = staging.stage(canonicalEdges(edgesIn, srcCol, dstCol),
       "modularity-edges")
     val lab = labels.select(col(nodeCol).cast("long").as("__n"),
       col(labelCol).cast("long").as("__l"))
     // one-row-per-node labels vs the edge frame: broadcast the label side
-    // whenever it fits (the kCore broadcastWeakLimit discipline — the 1M
-    // default is ~16 MB of (node, label) pairs; explicit hints bypass
-    // autoBroadcastJoinThreshold, so the limit IS the byte gate), leaving
-    // the edge side entirely unshuffled. Without the hint the intra-edge
-    // join planned as a SortMergeJoin because the label frame sits behind
-    // a checkpoint whose stats Catalyst cannot see (x202 before-plan:
-    // Exchange+Sort of the edge side on (label, b)). Past the limit the
-    // joins fall back to shuffles — the correct plan for two big sides.
-    // The limit(n+1).count() probe short-circuits instead of counting all
-    // labels (same probe as kCore/bradleyTerry).
-    val probeLimit = math.min(broadcastLabelLimit, Int.MaxValue.toLong - 1).toInt
-    val bcastLab = lab.limit(probeLimit + 1).count() <= broadcastLabelLimit
-    def side(df: DataFrame): DataFrame = if (bcastLab) broadcast(df) else df
+    // whenever it fits the session's broadcast threshold, leaving the edge
+    // side entirely unshuffled (x202 before-plan without it: Exchange+Sort
+    // of the edge side on (label, b)). Past the threshold the joins fall
+    // back to shuffles — the correct plan for two big sides. Labels from
+    // a staged frame ([[labelPropagation]]) carry their exact size.
     val mRow = e.agg(count(lit(1)).as("__m"))
     val deg = degrees(e)
-    val dc = deg.join(side(lab), deg("v") === lab("__n"))
+    val dc = deg.join(Staging.broadcastIfSmall(lab), deg("v") === lab("__n"))
       .groupBy(col("__l").as("label"))
       .agg(count(lit(1)).as("n_nodes"), sum("deg").as("d_tot"))
     val lin = e
-      .join(side(lab.select(col("__n").as("a"), col("__l").as("__la"))), "a")
-      .join(side(lab.select(col("__n").as("b"), col("__l").as("__lb"))), "b")
+      .join(Staging.broadcastIfSmall(lab.select(col("__n").as("a"), col("__l").as("__la"))), "a")
+      .join(Staging.broadcastIfSmall(lab.select(col("__n").as("b"), col("__l").as("__lb"))), "b")
       .filter(col("__la") === col("__lb"))
       .groupBy(col("__la").as("label"))
       .agg(count(lit(1)).as("l_in"))

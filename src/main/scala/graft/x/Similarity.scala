@@ -1325,25 +1325,23 @@ object Similarity {
     import spark.implicits._
     def dist(a: Column, b: Column): Column =
       graft.functions.SqDistInt.dist(a, b) // fused exact loop, HOF-identical
-    val base = vecs.select(col(idCol).cast("long").as("id"),
-      col(codesCol).as("c")).localCheckpoint(true)
+    val base = graft.util.Staging.LocalCheckpoint.stage(vecs.select(
+      col(idCol).cast("long").as("id"), col(codesCol).as("c")), "ffs-base")
     val first = base.orderBy("id").limit(1).collect()(0)
     var seeds = Seq((1, first.getLong(0), 0L))
     var cur = base.filter(col("id") === first.getLong(0))
       .select(col("c").as("__sc"))
-    var mind = base.crossJoin(broadcast(cur))
-      .select(col("id"), col("c"), dist(col("c"), col("__sc")).as("__d"))
-      .localCheckpoint(true)
+    var mind = graft.util.Staging.LocalCheckpoint.stage(base.crossJoin(broadcast(cur))
+      .select(col("id"), col("c"), dist(col("c"), col("__sc")).as("__d")), "ffs-mind-1")
     for (r <- 2 to k) {
       // (max dist, min id) argmax as one struct-max reduce
       val next = mind.agg(max(struct(col("__d").as("d"), (-col("id")).as("ni")))
         .as("m")).select((-col("m.ni")).as("id"), col("m.d")).collect()(0)
       seeds = seeds :+ ((r, next.getLong(0), next.getLong(1)))
       cur = base.filter(col("id") === next.getLong(0)).select(col("c").as("__sc"))
-      mind = mind.crossJoin(broadcast(cur))
+      mind = graft.util.Staging.LocalCheckpoint.stage(mind.crossJoin(broadcast(cur))
         .select(col("id"), col("c"),
-          least(col("__d"), dist(col("c"), col("__sc"))).as("__d"))
-        .localCheckpoint(true)
+          least(col("__d"), dist(col("c"), col("__sc"))).as("__d")), s"ffs-mind-$r")
     }
     seeds.toDF("seed_rank", "vec_id", "dist_num")
   }
@@ -1439,8 +1437,8 @@ object Similarity {
     import spark.implicits._
     def dist(a: Column, b: Column): Column =
       graft.functions.SqDistInt.dist(a, b) // fused exact loop, HOF-identical
-    val base = vecs.select(col(idCol).cast("long").as("id"),
-      col(codesCol).as("c")).localCheckpoint(true)
+    val base = graft.util.Staging.LocalCheckpoint.stage(vecs.select(
+      col(idCol).cast("long").as("id"), col(codesCol).as("c")), "kmeans-base")
     val seedIds = farthestFirstSeeds(base, "id", "c", k)
       .select(col("seed_rank"), col("vec_id")).collect()
       .map(r => (r.getInt(0), r.getLong(1)))

@@ -282,26 +282,57 @@ class GraphSpec extends AnyFunSuite {
     assert(Graph.kCore(raw.toDF("src", "dst"), "src", "dst", k = 10).isEmpty)
   }
 
-  test("kCore/bfsHops over-limit fallback paths match the broadcast paths") {
+  test("broadcast-gated operators: shuffled joins at threshold -1, same results") {
     import spark.implicits._
-    // broadcastWeakLimit/broadcastFrontierLimit = 0 forces every round
-    // onto the shuffled-join fallback (the 100 TB huge-frontier branch);
-    // the fixpoint and layer numbers must be identical to the broadcast
-    // plans the other specs pin
-    val raw = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L))
-    val edges = raw.toDF("src", "dst")
-    val bc = Graph.kCore(edges, "src", "dst", k = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val sh = Graph.kCore(edges, "src", "dst", k = 2, broadcastWeakLimit = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(bc == sh, s"kCore fallback diverged: broadcast=$bc shuffled=$sh")
-    val bfsBc = Graph.bfsHops(edges, "src", "dst", Seq(1L), maxHops = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val bfsSh = Graph.bfsHops(edges, "src", "dst", Seq(1L), maxHops = 3,
-        broadcastFrontierLimit = 0L)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(bfsBc == bfsSh,
-      s"bfsHops fallback diverged: broadcast=$bfsBc shuffled=$bfsSh")
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // spark.sql.autoBroadcastJoinThreshold = -1 closes every
+    // Staging.broadcastIfSmall gate, forcing the five operators onto their
+    // shuffled-join fallbacks (the 100 TB big-side branch): no gated join
+    // may plan as a BroadcastHashJoin, and every result must equal the
+    // default-threshold run, whose gates broadcast
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
+    val baskets = Seq((10L, 1L), (10L, 2L), (10L, 3L), (11L, 1L), (11L, 2L),
+      (11L, 3L), (12L, 1L), (12L, 2L), (12L, 3L), (12L, 4L)).toDF("b", "i")
+    val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L)).toDF("node", "label")
+    val prefs = Seq((1L, 2L, 2L), (2L, 1L, 1L), (1L, 3L, 1L), (3L, 2L, 1L)).toDF("w", "l", "n")
+    def runAll(): Seq[(String, Seq[String], Seq[SparkPlan])] = {
+      def run(name: String)(f: Staging => DataFrame) = {
+        val cap = new PlanCapture
+        val out = f(cap)
+        (name, out.collect().map(_.toString).sorted.toSeq,
+          cap.plans.values.toSeq :+ out.queryExecution.executedPlan)
+      }
+      Seq(
+        run("frequentTriples")(st => Graph.frequentTriples(baskets, "b", "i",
+          minSupport = 2, staging = st)),
+        run("kCore")(st => Graph.kCore(edges, "src", "dst", k = 2, staging = st)),
+        run("bfsHops")(st => Graph.bfsHops(edges, "src", "dst", Seq(1L),
+          maxHops = 3, staging = st)),
+        run("modularity")(st => Graph.modularity(edges, "src", "dst",
+          Staging.LocalCheckpoint.stage(labels, "labels"), staging = st)),
+        run("bradleyTerry")(st => graft.x.EventAnalytics.bradleyTerry(prefs,
+          "w", "l", "n", iters = 3, staging = st)))
+    }
+    def bhj(plans: Seq[SparkPlan]) =
+      plans.map(_.collect { case j: BroadcastHashJoinExec => j }.size).sum
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val bc = runAll()
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val sh = runAll()
+      bc.zip(sh).foreach { case ((name, bcRows, bcPlans), (_, shRows, shPlans)) =>
+        assert(bcRows.nonEmpty, s"$name: empty result")
+        assert(bcRows == shRows, s"$name fallback diverged: broadcast=$bcRows shuffled=$shRows")
+        assert(bhj(bcPlans) > 0, s"$name: no broadcast join at the default threshold")
+        assert(bhj(shPlans) == 0, s"$name planned a BroadcastHashJoin with the " +
+          s"threshold off:\n${shPlans.mkString("\n")}")
+      }
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 
   test("degreeAssortativity: exact closed form on a hand-checked graph") {

@@ -522,4 +522,64 @@ class GuardsSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.ansi.enabled", ansi)
     }
   }
+
+  test("staged frames carry exact statistics: one job, true row count, no compounding") {
+    import graft.util.Staging
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { started.incrementAndGet(); () }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.add(e.jobId); () }
+    }
+    // every event posted so far has reached the listener once a fence
+    // job's end has
+    def drain(): Unit = {
+      val f = spark.sparkContext.parallelize(Seq(1), 1).countAsync()
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration(60, "s"))
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!f.jobIds.forall(ended.contains) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(f.jobIds.forall(ended.contains), "listener bus did not drain")
+    }
+    def stats(df: org.apache.spark.sql.DataFrame) = df.queryExecution.optimizedPlan.stats
+
+    val df = spark.range(0, 10000, 1, 4).filter(col("id") % 3 =!= 0)
+      .select(col("id"), (col("id") * 2).as("x"))
+    val truth = df.count()
+    spark.sparkContext.addSparkListener(listener)
+    val staged = try {
+      drain()
+      val before = started.get
+      val s = Staging.LocalCheckpoint.stage(df, "exact")
+      drain()
+      // the stage job, then the fence job
+      assert(started.get - before == 2, s"stage ran ${started.get - before - 1} jobs, not 1")
+      s
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(stats(staged).rowCount.contains(BigInt(truth)))
+    // two non-null BIGINTs: an 8-byte null bitmap and two 8-byte words
+    assert(stats(staged).sizeInBytes == BigInt(truth * 24))
+    assert(staged.count() == truth)
+
+    // BFS shape: each round joins the edges to the previous stage and
+    // anti-joins it, so an estimate carried over from the origin plan
+    // multiplies by the edge size every round
+    val edges = Staging.LocalCheckpoint.stage(spark.range(0, 200)
+      .select(col("id").as("src"), ((col("id") * 7 + 1) % 200).as("dst")), "edges")
+    var visited = Staging.LocalCheckpoint.stage(
+      spark.range(0, 1).select(col("id").as("node"), lit(0L).as("dist")), "v0")
+    for (r <- 1 to 30) {
+      val next = edges
+        .join(visited.filter(col("dist") === r - 1).select(col("node").as("src")), "src")
+        .select(col("dst").as("node")).distinct()
+        .join(visited.select("node"), Seq("node"), "left_anti")
+        .withColumn("dist", lit(r.toLong))
+      visited = Staging.LocalCheckpoint.stage(visited.unionByName(next), s"v$r")
+      val bits = stats(visited).sizeInBytes.bitLength
+      assert(bits <= 64, s"round $r: staged sizeInBytes has $bits bits")
+      assert(stats(visited).rowCount.contains(BigInt(visited.count())))
+    }
+    Staging.release(edges)
+    Staging.release(visited)
+  }
 }

@@ -80,6 +80,28 @@ class OrchestratorSpec extends AnyFunSuite {
     *  - t_a, t_b, t_c: one key, tied on ingest_seq — one survives.
     * Sequentially routed: 5 null-key rows, then 4 duplicates, 11 good. */
   private def validatedCsvJob(dir: String, threshold: String, sinkLoad: String = "truncateInsert") = {
+    writeCsvDrop(dir)
+    JobConfig.parse(
+      s"""{
+         |"jobName": "validated_drop",
+         |"thresholdLimit": "$threshold",
+         |"inputs": [${csvDropInput(dir)}],
+         |"validations": [
+         |  {"type": "nullValueCheck", "dataFrameName": "raw", "primaryKeys": ["part_key"]},
+         |  {"type": "duplicateRecordCheck", "dataFrameName": "raw",
+         |   "primaryKeys": ["order_key", "line_no"], "orderByCols": ["ingest_seq"]}],
+         |"transformations": [{"functionName": "keep", "outputDFName": "kept",
+         |  "sqlQuery": "SELECT order_key, line_no, part_key, ingest_seq, payload FROM raw"}],
+         |"sinks": [{"dataFrameName": "kept", "loadType": "$sinkLoad", "format": "parquet",
+         |  "path": "$dir/kept", "reconciliation": true}],
+         |"errorSink": {"dataFrameName": "errors", "format": "parquet", "savemode": "append",
+         |  "path": "$dir/errors"}
+         |}""".stripMargin)
+  }
+
+  /** The 20-row day-drop [[validatedCsvJob]] describes, 13 distinct
+    * order keys, under `dir`/drop with its column mapping. */
+  private def writeCsvDrop(dir: String): Unit = {
     val rows = Seq(
       "1,1,10,1,c1", "1,2,11,1,c2", "2,1,12,1,c3", "3,1,13,1,c4",
       "4,1,14,1,c5", "5,1,15,1,c6", "6,1,16,1,c7", "7,1,17,1,c8",
@@ -97,24 +119,12 @@ class OrchestratorSpec extends AnyFunSuite {
         | {"sourceColumn": "PART_KEY", "targetColumn": "part_key", "dataType": "bigint"},
         | {"sourceColumn": "SEQ", "targetColumn": "ingest_seq", "dataType": "bigint"},
         | {"sourceColumn": "PAYLOAD", "targetColumn": "payload", "dataType": "string"}]""".stripMargin)
-    JobConfig.parse(
-      s"""{
-         |"jobName": "validated_drop",
-         |"thresholdLimit": "$threshold",
-         |"inputs": [{"dataFrameName": "raw", "format": "csv", "path": "$dir/drop", "header": true,
-         |  "options": {"inferSchema": "false"}, "metadataPath": "$dir/mapping.json"}],
-         |"validations": [
-         |  {"type": "nullValueCheck", "dataFrameName": "raw", "primaryKeys": ["part_key"]},
-         |  {"type": "duplicateRecordCheck", "dataFrameName": "raw",
-         |   "primaryKeys": ["order_key", "line_no"], "orderByCols": ["ingest_seq"]}],
-         |"transformations": [{"functionName": "keep", "outputDFName": "kept",
-         |  "sqlQuery": "SELECT order_key, line_no, part_key, ingest_seq, payload FROM raw"}],
-         |"sinks": [{"dataFrameName": "kept", "loadType": "$sinkLoad", "format": "parquet",
-         |  "path": "$dir/kept", "reconciliation": true}],
-         |"errorSink": {"dataFrameName": "errors", "format": "parquet", "savemode": "append",
-         |  "path": "$dir/errors"}
-         |}""".stripMargin)
+    ()
   }
+
+  private def csvDropInput(dir: String) =
+    s"""{"dataFrameName": "raw", "format": "csv", "path": "$dir/drop", "header": true,
+       |  "options": {"inferSchema": "false"}, "metadataPath": "$dir/mapping.json"}""".stripMargin
 
   test("validated CSV step: one staged pass routes as the sequential rules, " +
       "reads the CSV once, and the gate trips at the same share") {
@@ -169,6 +179,37 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(held.nonEmpty)
     assert(out.count() == 11)
     held.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
+  }
+
+  test("count-validated transformation: staged once, so its input is read " +
+      "once and the check takes the staged row count") {
+    // no validations: only the transformation's own staging can keep the
+    // count and the sink write from each evaluating the aggregate
+    def job(dir: String, minRows: Int) = {
+      writeCsvDrop(dir)
+      JobConfig.parse(
+        s"""{
+           |"jobName": "counted_drop",
+           |"inputs": [${csvDropInput(dir)}],
+           |"transformations": [{"functionName": "per_order", "outputDFName": "per_order",
+           |  "sqlQuery": "SELECT order_key, COUNT(*) AS n, MAX(ingest_seq) AS top FROM raw GROUP BY order_key",
+           |  "countValidation": "$minRows"}],
+           |"sinks": [{"dataFrameName": "per_order", "loadType": "truncateInsert", "format": "parquet",
+           |  "path": "$dir/per_order", "reconciliation": true}]
+           |}""".stripMargin)
+    }
+    val dir = tmpDir()
+    val before = persisted()
+    val probe = probing(new PipelineRunner(spark).run(Seq(PipelineStep("counted", job(dir, 13)))))
+    assert(probe.csvScanRows.get == 20,
+      s"CSV scans output ${probe.csvScanRows.get} rows: the 20-row input was read more than once")
+    val written = spark.read.parquet(s"$dir/per_order")
+    assert(written.count() == 13 && written.agg(sum("n")).head().getLong(0) == 20L)
+    assert((persisted() -- before).isEmpty, "the staged output outlived its step")
+
+    val e = intercept[IllegalStateException](new Orchestrator(spark).run(job(tmpDir(), 14)))
+    assert(e.getMessage.contains("13 rows < expected 14"), e.getMessage)
+    assert((persisted() -- before).isEmpty, "a failed run left its staged output behind")
   }
 
   test("single job: inputs → validations → SQL chain → parquet sink → error sink") {

@@ -44,9 +44,8 @@ class ValidationsSpec extends AnyFunSuite {
   }
 
   test("countValidation enforces a minimum row count") {
-    val df = spark.range(5).toDF("n")
-    assert(Validations.countValidation(df, 5) == 5L)
-    intercept[IllegalStateException] { Validations.countValidation(df, 6) }
+    assert(Validations.countValidation(5L, 5) == 5L)
+    intercept[IllegalStateException] { Validations.countValidation(5L, 6) }
   }
 
   test("refIntegrityCheck routes orphan FKs, passes NULL FKs through") {
