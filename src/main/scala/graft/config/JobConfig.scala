@@ -123,7 +123,14 @@ final case class SinkSpec(
     // jdbc sinks
     jdbcUrl: Option[String] = None,
     tableName: Option[String] = None
-)
+) {
+  // options of the removed raw-layout SCD2 store and its inner retry loop:
+  // a silently ignored key is the config bug class rejected everywhere else
+  for (k <- Seq("scdVersioned", "scdStagingPath", "scdConflictRetries"))
+    require(!options.contains(k), s"sink $dataFrameName: option '$k' was removed — " +
+      "partitioned SCD2 always commits through the versioned store, and " +
+      "PipelineRunner retries a step that loses a write-write conflict")
+}
 
 object JobConfig {
   private val mapper = new ObjectMapper()

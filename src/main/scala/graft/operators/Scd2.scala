@@ -25,10 +25,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: one shuffle on the business key for the join; change
   * detection is a single xxhash64 over tracked columns (codegen'd, no UDF).
-  * At 100 TB the dimension should be written partitioned by a stable bucket
-  * of the business key with
-  * spark.sql.sources.partitionOverwriteMode=dynamic so a batch rewrites only
-  * touched partitions (SURVEY.md §4); `bucketCol` builds that partition key.
+  * At 100 TB the dimension is written partitioned by a stable bucket of the
+  * business key so a batch rewrites only touched partitions (SURVEY.md §4,
+  * `SinkWriter.scd2InsertPartitioned`); `bucketCol` builds that key.
   */
 object Scd2 {
 
@@ -116,7 +115,7 @@ object Scd2 {
   }
 
   /** Stable partition bucket of the business key for partition-scoped
-    * rewrites at scale (dynamic partition overwrite, SURVEY.md §4). */
+    * rewrites at scale (SURVEY.md §4): an int in [0, nBuckets). */
   def bucketCol(keys: Seq[String], nBuckets: Int): Column =
-    pmod(xxhash64(keys.map(col): _*), lit(nBuckets)).as("scd_bucket")
+    pmod(xxhash64(keys.map(col): _*), lit(nBuckets)).cast("int").as("scd_bucket")
 }

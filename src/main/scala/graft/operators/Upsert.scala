@@ -77,8 +77,7 @@ object Upsert {
       if (!DeltaLogReader.isDeltaTable(path)) batch
       else replaceByKey(DeltaLogReader.read(spark, path), batch, keyCols)
     // the merged frame re-reads the files the commit is about to
-    // tombstone — materialize it BEFORE publishing (same self-overwrite
-    // hazard the SCD2 bucketed rewrite stages against; pass a durable
+    // tombstone — materialize it BEFORE publishing (pass a durable
     // PathStaging on a cluster so executor loss mid-commit can't lose it)
     val staged = staging.stage(next, "delta_upsert")
     DeltaLogWriter.write(staged, path, "overwrite")

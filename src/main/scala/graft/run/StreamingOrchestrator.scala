@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.config._
+import graft.operators.Validations
 import graft.sinks.SinkWriter
 import graft.streaming.StreamingJobs
 
@@ -66,11 +67,9 @@ class StreamingOrchestrator(spark: SparkSession) {
     var errorStreams = Seq.empty[DataFrame]
     cfg.validations.foreach {
       case NullValueCheck(name, pks) =>
-        val df = spark.table(name)
-        val anyNull = pks.map(col(_).isNull).reduce(_ || _)
-        errorStreams :+= df.filter(anyNull)
-          .withColumn("error_reason", org.apache.spark.sql.functions.lit("null_primary_key"))
-        df.filter(!anyNull).createOrReplaceTempView(name)
+        val routed = Validations.nullKeyCheck(spark.table(name), pks)
+        errorStreams :+= routed.bad
+        routed.good.createOrReplaceTempView(name)
       case DuplicateRecordCheck(name, pks, _) =>
         val df = spark.table(name)
         val deduped =

@@ -15,49 +15,23 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * section is an array, spark.json:69-96, W10), and the error-record sink
   * (spark.json:97-101, W8).
   *
-  * Scale notes: fan-out persists the source frame once and reuses it per
-  * sink; singleFile is an explicit opt-in (coalesce(1) is a deliberate
-  * bottleneck the reference exposes for small handoff files, not a default);
+  * Scale notes: fan-out (`Orchestrator`'s sink phase) persists the source
+  * frame once and reuses it per sink; singleFile is an explicit opt-in
+  * (coalesce(1) is a deliberate bottleneck the reference exposes for small
+  * handoff files, not a default);
   * everything else writes with full parallelism and inherits
   * maxRecordsPerFile / partitionBy sizing from conf (spark.json:4-5).
   */
 object SinkWriter {
 
-  def write(spark: SparkSession, df: DataFrame, sink: SinkSpec): Unit =
-    writeLaid(spark, applyZOrder(df, sink), sink)
-
-  /** Streaming twin of [[write]] (the foreachBatch body): threads the
-    * micro-batch id AND the stream's identity so an at-least-once REPLAY
-    * of an scdType2Insert micro-batch against a versioned dimension is
-    * detected from the dimension's own commit metadata and skipped whole
-    * — no spurious version churn, no re-merge work (the merge content was
-    * already idempotent; the version log should be too).
-    *
-    * `streamIdentity` scopes the replay watermark (VERDICT r14 #2):
-    * micro-batch ids are monotone only WITHIN one checkpoint lineage —
-    * a restart with a fresh checkpoint restarts them at 0, and a second
-    * query writing the same dimension numbers independently. An
-    * UNqualified watermark would then silently skip batches 0…k of NEW
-    * data. Derive the identity with [[streamIdentity]] from the
-    * checkpoint location (the Delta `txnAppId` pattern); an identity the
-    * dimension has never seen means watermark = −1, i.e. merge
-    * everything. Every other load type dispatches exactly like
-    * [[write]]. */
-  def writeStreamBatch(spark: SparkSession, df: DataFrame, sink: SinkSpec,
-      batchId: Long, streamIdentity: String): Unit = {
-    val laid = applyZOrder(df, sink)
-    val versionedScd2 = sink.loadType.equalsIgnoreCase("scdType2Insert") &&
-      sink.options.contains("scdBuckets") && useVersioned(sink)
-    if (versionedScd2) {
-      scd2InsertPartitioned(spark, laid, sink,
-        sink.options("scdBuckets").toInt, batchId = Some(batchId),
-        streamId = Some(streamIdentity))
-      // keep parity with writeLaid's W9 tail: the remote push must not
-      // silently drop just because the load dispatched on this branch
-      for (rd <- sink.options.get("remoteDirPath"); p <- sink.path)
-        graft.sources.SourceReader.remoteFs.upload(p, rd)
-    } else writeLaid(spark, laid, sink)
-  }
+  /** Write `df` through the sink's load strategy. `streamBatch` is the
+    * (micro-batch id, [[streamIdentity]]) pair of a foreachBatch body: an
+    * scdType2Insert into a bucketed dimension carries it into
+    * [[scd2InsertPartitioned]]'s replay guard, every other load ignores
+    * it. Callers outside a stream pass neither value. */
+  def write(spark: SparkSession, df: DataFrame, sink: SinkSpec,
+      streamBatch: Option[(Long, String)] = None): Unit =
+    writeLaid(spark, applyZOrder(df, sink), sink, streamBatch)
 
   /** Stable identity of one streaming write lineage: the hash of its
     * checkpoint location STRING. Same checkpoint dir = same identity =
@@ -89,11 +63,12 @@ object SinkWriter {
         .drop("__graft_z")
     }
 
-  private def writeLaid(spark: SparkSession, df: DataFrame, sink: SinkSpec): Unit = {
+  private def writeLaid(spark: SparkSession, df: DataFrame, sink: SinkSpec,
+      streamBatch: Option[(Long, String)]): Unit = {
     sink.loadType.toLowerCase match {
       case "simpleinsert"   => writeFile(df, sink, SaveMode.valueOf(camel(sink.savemode)))
       case "truncateinsert" => writeFile(df, sink, SaveMode.Overwrite)
-      case "scdtype2insert" => scd2Insert(spark, df, sink)
+      case "scdtype2insert" => scd2Insert(spark, df, sink, streamBatch)
       // maintained aggregate table: fold this batch into the versioned
       // state at `path` (keys/sums from options aggKeys/aggSumCols) —
       // the load strategy form of graft.operators.IncrementalAgg, reused
@@ -226,9 +201,12 @@ object SinkWriter {
   /** W3: read current dimension (if any) from the sink path, merge the
     * staged frame via [[Scd2.merge]], rewrite. First batch initializes.
     * With option `scdBuckets=N`, dispatches to the partition-scoped variant. */
-  def scd2Insert(spark: SparkSession, staged: DataFrame, sink: SinkSpec): Unit = {
+  def scd2Insert(spark: SparkSession, staged: DataFrame, sink: SinkSpec,
+      streamBatch: Option[(Long, String)] = None): Unit = {
     sink.options.get("scdBuckets") match {
-      case Some(n) => scd2InsertPartitioned(spark, staged, sink, n.toInt); return
+      case Some(n) =>
+        scd2InsertPartitioned(spark, staged, sink, n.toInt, streamBatch = streamBatch)
+        return
       case None    =>
     }
     val path = sink.path.getOrElse(sys.error("scd2 sink needs path"))
@@ -272,185 +250,79 @@ object SinkWriter {
     }
   }
 
-  /** W3 at 100 TB (SURVEY.md §4/§7.4): the dimension is written partitioned
-    * by a stable bucket of the business key (`scd_bucket = pmod(xxhash64(keys), N)`).
-    * A batch then (1) computes the buckets its staged keys land in, (2)
-    * reads ONLY those dimension partitions (partition pruning), (3) merges,
-    * and (4) rewrites only the touched partitions via dynamic partition
-    * overwrite. Untouched partitions — at real scale, the overwhelming
-    * majority — are never read or rewritten.
+  /** W3 at 100 TB (SURVEY.md §4/§7.4): the dimension is a
+    * [[graft.sources.VersionedParquet]] table written partitioned by a
+    * stable bucket of the business key ([[Scd2.bucketCol]]). A batch
+    * (1) computes the buckets its staged keys land in, (2) reads ONLY
+    * those buckets at the newest version, (3) merges, and (4) commits the
+    * rewritten buckets with ONE manifest rename, carrying every untouched
+    * bucket's files forward — at real scale the overwhelming majority are
+    * never read or rewritten. A reader (or a crash) never observes some
+    * buckets at the new version and others at the old; a crash before
+    * the rename leaves only an unreferenced data dir. The write targets a
+    * fresh immutable data dir, never the files its lineage reads, so the
+    * merge needs no materialization. Read the dimension with
+    * `VersionedParquet.read(path)`, not a raw directory scan. A target
+    * that is a non-empty directory without `_graft_log` (a raw-layout
+    * table from before the versioned store) is refused: initializing a
+    * versioned table over it would silently hide its rows from every read.
     *
-    * The merged frame MUST be materialized before the overwrite (its
-    * lineage reads the same files the write replaces), and the
-    * materialization is load-bearing: once the overwrite starts renaming
-    * source partitions aside, losing the materialized copy loses the
-    * merge. HOW it is materialized goes through the [[graft.util.Staging]]
-    * seam — local checkpoint by default (single-node semantics), or a
-    * durable staged table when the sink carries `scdStagingPath` (cluster
-    * semantics: executor loss mid-overwrite cannot drop pinned blocks the
-    * rewrite still needs; the staged merge survives for replay). The
-    * staged scratch is cleaned up only AFTER the overwrite commits.
+    * Concurrency: the merge passes the version it READ to
+    * `overwritePartitions` as the optimistic base. A concurrent merge that
+    * committed an overlapping bucket in between makes this commit abort
+    * with the typed `VersionedParquet.ConflictException`, publishing
+    * nothing; merges over disjoint buckets interleave freely. Nothing is
+    * retried here: `PipelineRunner` retries the step, whose re-run merges
+    * at the advanced version, and in a stream the failed micro-batch is
+    * replayed from the checkpoint.
     *
-    * Since r14 the VERSIONED store is the default for partitioned SCD2:
-    * the dimension is fronted by a [[graft.sources.VersionedParquet]]
-    * manifest, so the touched partitions commit in ONE atomic manifest
-    * rename (all-old or all-new, never mixed — asserted by
-    * Scd2PartitionedSpec's crash injection), a crash leaves only an
-    * unreferenced data dir, no merge materialization is needed at all
-    * (a versioned write never overwrites the files its own lineage
-    * reads), and concurrent merges are conflict-checked at commit
-    * (disjoint buckets interleave; overlapping buckets → one winner,
-    * one loud abort). Versioned dimensions are READ via
-    * `VersionedParquet.read(path)`, not a raw directory scan.
-    *
-    * `scdVersioned=false` keeps the legacy dynamic-partition-overwrite
-    * layout, for consumers that must scan the dimension as a raw hive
-    * directory. Its crash contract is weaker: the overwrite commits per
-    * partition (delete-then-rename inside Spark's committer), so a
-    * driver crash mid-commit can leave SOME touched partitions at the
-    * new version and others missing; recovery is a re-run from the
-    * durable `scdStagingPath` scratch (the merge survives, and SCD2
-    * re-merge is idempotent). Auto-detection keeps existing tables on
-    * the layout they were created with — see [[useVersioned]]. */
-  def scd2InsertPartitioned(spark: SparkSession, staged: DataFrame, sink: SinkSpec,
-      nBuckets: Int, midCommitHook: () => Unit = () => (),
-      batchId: Option[Long] = None, streamId: Option[String] = None): Unit = {
-    if (useVersioned(sink)) {
-      scd2InsertPartitionedVersioned(spark, staged, sink, nBuckets,
-        midCommitHook, batchId, streamId)
-      return
-    }
-    val path = sink.path.getOrElse(sys.error("scd2 sink needs path"))
-    val batchTs = java.sql.Timestamp.from(java.time.Instant.now())
-    val keys = sink.scdKeys
-    val bucket = pmod(xxhash64(keys.map(col): _*), lit(nBuckets)).cast("int")
-    val stagedB = staged.withColumn("scd_bucket", bucket)
-    val exists = graft.util.Fs.nonEmptyDir(Paths.get(path))
-    val pathStaging = sink.options.get("scdStagingPath")
-      .map(new graft.util.Staging.PathStaging(_))
-    val staging: graft.util.Staging =
-      pathStaging.getOrElse(graft.util.Staging.LocalCheckpoint)
-    val prevMode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      // route each bucket's rows into one task before the partitioned
-      // write: without it every task holds rows of every touched bucket
-      // and each merge emits O(tasks × buckets) files (at cluster scale,
-      // millions of small files per merge — the same defect the
-      // versioned path's stagePartitioned fix measured at 89 s → 3 s)
-      if (!exists) {
-        Scd2.initialize(stagedB, batchTs)
-          .repartition(col("scd_bucket"))
-          .write.mode(SaveMode.Overwrite).partitionBy("scd_bucket")
-          .format(sink.format).save(path)
-      } else {
-        val touched = stagedB.select("scd_bucket").distinct()
-          .collect().map(_.getInt(0)).toSeq
-        val dimTouched = spark.read.format(sink.format).options(sink.options).load(path)
-          .filter(col("scd_bucket").isin(touched: _*))
-        val merged = Scd2.merge(dimTouched, stagedB, keys,
-          sink.scdTrackedCols, batchTs)
-        staging.stage(merged, "scd2-merged")
-          .repartition(col("scd_bucket"))
-          .write.mode(SaveMode.Overwrite).partitionBy("scd_bucket")
-          .format(sink.format).save(path)
-      }
-      pathStaging.foreach(_.cleanup()) // only after the overwrite commits
-    } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
-  }
-
-  /** Which store layout a partitioned SCD2 sink uses. Explicit option
-    * wins (`scdVersioned=true|false`, anything else is a loud config
-    * error — the registry's typo rule); otherwise AUTO-DETECT so the
-    * r14 default flip can't corrupt an existing deployment: a table
-    * carrying a `_graft_log` is versioned, a non-empty raw directory
-    * stays on the legacy dynamic-overwrite layout it was created with,
-    * and a FRESH table gets the versioned store (strictly safer:
-    * one-rename atomic commit, probe-proven flat merge cost). */
-  private def useVersioned(sink: SinkSpec): Boolean =
-    sink.options.get("scdVersioned") match {
-      case Some(v) if v.equalsIgnoreCase("true")  => true
-      case Some(v) if v.equalsIgnoreCase("false") => false
-      case Some(v) => sys.error(
-        s"scdVersioned='$v' is not a boolean (true|false)")
-      case None =>
-        val path = sink.path.getOrElse(sys.error("scd2 sink needs path"))
-        Files.exists(Paths.get(path, "_graft_log")) ||
-          !graft.util.Fs.nonEmptyDir(Paths.get(path))
-    }
-
-  /** The versioned branch of [[scd2InsertPartitioned]] (the default since
-    * r14): same bucketing, same partition-pruned merge, but the store is
-    * a [[graft.sources.VersionedParquet]] table — the rewrite of the
-    * touched buckets publishes as ONE manifest rename, so a reader (or a
-    * crash) can never observe some buckets at the new version and others
-    * at the old. The merge needs no materialization seam here: the write
-    * targets a fresh immutable data dir, never the files its lineage
-    * reads.
-    *
-    * Concurrency: the merge captures the snapshot version it READS and
-    * passes it to `overwritePartitions` as the optimistic base — a
-    * concurrent merge that committed an overlapping bucket in between
-    * makes THIS commit abort loudly instead of silently dropping the
-    * other's update; merges over disjoint buckets interleave freely.
-    *
-    * Conflict handling: the DEFAULT on a detected write-write conflict
-    * is the loud typed abort (`VersionedParquet.ConflictException`) —
-    * nothing published, re-run converges. With option
-    * `scdConflictRetries=N` the writer instead re-reads the touched
-    * buckets at the advanced version and re-merges, up to N times (the
-    * bounded optimistic-retry loop a deployment with overlapping
-    * schedulers opts into; each retry logs the conflict it absorbed).
-    * Retries re-merge against the OTHER writer's committed rows, so no
-    * update is ever lost either way — the option only trades operator
-    * intervention for bounded extra work under contention.
-    *
-    * Streaming replays (`batchId` from foreachBatch, `streamId` from
-    * [[streamIdentity]]): each commit carries the IDENTITY-QUALIFIED
-    * monotone high-watermark `scd2BatchHwm.<streamId> = max(batchId,
-    * prev hwm)` in its manifest meta; a batch of the SAME identity at or
-    * below its watermark has completed WHOLE (micro-batch ids are
-    * strictly increasing within one checkpoint lineage and foreachBatch
-    * runs sequentially) and is skipped — one manifest-meta read, no
-    * Spark job (the [[graft.streaming.StreamingJobs
+    * Streaming replays (`streamBatch` = (foreachBatch id, stream identity
+    * from [[streamIdentity]])): each commit carries the
+    * identity-qualified monotone high-watermark `scd2BatchHwm.<identity>
+    * = max(batchId, prev hwm)` in its manifest meta; a batch of the SAME
+    * identity at or below its watermark has completed WHOLE (micro-batch
+    * ids are strictly increasing within one checkpoint lineage and
+    * foreachBatch runs sequentially) and is skipped — one manifest-meta
+    * read, no Spark job (the [[graft.streaming.StreamingJobs
     * .incrementalNearDupBatch]] contract, including its backward scan
     * past untagged maintenance commits). An UNKNOWN identity — a restart
     * with a fresh checkpoint (batch ids reset to 0) or a second query
     * writing the same dimension — starts at watermark −1 and merges
-    * everything (VERDICT r14 #2: the unqualified watermark silently
-    * DROPPED those batches' new data). Every commit re-carries ALL
-    * identities' watermarks, so interleaved writers and batch merges
-    * can't bury each other's replay state; a caller threading batch ids
-    * WITHOUT an identity uses the legacy unqualified key. Residual (and
-    * safe) race: two DIFFERENT identities committing concurrently can
-    * re-carry each other's watermark one commit stale — the skip
-    * optimization weakens (a replayed batch re-merges), but re-merge is
-    * content-idempotent and a batch of NEW data is never skipped, because
-    * an identity's own watermark only ever advances through its own
-    * strictly-sequential stream. */
-  private def scd2InsertPartitionedVersioned(spark: SparkSession,
-      staged: DataFrame, sink: SinkSpec, nBuckets: Int,
-      midCommitHook: () => Unit, batchId: Option[Long],
-      streamId: Option[String]): Unit = {
+    * everything. Every commit re-carries ALL identities' watermarks, so
+    * interleaved writers and batch merges can't bury each other's replay
+    * state. Residual (and safe) race: two DIFFERENT identities committing
+    * concurrently can re-carry each other's watermark one commit stale —
+    * a replayed batch then re-merges, which is content-idempotent, and a
+    * batch of NEW data is never skipped, because an identity's own
+    * watermark only ever advances through its own strictly-sequential
+    * stream. */
+  def scd2InsertPartitioned(spark: SparkSession, staged: DataFrame, sink: SinkSpec,
+      nBuckets: Int, midCommitHook: () => Unit = () => (),
+      streamBatch: Option[(Long, String)] = None): Unit = {
     import graft.sources.VersionedParquet
     val path = sink.path.getOrElse(sys.error("scd2 sink needs path"))
-    val hwmKey = streamId.map(i => s"scd2BatchHwm.$i").getOrElse("scd2BatchHwm")
-    def hwmOf(m: Map[String, String]): Long =
-      m.get(hwmKey).flatMap(s => scala.util.Try(s.toLong).toOption).getOrElse(-1L)
+    require(Files.exists(Paths.get(path, "_graft_log")) ||
+      !graft.util.Fs.nonEmptyDir(Paths.get(path)),
+      s"scd2 sink ${sink.dataFrameName}: $path is a non-empty directory " +
+        "without a _graft_log — a raw-layout dimension, which partitioned " +
+        "SCD2 no longer writes; migrate it into a VersionedParquet table " +
+        "or point the sink at a new path")
+    def hwmOf(m: Map[String, String], id: String): Long =
+      m.get(s"scd2BatchHwm.$id").flatMap(s => scala.util.Try(s.toLong).toOption)
+        .getOrElse(-1L)
     // replay guard first: one manifest read, before any Spark job
-    if (batchId.exists(_ <= hwmOf(scd2HwmMap(path)))) return
+    if (streamBatch.exists { case (b, id) => b <= hwmOf(scd2HwmMap(path), id) }) return
     // all identities' watermarks ride every commit so maintenance commits
     // (or merges of other identities) can't bury them; this identity's
     // entry advances to max(batchId, previous)
     def hwmMeta(): Map[String, String] = {
       val hm = scd2HwmMap(path)
-      batchId.map(b => hm + (hwmKey -> math.max(b, hwmOf(hm)).toString))
-        .getOrElse(hm)
+      streamBatch.fold(hm) { case (b, id) =>
+        hm + (s"scd2BatchHwm.$id" -> math.max(b, hwmOf(hm, id)).toString)
+      }
     }
     val batchTs = java.sql.Timestamp.from(java.time.Instant.now())
-    val keys = sink.scdKeys
-    val bucket = pmod(xxhash64(keys.map(col): _*), lit(nBuckets)).cast("int")
-    val stagedB = staged.withColumn("scd_bucket", bucket)
+    val stagedB = staged.withColumn("scd_bucket", Scd2.bucketCol(sink.scdKeys, nBuckets))
     if (VersionedParquet.versions(path).isEmpty) {
       // an empty FIRST batch must not commit: a zero-file manifest would
       // make the next merge's readPartitions return an empty-schema frame
@@ -461,33 +333,14 @@ object SinkWriter {
         Scd2.initialize(stagedB, batchTs), path, "scd_bucket", hwmMeta())
     } else {
       val touched = stagedB.select("scd_bucket").distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      if (touched.isEmpty) return // empty batch: nothing to merge (matches
-      // the dynamic-overwrite path, which writes no partition either)
-      val retries = sink.options.get("scdConflictRetries").map(_.toInt).getOrElse(0)
-      var attempt = 0
-      var done = false
-      while (!done) {
-        val base = VersionedParquet.versions(path).max
-        val dimTouched = VersionedParquet.readPartitions(
-          spark, path, touched.map(_.toString), Some(base))
-        val merged = Scd2.merge(dimTouched, stagedB, keys,
-          sink.scdTrackedCols, batchTs)
-        try {
-          // hwm recomputed per ATTEMPT (ADVICE r14): on the retry path the
-          // conflict PROVES a concurrent writer advanced the table — a meta
-          // map captured before the loop could publish a regressed
-          // watermark in the newest manifest, re-admitting its batches
-          VersionedParquet.overwritePartitions(merged, path, "scd_bucket",
-            touched.map(_.toString), Some(base), hwmMeta(), midCommitHook)
-          done = true
-        } catch {
-          case e: VersionedParquet.ConflictException if attempt < retries =>
-            attempt += 1
-            println(s"[scd2] conflict on $path (attempt $attempt/$retries), " +
-              s"re-merging at the advanced version: ${e.getMessage.take(120)}")
-        }
-      }
+        .collect().map(_.getInt(0)).toSeq.sorted.map(_.toString)
+      if (touched.isEmpty) return // empty batch: nothing to merge, no version
+      val base = VersionedParquet.versions(path).max
+      val merged = Scd2.merge(
+        VersionedParquet.readPartitions(spark, path, touched, Some(base)),
+        stagedB, sink.scdKeys, sink.scdTrackedCols, batchTs)
+      VersionedParquet.overwritePartitions(merged, path, "scd_bucket",
+        touched, Some(base), hwmMeta(), midCommitHook)
     }
   }
 
@@ -503,14 +356,6 @@ object SinkWriter {
       .map(v => graft.sources.VersionedParquet.commitMeta(path, v)
         .filter(_._1.startsWith("scd2BatchHwm")))
       .collectFirst { case m if m.nonEmpty => m }.getOrElse(Map.empty)
-
-  /** W10 multi-sink fan-out (spark.json:69-96): persist once, write N times. */
-  def fanOut(spark: SparkSession, df: DataFrame, sinks: Seq[SinkSpec]): Unit = {
-    if (sinks.size <= 1) { sinks.foreach(write(spark, df, _)); return }
-    val cached = df.persist()
-    try sinks.foreach(write(spark, cached, _))
-    finally { cached.unpersist(); () }
-  }
 
   /** W8 error-record sink (spark.json:97-101): `bad` frames already carry
     * `error_reason`; stamp the job + time and write with the same machinery. */

@@ -377,10 +377,10 @@ object VersionedParquet {
     * manifest replaces only the files under `partitionCol = v` for v in
     * `touched`, carrying every other partition's files forward verbatim.
     * ONE manifest rename publishes all touched partitions together — a
-    * reader sees the whole commit or none of it, closing the
+    * reader sees the whole commit or none of it, never the
     * mixed-version window Spark's dynamic partition overwrite leaves on
     * a crash mid-commit (the [[graft.sinks.SinkWriter.scd2InsertPartitioned]]
-    * crash contract). A crash anywhere before the rename leaves only an
+    * store). A crash anywhere before the rename leaves only an
     * unreferenced data dir; re-running the operation converges.
     *
     * Requires the table to have been written partition-scoped

@@ -559,16 +559,15 @@ object StreamingJobs {
     * micro-batch — this is how scdType2Insert works in streaming mode.
     * The micro-batch id AND the stream's identity (derived from the
     * checkpoint location — [[graft.sinks.SinkWriter.streamIdentity]])
-    * are threaded through [[graft.sinks.SinkWriter.writeStreamBatch]]:
-    * an scdType2Insert against a VERSIONED dimension carries
-    * `scd2BatchHwm.<identity>` in each commit manifest, so an
+    * reach [[graft.sinks.SinkWriter.write]]: a bucketed scdType2Insert
+    * carries `scd2BatchHwm.<identity>` in each commit manifest, so an
     * at-least-once replay of an already-committed batch is detected from
     * one manifest-meta read and skipped whole — no duplicated history
     * rows (the merge is content-idempotent anyway) and no spurious
     * version churn on the dimension's log — while a restart with a FRESH
     * checkpoint (batch ids reset to 0) is a NEW identity whose batches
-    * all merge (r15, VERDICT r14 #2: an unqualified watermark silently
-    * dropped that new data). */
+    * all merge. A batch whose commit loses a write-write conflict fails
+    * the query; restarting it replays that batch from the checkpoint. */
   def startForeachBatch(stream: DataFrame, sink: SinkSpec,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val identity = SinkWriter.streamIdentity(checkpoint)
@@ -576,7 +575,7 @@ object StreamingJobs {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, bid: Long) =>
-        SinkWriter.writeStreamBatch(batch.sparkSession, batch, sink, bid, identity)
+        SinkWriter.write(batch.sparkSession, batch, sink, Some(bid -> identity))
       }
       .start()
   }

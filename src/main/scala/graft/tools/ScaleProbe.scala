@@ -1485,7 +1485,7 @@ object ScaleProbe {
         val sink = graft.config.SinkSpec("dim", loadType = "scdType2Insert",
           format = "parquet", path = Some(path),
           scdKeys = Seq("bkey"), scdTrackedCols = Seq("payload"),
-          options = Map("scdBuckets" -> nBuckets.toString, "scdVersioned" -> "true"))
+          options = Map("scdBuckets" -> nBuckets.toString))
         val dim = spark.range(nBuckets * 4L).select(col("id").as("bkey"),
           concat(lit("v"), col("id")).as("payload"))
         graft.sinks.SinkWriter.write(spark, dim, sink) // v0: nBuckets files
@@ -1496,8 +1496,7 @@ object ScaleProbe {
             lit((i.toLong * 37) % (nBuckets * 4L)).as("bkey"),
             concat(lit("w"), lit(i)).as("payload"))
           val t0 = System.nanoTime()
-          graft.sinks.SinkWriter.writeStreamBatch(spark, batch, sink,
-            batchId = i.toLong, streamIdentity = sid)
+          graft.sinks.SinkWriter.write(spark, batch, sink, Some(i.toLong -> sid))
           lat += (System.nanoTime() - t0) / 1e9
         }
         def med(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
@@ -1505,9 +1504,9 @@ object ScaleProbe {
         // replay-guard read: one backward scan to the newest tagged
         // manifest + return, NO Spark job — the hot no-op path
         val t1 = System.nanoTime()
-        graft.sinks.SinkWriter.writeStreamBatch(spark,
+        graft.sinks.SinkWriter.write(spark,
           spark.range(1).select(lit(0L).as("bkey"), lit("x").as("payload")),
-          sink, batchId = 1L, streamIdentity = sid)
+          sink, Some(1L -> sid))
         val tHwm = (System.nanoTime() - t1) / 1e9
         // snapshot metadata read: log listing + newest manifest parse
         val t2 = System.nanoTime()
@@ -1518,8 +1517,8 @@ object ScaleProbe {
         val vs = graft.sources.VersionedParquet.versions(path)
         val base = vs(vs.size / 2)
         val touchedKey = ((vs.size / 2 + 1).toLong * 37) % (nBuckets * 4L)
-        val touchedBucket = spark.range(1).select(
-          pmod(xxhash64(lit(touchedKey)), lit(nBuckets)).cast("int"))
+        val touchedBucket = spark.range(1).select(lit(touchedKey).as("bkey"))
+          .select(graft.operators.Scd2.bucketCol(Seq("bkey"), nBuckets))
           .head().getInt(0)
         val frame = graft.sources.VersionedParquet.readPartitions(
           spark, path, Seq(touchedBucket.toString))
@@ -1558,7 +1557,7 @@ object ScaleProbe {
       val sink = graft.config.SinkSpec("dim", loadType = "scdType2Insert",
         format = "parquet", path = Some(path),
         scdKeys = Seq("bkey"), scdTrackedCols = Seq("payload"),
-        options = Map("scdBuckets" -> nBuckets.toString, "scdVersioned" -> "true"))
+        options = Map("scdBuckets" -> nBuckets.toString))
       val t0i = System.nanoTime()
       graft.sinks.SinkWriter.write(spark, dim, sink)
       val dtInit = (System.nanoTime() - t0i) / 1e9

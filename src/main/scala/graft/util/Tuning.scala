@@ -44,10 +44,9 @@ object Tuning {
     * object-agg fallback threshold raised to [[maxHashGroups]]; always
     * restores the previous value.
     *
-    * Session-conf caveat (the same one `scd2InsertPartitioned`'s
-    * partitionOverwriteMode scope carries): confs are session-wide, so a
-    * CONCURRENT query planned inside this scope also sees the raised
-    * threshold. That is benign here — the raise only trades sort for
+    * Session-conf caveat: confs are session-wide, so a CONCURRENT query
+    * planned inside this scope also sees the raised threshold. That is
+    * benign here — the raise only trades sort for
     * bounded hash residency — but it is why this helper sets a bounded
     * constant rather than taking an arbitrary caller value. */
   def withBoundedObjectAgg[A](spark: SparkSession)(body: => A): A = {

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import graft.config.SinkSpec
 import graft.sinks.SinkWriter
 import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** Partition-scoped SCD2 (SURVEY.md §4/§7.4): a batch must rewrite only
   * the bucket partitions its staged keys touch. */
@@ -13,36 +12,30 @@ class Scd2PartitionedSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def partitionFiles(path: String): Map[String, Set[String]] =
-    Files.list(Paths.get(path)).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("scd_bucket="))
-      .map { p =>
-        p.getFileName.toString ->
-          Files.list(p).iterator().asScala.map(_.getFileName.toString)
-            .filter(_.endsWith(".parquet")).toSet
-      }.toMap
-
-  test("second batch rewrites only touched bucket partitions (legacy layout)") {
+  test("second batch rewrites only touched bucket partitions") {
+    import graft.sources.VersionedParquet
     val path = Files.createTempDirectory("graft-scdp").toString + "/dim"
     val sink = SinkSpec("dim", loadType = "scdType2Insert", format = "parquet",
       path = Some(path), scdKeys = Seq("id"), scdTrackedCols = Seq("v"),
-      options = Map("scdBuckets" -> "8", "scdVersioned" -> "false"))
+      options = Map("scdBuckets" -> "8"))
+    // each bucket's data files at one version
+    def bucketFiles(v: Long): Map[Int, Set[String]] = (0 until 8).map(b =>
+      b -> VersionedParquet.readPartitions(spark, path, Seq(b.toString), Some(v))
+        .inputFiles.toSet).toMap
 
     val snapshot = (1L to 200L).map(k => (k, s"v$k")).toDF("id", "v")
     SinkWriter.write(spark, snapshot, sink)
-    val before = partitionFiles(path)
-    assert(before.size == 8, s"expected 8 bucket partitions, got ${before.keySet}")
-
     // batch 2: mutate exactly one key → exactly one bucket partition changes
-    val oneKey = Seq((7L, "CHANGED")).toDF("id", "v")
-    SinkWriter.write(spark, oneKey, sink)
-    val after = partitionFiles(path)
-
-    val changed = after.keySet.filter(k => before(k) != after(k))
-    assert(changed.size == 1, s"expected exactly one rewritten partition, got $changed")
+    SinkWriter.write(spark, Seq((7L, "CHANGED")).toDF("id", "v"), sink)
+    val Seq(v0, v1) = VersionedParquet.versions(path)
+    val (before, after) = (bucketFiles(v0), bucketFiles(v1))
+    assert(before.values.forall(_.nonEmpty), s"expected 8 filled buckets, got $before")
+    // every other bucket carries the very same files forward
+    val changed = (0 until 8).filter(b => before(b) != after(b))
+    assert(changed.size == 1, s"expected exactly one rewritten bucket, got $changed")
 
     // correctness: key 7 has closed + current version; all other keys intact
-    val dim = spark.read.parquet(path)
+    val dim = VersionedParquet.read(spark, path)
     assert(dim.count() == 201)
     val k7 = dim.filter($"id" === 7).orderBy("effective_from").collect()
     assert(k7.length == 2)
@@ -51,35 +44,13 @@ class Scd2PartitionedSpec extends AnyFunSuite {
     assert(dim.filter($"is_current").count() == 200)
   }
 
-  test("path-staged merge (scdStagingPath) is bit-equal and cleans its scratch") {
-    val pLocal = Files.createTempDirectory("graft-scdp-l").toString + "/dim"
-    val pStaged = Files.createTempDirectory("graft-scdp-s").toString + "/dim"
-    val scratch = Files.createTempDirectory("graft-scdp-scratch").toString + "/stg"
-    val mk = (p: String, opts: Map[String, String]) => SinkSpec("dim",
-      loadType = "scdType2Insert", format = "parquet", path = Some(p),
-      scdKeys = Seq("id"), scdTrackedCols = Seq("v"), options = opts)
-    val b1 = (1L to 50L).map(k => (k, s"v$k")).toDF("id", "v")
-    val b2 = (1L to 55L).map(k => (k, if (k % 3 == 0) s"w$k" else s"v$k")).toDF("id", "v")
-    val legacy = Map("scdBuckets" -> "4", "scdVersioned" -> "false")
-    SinkWriter.write(spark, b1, mk(pLocal, legacy))
-    SinkWriter.write(spark, b2, mk(pLocal, legacy))
-    SinkWriter.write(spark, b1, mk(pStaged, legacy + ("scdStagingPath" -> scratch)))
-    SinkWriter.write(spark, b2, mk(pStaged, legacy + ("scdStagingPath" -> scratch)))
-    val a = spark.read.parquet(pLocal).select("id", "v", "is_current")
-    val b = spark.read.parquet(pStaged).select("id", "v", "is_current")
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-    // the durable merge staging is scratch, removed once the overwrite lands
-    assert(!Files.exists(Paths.get(scratch)),
-      "staged merge scratch must be cleaned up after the overwrite commits")
-  }
-
   test("scdVersioned: a crash mid-commit leaves ALL partitions old; the " +
       "published commit flips ALL touched partitions at once — never mixed") {
     import graft.sources.VersionedParquet
     val path = Files.createTempDirectory("graft-scdv").toString + "/dim"
     val sink = SinkSpec("dim", loadType = "scdType2Insert", format = "parquet",
       path = Some(path), scdKeys = Seq("id"), scdTrackedCols = Seq("v"),
-      options = Map("scdBuckets" -> "8", "scdVersioned" -> "true"))
+      options = Map("scdBuckets" -> "8"))
     val b1 = (1L to 200L).map(k => (k, s"v$k")).toDF("id", "v")
     SinkWriter.write(spark, b1, sink)
     val dim1 = VersionedParquet.read(spark, path)
@@ -118,34 +89,16 @@ class Scd2PartitionedSpec extends AnyFunSuite {
     assert(v0.count() == 200 && v0.filter($"v".startsWith("CHANGED")).count() == 0)
   }
 
-  test("scdVersioned merge content matches the dynamic-overwrite path") {
-    import graft.sources.VersionedParquet
-    val pV = Files.createTempDirectory("graft-scdv-a").toString + "/dim"
-    val pD = Files.createTempDirectory("graft-scdv-b").toString + "/dim"
-    val mk = (p: String, opts: Map[String, String]) => SinkSpec("dim",
-      loadType = "scdType2Insert", format = "parquet", path = Some(p),
-      scdKeys = Seq("id"), scdTrackedCols = Seq("v"), options = opts)
-    val b1 = (1L to 50L).map(k => (k, s"v$k")).toDF("id", "v")
-    val b2 = (1L to 60L).map(k => (k, if (k % 5 == 0) s"w$k" else s"v$k")).toDF("id", "v")
-    SinkWriter.write(spark, b1, mk(pV, Map("scdBuckets" -> "4", "scdVersioned" -> "true")))
-    SinkWriter.write(spark, b2, mk(pV, Map("scdBuckets" -> "4", "scdVersioned" -> "true")))
-    SinkWriter.write(spark, b1, mk(pD, Map("scdBuckets" -> "4", "scdVersioned" -> "false")))
-    SinkWriter.write(spark, b2, mk(pD, Map("scdBuckets" -> "4", "scdVersioned" -> "false")))
-    val a = VersionedParquet.read(spark, pV).select("id", "v", "is_current")
-    val b = spark.read.parquet(pD).select("id", "v", "is_current")
-    assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
-  }
-
   test("scdVersioned edge contracts: empty batch no-ops; stray partitions " +
       "in an overwritePartitions frame abort before publish") {
     import graft.sources.VersionedParquet
     val path = Files.createTempDirectory("graft-scdv-e").toString + "/dim"
     val sink = SinkSpec("dim", loadType = "scdType2Insert", format = "parquet",
       path = Some(path), scdKeys = Seq("id"), scdTrackedCols = Seq("v"),
-      options = Map("scdBuckets" -> "4", "scdVersioned" -> "true"))
+      options = Map("scdBuckets" -> "4"))
     SinkWriter.write(spark, (1L to 20L).map(k => (k, s"v$k")).toDF("id", "v"), sink)
     val v1 = VersionedParquet.versions(path).max
-    // empty batch: no merge, no new version (dynamic path writes nothing too)
+    // empty batch: no merge, no new version
     SinkWriter.write(spark, Seq.empty[(Long, String)].toDF("id", "v"), sink)
     assert(VersionedParquet.versions(path).max == v1, "empty batch must not commit")
     assert(VersionedParquet.read(spark, path).count() == 20)
@@ -166,7 +119,7 @@ class Scd2PartitionedSpec extends AnyFunSuite {
     val path = Files.createTempDirectory("graft-scdv-c").toString + "/dim"
     val sink = SinkSpec("dim", loadType = "scdType2Insert", format = "parquet",
       path = Some(path), scdKeys = Seq("id"), scdTrackedCols = Seq("v"),
-      options = Map("scdBuckets" -> "4", "scdVersioned" -> "true"))
+      options = Map("scdBuckets" -> "4"))
     SinkWriter.write(spark, (1L to 40L).map(k => (k, s"v$k")).toDF("id", "v"), sink)
     // compacting would rewrite the snapshot into the flat layout and break
     // partition attribution for the NEXT partial commit — must refuse now
@@ -188,53 +141,53 @@ class Scd2PartitionedSpec extends AnyFunSuite {
       scdKeys = Seq("id"), scdTrackedCols = Seq("v"), options = opts)
     val b1 = (1L to 50L).map(k => (k, s"v$k")).toDF("id", "v")
     val b2 = (1L to 60L).map(k => (k, if (k % 5 == 0) s"w$k" else s"v$k")).toDF("id", "v")
-    SinkWriter.write(spark, b1, mk(p1, Map("scdBuckets" -> "4", "scdVersioned" -> "false")))
-    SinkWriter.write(spark, b2, mk(p1, Map("scdBuckets" -> "4", "scdVersioned" -> "false")))
+    SinkWriter.write(spark, b1, mk(p1, Map("scdBuckets" -> "4")))
+    SinkWriter.write(spark, b2, mk(p1, Map("scdBuckets" -> "4")))
     SinkWriter.write(spark, b1, mk(p2, Map.empty))
     SinkWriter.write(spark, b2, mk(p2, Map.empty))
-    val a = spark.read.parquet(p1).select("id", "v", "is_current")
+    val a = graft.sources.VersionedParquet.read(spark, p1).select("id", "v", "is_current")
     val b = spark.read.parquet(p2).select("id", "v", "is_current")
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }
 
-  test("default flip (r14): a fresh partitioned sink gets the versioned " +
-      "store; an existing legacy table stays on its raw-directory layout") {
-    import graft.sources.VersionedParquet
+  test("refusals: a raw-layout target and each removed sink option fail " +
+      "loudly, naming it, and publish nothing") {
     val mk = (p: String, opts: Map[String, String]) => SinkSpec("dim",
       loadType = "scdType2Insert", format = "parquet", path = Some(p),
       scdKeys = Seq("id"), scdTrackedCols = Seq("v"), options = opts)
     val b1 = (1L to 40L).map(k => (k, s"v$k")).toDF("id", "v")
-    val b2 = Seq((3L, "CHANGED")).toDF("id", "v")
 
-    // fresh table, no scdVersioned option → versioned store by default
-    val pFresh = Files.createTempDirectory("graft-scddef").toString + "/dim"
-    SinkWriter.write(spark, b1, mk(pFresh, Map("scdBuckets" -> "4")))
-    assert(Files.exists(Paths.get(pFresh, "_graft_log")),
-      "a fresh partitioned SCD2 sink must default to the versioned store")
-    SinkWriter.write(spark, b2, mk(pFresh, Map("scdBuckets" -> "4")))
-    val dim = VersionedParquet.read(spark, pFresh)
-    assert(dim.filter($"is_current").count() == 40)
-    assert(dim.filter($"v" === "CHANGED" && $"is_current").count() == 1)
-    assert(VersionedParquet.versions(pFresh).size == 2)
-
-    // pre-existing LEGACY table, no option → auto-detected, stays raw
-    // (the flip must not orphan a deployment's raw-directory consumers)
-    val pLegacy = Files.createTempDirectory("graft-scddef-l").toString + "/dim"
-    SinkWriter.write(spark, b1,
-      mk(pLegacy, Map("scdBuckets" -> "4", "scdVersioned" -> "false")))
-    SinkWriter.write(spark, b2, mk(pLegacy, Map("scdBuckets" -> "4")))
-    assert(!Files.exists(Paths.get(pLegacy, "_graft_log")),
-      "an existing raw-layout table must keep merging in place")
-    val legacyDim = spark.read.parquet(pLegacy)
-    assert(legacyDim.filter($"is_current").count() == 40)
-    assert(legacyDim.filter($"v" === "CHANGED" && $"is_current").count() == 1)
-
-    // a typo'd scdVersioned value is a loud config error, not a default
-    val boom = intercept[RuntimeException] {
-      SinkWriter.write(spark, b2,
-        mk(pFresh, Map("scdBuckets" -> "4", "scdVersioned" -> "yes")))
+    // a raw hive-directory dimension (the pre-versioned layout): merging
+    // into it would initialize a versioned table that hides its rows
+    val pRaw = Files.createTempDirectory("graft-scdraw").toString + "/dim"
+    b1.withColumn("scd_bucket", graft.operators.Scd2.bucketCol(Seq("id"), 4))
+      .write.partitionBy("scd_bucket").parquet(pRaw)
+    def listing() = graft.util.Fs.walk(Paths.get(pRaw)).map(_.toString).toSet
+    val rawFiles = listing()
+    val e = intercept[IllegalArgumentException] {
+      SinkWriter.write(spark, Seq((3L, "CHANGED")).toDF("id", "v"),
+        mk(pRaw, Map("scdBuckets" -> "4")))
     }
-    assert(boom.getMessage.contains("scdVersioned"), boom.getMessage)
+    assert(e.getMessage.contains(pRaw) && e.getMessage.contains("_graft_log"),
+      e.getMessage)
+    assert(listing() == rawFiles, "a refused write must leave the target as it was")
+    assert(spark.read.parquet(pRaw).filter($"v" === "CHANGED").count() == 0)
+
+    // the removed options: loud at construction and at config parse
+    for (k <- Seq("scdVersioned", "scdStagingPath", "scdConflictRetries")) {
+      val p = Files.createTempDirectory("graft-scdopt").toString + "/dim"
+      val eOpt = intercept[IllegalArgumentException] {
+        SinkWriter.write(spark, b1, mk(p, Map("scdBuckets" -> "4", k -> "1")))
+      }
+      assert(eOpt.getMessage.contains(s"'$k'"), eOpt.getMessage)
+      assert(!Files.exists(Paths.get(p)), s"$k: nothing may be written")
+      val eParse = intercept[IllegalArgumentException] {
+        graft.config.JobConfig.parse(
+          s"""{"sinks": [{"dataFrameName": "dim", "loadType": "scdType2Insert",
+             |  "path": "$p", "options": {"scdBuckets": "4", "$k": "1"}}]}""".stripMargin)
+      }
+      assert(eParse.getMessage.contains(s"'$k'"), eParse.getMessage)
+    }
   }
 
   test("empty FIRST batch must not initialize a zero-file versioned table") {

@@ -27,11 +27,16 @@ class SinksSpec extends AnyFunSuite {
 
   test("fan-out writes one frame to multiple sinks (array-of-sinks contract)") {
     val base = tmpDir()
-    val df = Seq((1, "x"), (2, "y"), (3, "z")).toDF("id", "v")
-    SinkWriter.fanOut(spark, df, Seq(
-      SinkSpec("t", format = "parquet", path = Some(s"$base/p"), savemode = "overwrite"),
-      SinkSpec("t", format = "json", path = Some(s"$base/j"), savemode = "overwrite"),
-      SinkSpec("t", format = "orc", path = Some(s"$base/o"), savemode = "overwrite")))
+    val cfg = graft.config.JobConfig.parse(
+      s"""{"jobName": "fan_out",
+         |"inputs": [{"dataFrameName": "t", "format": "sql",
+         |  "sql": "SELECT * FROM VALUES (1, 'x'), (2, 'y'), (3, 'z') AS t(id, v)"}],
+         |"sinks": [
+         |  {"dataFrameName": "t", "format": "parquet", "path": "$base/p", "savemode": "overwrite"},
+         |  {"dataFrameName": "t", "format": "json", "path": "$base/j", "savemode": "overwrite"},
+         |  {"dataFrameName": "t", "format": "orc", "path": "$base/o", "savemode": "overwrite"}
+         |]}""".stripMargin)
+    new graft.run.Orchestrator(spark).run(cfg)
     assert(spark.read.parquet(s"$base/p").count() == 3)
     assert(spark.read.json(s"$base/j").count() == 3)
     assert(spark.read.orc(s"$base/o").count() == 3)

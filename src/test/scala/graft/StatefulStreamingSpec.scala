@@ -481,10 +481,9 @@ class StatefulStreamingSpec extends AnyFunSuite {
     // crash-redo channel): detected from one manifest-meta read, skipped
     // whole — version log untouched, content untouched
     val b1 = Seq((2L, "b2"), (4L, "d1")).toDF("id", "v")
-    SinkWriter.writeStreamBatch(spark, b1, sink, batchId = 1L, streamIdentity = sid)
-    SinkWriter.writeStreamBatch(spark,
-      Seq((1L, "a1"), (2L, "b1"), (3L, "c1")).toDF("id", "v"), sink,
-      batchId = 0L, streamIdentity = sid)
+    SinkWriter.write(spark, b1, sink, Some(1L -> sid))
+    SinkWriter.write(spark,
+      Seq((1L, "a1"), (2L, "b1"), (3L, "c1")).toDF("id", "v"), sink, Some(0L -> sid))
     assert(VersionedParquet.versions(dim) == versions,
       "replay of a committed micro-batch churned the version log")
     assert(VersionedParquet.read(spark, dim)
@@ -498,11 +497,11 @@ class StatefulStreamingSpec extends AnyFunSuite {
     intercept[RuntimeException] {
       SinkWriter.scd2InsertPartitioned(spark, b2, sink, nBuckets = 4,
         midCommitHook = () => throw new RuntimeException("injected crash"),
-        batchId = Some(2L), streamId = Some(sid))
+        streamBatch = Some(2L -> sid))
     }
     assert(VersionedParquet.versions(dim) == versions,
       "crashed batch must publish nothing")
-    SinkWriter.writeStreamBatch(spark, b2, sink, batchId = 2L, streamIdentity = sid)
+    SinkWriter.write(spark, b2, sink, Some(2L -> sid))
     val after = VersionedParquet.versions(dim)
     assert(after.size == versions.size + 1, s"redo must commit once, got $after")
     assert(VersionedParquet.commitMeta(dim, after.max)
@@ -511,7 +510,7 @@ class StatefulStreamingSpec extends AnyFunSuite {
     assert(healed.filter(col("is_current")).count() == 4)
     assert(healed.filter(col("id") === 3L).count() == 2) // c1 closed + c2
     // and a SECOND redo of the now-committed batch is a no-op
-    SinkWriter.writeStreamBatch(spark, b2, sink, batchId = 2L, streamIdentity = sid)
+    SinkWriter.write(spark, b2, sink, Some(2L -> sid))
     assert(VersionedParquet.versions(dim) == after,
       "post-commit redo churned the version log")
   }
@@ -571,9 +570,8 @@ class StatefulStreamingSpec extends AnyFunSuite {
     assert(newest.contains(s"scd2BatchHwm.$sidB"))
     // and a replay WITHIN checkpoint B's identity is still skipped whole
     val before = VersionedParquet.versions(dim)
-    SinkWriter.writeStreamBatch(spark,
-      Seq((2L, "b2"), (4L, "d1")).toDF("id", "v"), sink,
-      batchId = 0L, streamIdentity = sidB)
+    SinkWriter.write(spark,
+      Seq((2L, "b2"), (4L, "d1")).toDF("id", "v"), sink, Some(0L -> sidB))
     assert(VersionedParquet.versions(dim) == before,
       "same-identity replay churned the version log")
   }

@@ -2,7 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.config.SinkSpec
+import graft.config.{JobConfig, SinkSpec}
+import graft.operators.Scd2
+import graft.run.{PipelineRunner, PipelineStep}
 import graft.sinks.SinkWriter
 import graft.sources.VersionedParquet
 import java.nio.file.{Files, Paths}
@@ -21,12 +23,11 @@ class VersionedConcurrencySpec extends AnyFunSuite {
   private def mkSink(p: String) = SinkSpec("dim",
     loadType = "scdType2Insert", format = "parquet", path = Some(p),
     scdKeys = Seq("id"), scdTrackedCols = Seq("v"),
-    options = Map("scdBuckets" -> "8", "scdVersioned" -> "true"))
+    options = Map("scdBuckets" -> "8"))
 
   /** Bucket of a business key under the sink's hashing (8 buckets). */
   private def bucketOf(k: Long): Int =
-    spark.range(1).select(pmod(xxhash64(lit(k)), lit(8)).cast("int"))
-      .head().getInt(0)
+    Seq(k).toDF("id").select(Scd2.bucketCol(Seq("id"), 8)).head().getInt(0)
 
   /** Two keys guaranteed to land in DIFFERENT buckets. */
   private lazy val (keyA, keyB) = {
@@ -89,21 +90,33 @@ class VersionedConcurrencySpec extends AnyFunSuite {
     assert(healed.filter($"id" === keyA).count() == 3) // v, W2, W1 history
   }
 
-  test("scdConflictRetries: the losing merge re-reads the advanced table " +
-      "and converges with BOTH updates in history") {
+  test("a merge that loses an overlapping-bucket race converges through " +
+      "the step retry with BOTH updates in history") {
     val path = Files.createTempDirectory("graft-vc-retry").toString + "/dim"
-    val sink0 = mkSink(path)
-    SinkWriter.write(spark, (1L to 200L).map(k => (k, s"v$k")).toDF("id", "v"), sink0)
-    val sink = sink0.copy(options = sink0.options + ("scdConflictRetries" -> "1"))
-    // writer 2 commits an overlapping-bucket update from inside writer 1's
-    // hook, ONCE (the retry must not re-trigger the interleaving)
-    var fired = false
+    val sink = mkSink(path)
+    SinkWriter.write(spark, (1L to 200L).map(k => (k, s"v$k")).toDF("id", "v"), sink)
+    // writer 1 runs as a pipeline step; on its FIRST attempt writer 2
+    // commits an overlapping-bucket update from inside writer 1's hook, so
+    // that attempt aborts and the step loop re-runs the whole merge
+    val w1 = Seq((keyA, "W1")).toDF("id", "v")
     val w2 = Seq((keyA, "W2")).toDF("id", "v")
-    SinkWriter.scd2InsertPartitioned(spark,
-      Seq((keyA, "W1")).toDF("id", "v"), sink, nBuckets = 8,
-      midCommitHook = () => if (!fired) { fired = true; SinkWriter.write(spark, w2, sink0) })
+    var attempts, conflicts = 0
+    val runner = new PipelineRunner(spark) {
+      override protected def runAttempt(cfg: JobConfig,
+          token: Option[String]): Unit = {
+        attempts += 1
+        val first = attempts == 1
+        try SinkWriter.scd2InsertPartitioned(spark, w1, sink, nBuckets = 8,
+          midCommitHook = () => if (first) SinkWriter.write(spark, w2, sink))
+        catch { case e: VersionedParquet.ConflictException => conflicts += 1; throw e }
+      }
+    }
+    runner.run(Seq(PipelineStep("w1", JobConfig.parse("""{"jobName": "w1"}"""),
+      retries = 1)))
+    assert(attempts == 2 && conflicts == 1,
+      s"expected one conflict abort, then success: $attempts attempts, $conflicts conflicts")
     val dim = VersionedParquet.read(spark, path)
-    // writer 1's retry merged ON TOP of writer 2's commit: W2 closed, W1 current
+    // attempt 2 merged ON TOP of writer 2's commit: W2 closed, W1 current
     assert(dim.filter($"id" === keyA).count() == 3, "v, W2, W1 history expected")
     assert(dim.filter($"id" === keyA && $"is_current" && $"v" === "W1").count() == 1)
     assert(dim.filter($"id" === keyA && !$"is_current" && $"v" === "W2").count() == 1)
