@@ -21,6 +21,15 @@ package graft
 object Bench {
   import graft.util.HostMetrics.{TaskCpu, loadAvg, timed}
 
+  /** One timed execution of a query: seconds (-1 on failure), the 1-min
+    * load average at its start, hypervisor steal seconds and executor
+    * task-CPU seconds during it, and the generated classes it compiled. */
+  private final case class Attempt(sec: Double, load: Double, steal: Double, cpu: Double, compiles: Long)
+  private val Failed = Attempt(-1.0, -1.0, -1.0, -1.0, -1L)
+
+  /** A query's two swept attempts and the attempt whose timing it keeps. */
+  private final case class Row(name: String, a: Attempt, b: Attempt, kept: Attempt)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.util.HostMetrics.session()
@@ -40,12 +49,10 @@ object Bench {
     graft.util.Fs.warmStorage(sfDir)
 
     val names = SparkEntry.queries.keys.toSeq.sorted
-    // One timed execution: (seconds or -1 on failure, load average at
-    // start, hypervisor steal seconds DURING the attempt, executor task
-    // CPU seconds DURING it). `timed` clears the cache and frees staged
+    // One timed execution. `timed` clears the cache and frees staged
     // blocks after each query so later queries aren't taxed by someone
     // else's cache.
-    def once(name: String): (Double, Double, Double, Double) = {
+    def once(name: String): Attempt = {
       val la = loadAvg()
       var ok = true
       val t = timed(spark, cpu) {
@@ -53,7 +60,7 @@ object Bench {
           catch { case _: Throwable => false }
       }
       val stolen = if (t.steal < 0) -1.0 else math.round(t.steal * 100) / 100.0
-      (if (ok) t.wall else -1.0, la, stolen, math.round(t.cpu * 100) / 100.0)
+      Attempt(if (ok) t.wall else -1.0, la, stolen, math.round(t.cpu * 100) / 100.0, t.compiles)
     }
     // Sweep A: every query once, sorted order. Sweep B: every query again.
     // No result reuse between sweeps — the cache clear means both runs
@@ -63,7 +70,7 @@ object Bench {
     val passA = names.map(n => n -> once(n)).toMap
     val passB = names.map { n =>
       // don't burn a second sweep on a query whose first run failed
-      n -> (if (passA(n)._1 < 0) (-1.0, -1.0, -1.0, -1.0) else once(n))
+      n -> (if (passA(n).sec < 0) Failed else once(n))
     }.toMap
     // Tail re-sweep: the swept best-of-2 is a noisy steady-state
     // estimator exactly for the HEAVY queries, for two measured reasons.
@@ -82,7 +89,7 @@ object Bench {
     // protecting the other ~280 from load-window contamination.
     val tailThreshold = 5.5
     val passC = names.map { n =>
-      val a = passA(n)._1; val b = passB(n)._1
+      val a = passA(n).sec; val b = passB(n).sec
       val best2 = if (a < 0) a else if (b < 0) a else math.min(a, b)
       n -> (if (best2 > tailThreshold) Seq(once(name = n), once(name = n))
             else Seq.empty)
@@ -120,17 +127,13 @@ object Bench {
     // contamination by construction, no human raw-tag audit needed.
     val stealCleanMax = 0.5 // cpu-s of steal tolerated in a kept attempt
     val preResults = names.map { n =>
-      val (a, la, sa, ca) = passA(n); val (b, lb, sb, cb) = passB(n)
-      // every valid attempt with its steal + cpu tags, in execution
-      // order; the kept attempt is the fastest (ties → earliest), exactly
-      // the value the old best-of-2+tail logic summed: a failed FIRST run
-      // records -1 (broken query; B and the tail are skipped), a failed
-      // RERUN leaves A as the only candidate but stays visible in "raw"
-      val cands = (Seq((a, sa, ca), (b, sb, cb)) ++
-        passC(n).map(t => (t._1, t._3, t._4))).filter(_._1 >= 0)
-      val (best, keptSteal, keptCpu) =
-        if (cands.isEmpty) (-1.0, -1.0, -1.0) else cands.minBy(_._1)
-      (n, best, a, b, la, lb, sa, sb, keptSteal, keptCpu)
+      // every valid attempt, in execution order; the kept attempt is the
+      // fastest (ties → earliest), exactly the value the old
+      // best-of-2+tail logic summed: a failed FIRST run records -1
+      // (broken query; B and the tail are skipped), a failed RERUN leaves
+      // A as the only candidate but stays visible in "raw"
+      val cands = (Seq(passA(n), passB(n)) ++ passC(n)).filter(_.sec >= 0)
+      Row(n, passA(n), passB(n), if (cands.isEmpty) Failed else cands.minBy(_.sec))
     }
     // Flag-retime pass (r14): a sub-threshold query flagged against the
     // baseline is USUALLY JIT-warmup wall variance — under sweep
@@ -143,70 +146,64 @@ object Bench {
     def wouldFlag(n: String, best: Double, ks: Double): Boolean =
       baseline.get(n).exists(before => before > 0 && best > before * 1.5 &&
         best - before >= 0.5 && ks >= 0 && ks < 0.2)
-    val flagRetimed: Map[String, Seq[(Double, Double, Double, Double)]] =
-      preResults.filter { case (n, best, _, _, _, _, _, _, ks, _) =>
-        best >= 0 && wouldFlag(n, best, ks)
-      }.map { case (n, _, _, _, _, _, _, _, _, _) =>
-        n -> Seq(once(n), once(n))
-      }.toMap
-    val results = preResults.map { case r @ (n, best, a, b, la, lb, sa, sb, ks, kc) =>
-      flagRetimed.get(n) match {
+    val flagRetimed: Map[String, Seq[Attempt]] =
+      preResults.filter(r => r.kept.sec >= 0 && wouldFlag(r.name, r.kept.sec, r.kept.steal))
+        .map(r => r.name -> Seq(once(r.name), once(r.name))).toMap
+    val results = preResults.map { r =>
+      flagRetimed.get(r.name) match {
         case Some(pair) =>
           // retime candidates pass the SAME steal screen as kept-attempt
           // selection (ADVICE r14): a steal-contaminated warm run must not
           // become the kept timing just because it is fast — the original
           // kept attempt (already steal-screened by wouldFlag) stays as
           // the fallback candidate
-          val cands = (Seq((best, ks, kc)) ++
-            pair.map(t => (t._1, t._3, t._4))
-              .filter(t => t._2 < 0 || t._2 <= stealCleanMax))
-            .filter(_._1 >= 0)
-          val (nb, nks, nkc) = cands.minBy(_._1)
-          (n, nb, a, b, la, lb, sa, sb, nks, nkc)
+          val cands = (Seq(r.kept) ++
+            pair.filter(t => t.steal < 0 || t.steal <= stealCleanMax))
+            .filter(_.sec >= 0)
+          r.copy(kept = cands.minBy(_.sec))
         case None => r
       }
     }
-    val qs = results.map { case (k, v, _, _, _, _, _, _, _, _) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def perQuery(field: Row => Any): String =
+      results.map(r => s"\"" + r.name + "\":" + field(r)).mkString("{", ",", "}")
+    val qs = perQuery(_.kept.sec)
     // steal during each query's KEPT attempt (-1 = metric unavailable);
     // the per-query companion of clean_total
-    val kept = results.map { case (k, _, _, _, _, _, _, _, ks, _) =>
-      s"\"" + k + s"\":$ks"
-    }.mkString("{", ",", "}")
+    val kept = perQuery(_.kept.steal)
     // executor task-CPU seconds during each query's KEPT attempt — the
     // steal-immune round-over-round comparator (see the listener note)
-    val keptCpuJson = results.map { case (k, _, _, _, _, _, _, _, _, kc) =>
-      s"\"" + k + s"\":$kc"
-    }.mkString("{", ",", "}")
+    val keptCpuJson = perQuery(_.kept.cpu)
+    // generated classes Janino compiled during each query's KEPT attempt:
+    // code the session had not already compiled for an earlier run
+    val compilesJson = perQuery(_.kept.compiles)
     // a kept attempt with unreadable steal (-1) counts as clean — on
     // hosts without the metric clean_total degrades to total, never to 0
-    val cleanRows = results.filter { case (_, best, _, _, _, _, _, _, ks, _) =>
-      best >= 0 && (ks < 0 || ks <= stealCleanMax)
-    }
-    val cleanTotal = math.round(cleanRows.map(_._2).sum * 1000) / 1000.0
+    val cleanRows = results.filter(r =>
+      r.kept.sec >= 0 && (r.kept.steal < 0 || r.kept.steal <= stealCleanMax))
+    val cleanTotal = math.round(cleanRows.map(_.kept.sec).sum * 1000) / 1000.0
     val cleanN = cleanRows.size
     // both raw executions per query, each tagged with the 1-min load
     // average at its start AND the hypervisor steal seconds accrued
     // during it ([secA, secB, loadA, loadB, stealA, stealB]) — a blown
     // timing with large steal is host contamination, not a regression
-    val raw = results.map { case (k, _, a, b, la, lb, sa, sb, _, _) =>
-      s"\"" + k + s"\":[$a,$b,$la,$lb,$sa,$sb]"
-    }.mkString("{", ",", "}")
+    val raw = perQuery { r =>
+      val (a, b) = (r.a, r.b)
+      s"[${a.sec},${b.sec},${a.load},${b.load},${a.steal},${b.steal}]"
+    }
     // back-to-back pair timings for the slow tail ([sec1, sec2, load1,
     // load2, steal1, steal2]; only queries whose swept best-of-2
     // exceeded the tail threshold appear)
     val tail = names.filter(n => passC(n).nonEmpty).map { n =>
-      val Seq((c1, lc1, sc1, _), (c2, lc2, sc2, _)) = passC(n)
-      s"\"" + n + s"\":[$c1,$c2,$lc1,$lc2,$sc1,$sc2]"
+      val Seq(c1, c2) = passC(n)
+      s"\"" + n + s"\":[${c1.sec},${c2.sec},${c1.load},${c2.load},${c1.steal},${c2.steal}]"
     }.mkString("{", ",", "}")
     // warm back-to-back pairs run for would-be regression flags
     // ([sec1, sec2, steal1, steal2]) — the in-artifact record of which
     // flags the warm pass cleared as JIT-warmup variance
-    val flagTail = flagRetimed.toSeq.sortBy(_._1).map { case (n, pair) =>
-      val Seq((c1, _, sc1, _), (c2, _, sc2, _)) = pair
-      s"\"" + n + s"\":[$c1,$c2,$sc1,$sc2]"
+    val flagTail = flagRetimed.toSeq.sortBy(_._1).map { case (n, Seq(c1, c2)) =>
+      s"\"" + n + s"\":[${c1.sec},${c2.sec},${c1.steal},${c2.steal}]"
     }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val total = results.map(_.kept.sec).sum
     // Genuine-drift detector (r13/r14): diff each query's kept time
     // against the baseline parsed above. Entries that would flag have
     // already been given a guaranteed-warm back-to-back pair
@@ -217,17 +214,18 @@ object Bench {
     // steal-free. Each row carries [wallPrev, wallNow, cpuPrev, cpuNow,
     // steal] so host-vs-code adjudication is in-artifact: CPU flat with
     // wall up = host regime, both up = code.
-    val regressions = results.flatMap { case (k, best, _, _, _, _, _, _, ks, kc) =>
+    val regressions = results.flatMap { r =>
+      val (k, best, ks) = (r.name, r.kept.sec, r.kept.steal)
       baseline.get(k) match {
         case Some(before) if before > 0 && best > before * 1.5 &&
             best - before >= 0.5 && ks >= 0 && ks < 0.2 =>
           val cpuPrev = baselineCpu.getOrElse(k, -1.0)
-          Some(s"\"" + k + s"\":[$before,$best,$cpuPrev,$kc,$ks]")
+          Some(s"\"" + k + s"\":[$before,$best,$cpuPrev,${r.kept.cpu},$ks]")
         case _ => None
       }
     }.mkString("{", ",", "}")
     val perQueryLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","method":"best_of_2_swept_tail","clean_total":$cleanTotal,"clean_n":$cleanN,"regressions":$regressions,"queries":$qs,"keptSteal":$kept,"keptCpu":$keptCpuJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","method":"best_of_2_swept_tail","clean_total":$cleanTotal,"clean_n":$cleanN,"regressions":$regressions,"queries":$qs,"keptSteal":$kept,"keptCpu":$keptCpuJson,"codegenCompiles":$compilesJson,"sf":"$sfDir"}"""
     println(perQueryLine)
     // The driver captures only the TAIL of stdout; with ~290 queries the
     // line above exceeds that window and the leading total is lost. Emit a

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.BoundTimestamp
 
 /** W3 scdType2Insert — Slowly-Changing-Dimension type-2 merge, the one load
   * strategy in the reference with real algorithmic content
@@ -41,7 +42,7 @@ object Scd2 {
   /** Initialize a dimension from a first full snapshot. */
   def initialize(snapshot: DataFrame, batchTs: java.sql.Timestamp): DataFrame =
     snapshot
-      .withColumn(EffectiveFrom, lit(batchTs))
+      .withColumn(EffectiveFrom, BoundTimestamp(batchTs))
       .withColumn(EffectiveTo, lit(null).cast("timestamp"))
       .withColumn(IsCurrent, lit(true))
 
@@ -52,6 +53,11 @@ object Scd2 {
     * @param keys       business key columns
     * @param trackedCols columns whose change opens a new version
     * @param batchTs    version boundary timestamp for this batch
+    *
+    * `batchTs` enters the plan as a [[graft.functions.BoundTimestamp]],
+    * not a literal: the closed-row and opened-row stages then generate the
+    * same code at every batch timestamp, so a stream's later micro-batches
+    * reuse the classes its first one compiled.
     */
   def merge(
       dim: DataFrame,
@@ -96,14 +102,14 @@ object Scd2 {
     val closed = joined
       .filter(changed)
       .select(dim.columns.map(cn => col(s"c.$cn")).toSeq: _*)
-      .withColumn(EffectiveTo, lit(batchTs))
+      .withColumn(EffectiveTo, BoundTimestamp(batchTs))
       .withColumn(IsCurrent, lit(false))
 
     // (c) new versions: changed keys + brand-new keys
     val opened = joined
       .filter(changed || isNew)
       .select(businessCols.map(cn => col(s"s.$cn")).toSeq: _*)
-      .withColumn(EffectiveFrom, lit(batchTs))
+      .withColumn(EffectiveFrom, BoundTimestamp(batchTs))
       .withColumn(EffectiveTo, lit(null).cast("timestamp"))
       .withColumn(IsCurrent, lit(true))
 

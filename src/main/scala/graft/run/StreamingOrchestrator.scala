@@ -117,13 +117,10 @@ class StreamingOrchestrator(spark: SparkSession) {
     // start, stop everything already running (sinks included)
     val errorQueries = try cfg.errorSink.toSeq.flatMap { es =>
       errorStreams.zipWithIndex.map { case (bad, i) =>
-        val q = bad.writeStream
-          .option("checkpointLocation", s"$tmp/${cfg.jobName}_err$i")
-          .trigger(trigger)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
+        val q = StreamingJobs.start(bad, s"$tmp/${cfg.jobName}_err$i", trigger) {
+          (batch: DataFrame, _: Long) =>
             if (!batch.isEmpty) SinkWriter.writeErrors(batch.sparkSession, batch, cfg.jobName, es)
-          }
-          .start()
+        }
         started += q
         q
       }

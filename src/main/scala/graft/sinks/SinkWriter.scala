@@ -358,11 +358,14 @@ object SinkWriter {
       .collectFirst { case m if m.nonEmpty => m }.getOrElse(Map.empty)
 
   /** W8 error-record sink (spark.json:97-101): `bad` frames already carry
-    * `error_reason`; stamp the job + time and write with the same machinery. */
+    * `error_reason`; stamp the job + time and write with the same machinery.
+    * `error_ts` is one timestamp per call, taken when the write is planned
+    * (as `current_timestamp()` was) but bound outside the generated code,
+    * so each error write of a stream reuses the first one's classes. */
   def writeErrors(spark: SparkSession, bad: DataFrame, jobName: String, sink: SinkSpec): Unit = {
     val stamped = bad
       .withColumn("error_job", lit(jobName))
-      .withColumn("error_ts", current_timestamp())
+      .withColumn("error_ts", graft.functions.BoundTimestamp(java.time.Instant.now()))
     write(spark, stamped, sink)
   }
 

@@ -18,8 +18,48 @@ import graft.sinks.SinkWriter
   * Scale notes: every aggregation here carries a watermark so state is
   * bounded (unbounded state is the way streaming jobs die at scale);
   * dedupWithinWatermark keeps only the key+timestamp in state, not rows.
+  * Every query starts through [[start]], so its micro-batches run under
+  * the executor's shared classloader and reuse the generated code that
+  * earlier queries and batches of the same plan shape compiled.
   */
 object StreamingJobs {
+
+  private val IsolationKey = "spark.sql.artifact.isolation.enabled"
+
+  /** Starts `stream` as a foreachBatch query checkpointed at `checkpoint` —
+    * the one `.start()` behind every graft streaming query.
+    *
+    * `start()` clones the session, and with artifact isolation on (Spark's
+    * default) the clone's tasks run under a fresh per-session executor
+    * classloader. Spark's codegen cache is keyed on the classloader as
+    * well as the code, so every query run would Janino-compile its
+    * byte-identical stages again (~29 of ~48 compiles per `stream_scd2`
+    * iteration). Isolation exists for session-scoped artifacts (jars and
+    * class files added to one session, as Spark Connect does); graft adds
+    * none, so the shared classloader loses nothing.
+    *
+    * The clone copies the conf inside `start()`, so the key is set to
+    * false on the caller's session only for that call and then restored
+    * to exactly what it was (explicit value, or unset). The lock keeps
+    * two concurrent starts on one session from restoring each other's
+    * flipped value. */
+  def start(stream: DataFrame, checkpoint: String, trigger: Trigger)(
+      body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val writer = stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .trigger(trigger)
+      .foreachBatch(body)
+    val conf = stream.sparkSession.conf
+    synchronized {
+      val prev = conf.getAll.get(IsolationKey)
+      conf.set(IsolationKey, "false")
+      try writer.start()
+      finally prev match {
+        case Some(v) => conf.set(IsolationKey, v)
+        case None    => conf.unset(IsolationKey)
+      }
+    }
+  }
 
   /** File-stream source over a parquet directory (the fixtures' `events`
     * table replayed as a stream; schema must be provided in streaming). */
@@ -571,13 +611,9 @@ object StreamingJobs {
   def startForeachBatch(stream: DataFrame, sink: SinkSpec,
       checkpoint: String, trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     val identity = SinkWriter.streamIdentity(checkpoint)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        SinkWriter.write(batch.sparkSession, batch, sink, Some(bid -> identity))
-      }
-      .start()
+    start(stream, checkpoint, trigger) { (batch: DataFrame, bid: Long) =>
+      SinkWriter.write(batch.sparkSession, batch, sink, Some(bid -> identity))
+    }
   }
 
   /** Streaming distinct-count via HLL registers: each micro-batch's
@@ -651,35 +687,31 @@ object StreamingJobs {
   private def startMergedSketchStore(stream: DataFrame, storeDir: String,
       checkpoint: String, trigger: Trigger)(build: DataFrame => DataFrame)(
       merge: (DataFrame, DataFrame) => DataFrame): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val incoming = build(batch)
-        val gens = completeGenerations(spark, storeDir)
-        val merged = gens.lastOption match {
-          case Some(cur) => merge(spark.read.parquet(cur.toString), incoming)
-          case None => incoming
-        }
-        val nextId = gens.lastOption
-          .map(_.getName.stripPrefix("gen=").toLong + 1L).getOrElse(1L)
-        val root = new org.apache.hadoop.fs.Path(storeDir)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val next = new org.apache.hadoop.fs.Path(root, f"gen=$nextId%08d")
-        merged.write.mode("overwrite").parquet(next.toString)
-        // commit: our own marker, not the committer's _SUCCESS
-        fs.create(new org.apache.hadoop.fs.Path(next, CommitMarker), true).close()
-        // keep the new + one prior committed generation; GC everything
-        // else best-effort — stale committed gens AND torn markerless dirs
-        val keep = Set(next.getName) ++ gens.lastOption.map(_.getName)
-        fs.listStatus(root).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
-          .map(_.getPath).filterNot(p => keep(p.getName))
-          .foreach(p => try { fs.delete(p, true); () }
-            catch { case _: Throwable => () })
+    start(stream, checkpoint, trigger) { (batch: DataFrame, _: Long) =>
+      val spark = batch.sparkSession
+      val incoming = build(batch)
+      val gens = completeGenerations(spark, storeDir)
+      val merged = gens.lastOption match {
+        case Some(cur) => merge(spark.read.parquet(cur.toString), incoming)
+        case None => incoming
       }
-      .start()
+      val nextId = gens.lastOption
+        .map(_.getName.stripPrefix("gen=").toLong + 1L).getOrElse(1L)
+      val root = new org.apache.hadoop.fs.Path(storeDir)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val next = new org.apache.hadoop.fs.Path(root, f"gen=$nextId%08d")
+      merged.write.mode("overwrite").parquet(next.toString)
+      // commit: our own marker, not the committer's _SUCCESS
+      fs.create(new org.apache.hadoop.fs.Path(next, CommitMarker), true).close()
+      // keep the new + one prior committed generation; GC everything
+      // else best-effort — stale committed gens AND torn markerless dirs
+      val keep = Set(next.getName) ++ gens.lastOption.map(_.getName)
+      fs.listStatus(root).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
+        .map(_.getPath).filterNot(p => keep(p.getName))
+        .foreach(p => try { fs.delete(p, true); () }
+          catch { case _: Throwable => () })
+    }
 
   private val CommitMarker = "_GRAFT_COMMIT"
 
@@ -827,14 +859,10 @@ object StreamingJobs {
       n: Int = 3, k: Int = 32, bands: Int = 8,
       compactAtFiles: Int = 64, compactTarget: Int = 4,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        incrementalNearDupBatch(batch, bid, textCol, idCol, storePath,
-          admittedDir, n, k, bands, compactAtFiles, compactTarget)
-      }
-      .start()
+    start(docs, checkpoint, trigger) { (batch: DataFrame, bid: Long) =>
+      incrementalNearDupBatch(batch, bid, textCol, idCol, storePath,
+        admittedDir, n, k, bands, compactAtFiles, compactTarget)
+    }
 
   /** One micro-batch of the streaming IVF-layout ingest (the foreachBatch
     * body of [[startIvfIngest]], exposed so the replay/crash spec can
@@ -1022,14 +1050,10 @@ object StreamingJobs {
       layoutPath: String, checkpoint: String,
       targetBytes: Long = 8L << 20, compactEvery: Int = 8,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    embeddings.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ivfIngestBatch(batch, bid, centroids, idCol, centroidIdCol, vecCol,
-          layoutPath, targetBytes, compactEvery)
-      }
-      .start()
+    start(embeddings, checkpoint, trigger) { (batch: DataFrame, bid: Long) =>
+      ivfIngestBatch(batch, bid, centroids, idCol, centroidIdCol, vecCol,
+        layoutPath, targetBytes, compactEvery)
+    }
 
   /** One micro-batch of the SELF-MAINTAINING IVF store: the drift-policy
     * composition of the whole r11 ops loop — ingest
@@ -1150,14 +1174,10 @@ object StreamingJobs {
       refresh: (DataFrame, DataFrame) => DataFrame = null,
       targetBytes: Long = 8L << 20, compactEvery: Int = 8,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    embeddings.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        ivfMaintainBatch(batch, bid, seedCentroids, idCol, centroidIdCol,
-          vecCol, layoutPath, driftQueries, qIdCol, k, nprobe,
-          driftEvery, driftThreshold, refresh, targetBytes, compactEvery)
-        ()
-      }
-      .start()
+    start(embeddings, checkpoint, trigger) { (batch: DataFrame, bid: Long) =>
+      ivfMaintainBatch(batch, bid, seedCentroids, idCol, centroidIdCol,
+        vecCol, layoutPath, driftQueries, qIdCol, k, nprobe,
+        driftEvery, driftThreshold, refresh, targetBytes, compactEvery)
+      ()
+    }
 }

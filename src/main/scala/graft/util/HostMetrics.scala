@@ -106,10 +106,17 @@ object HostMetrics {
     }
   }
 
+  /** Generated classes Janino has compiled in this JVM so far, driver and
+    * (in local mode) executor side together. Each compile is a cache miss
+    * of Spark's codegen cache, so a rising count across runs of one plan
+    * shape is code recompiled rather than reused. */
+  def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** One execution's wall seconds, hypervisor steal seconds accrued
-    * during it (-1 where the kernel has no steal field) and executor
-    * task-CPU seconds. */
-  final case class Timing(wall: Double, steal: Double, cpu: Double)
+    * during it (-1 where the kernel has no steal field), executor
+    * task-CPU seconds and the generated classes compiled during it. */
+  final case class Timing(wall: Double, steal: Double, cpu: Double, compiles: Long)
 
   /** Times `body`, then drops what it left behind: `clearCache` drops
     * SQL-cached relations but NOT localCheckpoint blocks
@@ -122,14 +129,16 @@ object HostMetrics {
   def timed(spark: SparkSession, cpu: TaskCpu)(body: => Unit): Timing = {
     val c0 = cpu.settled()
     val st0 = stealSec()
+    val k0 = codegenCompiles()
     val t0 = System.nanoTime()
     body
     val wall = (System.nanoTime() - t0) / 1e9
+    val compiles = codegenCompiles() - k0
     val st = stealSec()
     val cpuSec = (cpu.settled() - c0) / 1e9
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    Timing(wall, if (st0 < 0 || st < 0) -1.0 else st - st0, cpuSec)
+    Timing(wall, if (st0 < 0 || st < 0) -1.0 else st - st0, cpuSec, compiles)
   }
 
   /** Order-insensitive content signature: the sorted column names, the

@@ -92,4 +92,48 @@ class Scd2Spec extends AnyFunSuite {
     // closed rows are exactly the non-current ones
     assert(dim.filter(!col(Scd2.IsCurrent) && col(Scd2.EffectiveTo).isNull).isEmpty)
   }
+
+  test("the batch timestamp is exact to the microsecond, codegen'd or " +
+    "interpreted, and stays an expression in the optimized plan") {
+    import org.apache.spark.sql.Row
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:00.000001")
+    val t1 = Timestamp.valueOf("2024-06-01 12:34:56.123456")
+    def merged = Scd2.merge(
+      Scd2.initialize(snapshot(Seq((1L, "a", 10.0), (2L, "b", 20.0))), t0),
+      snapshot(Seq((1L, "a", 10.0), (2L, "b", 99.0), (3L, "c", 30.0))),
+      Seq("id"), Seq("name", "bal"), t1)
+    // what the literal-timestamp merge wrote
+    val want = Set(
+      Row(1L, "a", 10.0, t0, null, true),
+      Row(2L, "b", 20.0, t0, t1, false),
+      Row(2L, "b", 99.0, t1, null, true),
+      Row(3L, "c", 30.0, t1, null, true))
+    assert(merged.collect().toSet == want)
+    val interpreted = Map(
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN", "spark.sql.codegen.wholeStage" -> "false")
+    val prev = interpreted.keys.map(k => k -> spark.conf.getAll.get(k)).toMap
+    try {
+      interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+      assert(merged.collect().toSet == want)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+    val micros = org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(t1)
+    val bound = merged.queryExecution.optimizedPlan.collect { case p =>
+      p.expressions.exists(_.exists(_ == graft.functions.BoundTimestamp(micros)))
+    }
+    assert(bound.contains(true), "the batch timestamp was folded out of the plan")
+  }
+
+  test("a second merge of the same shape at a new batch timestamp compiles no new classes") {
+    val dim = Scd2.initialize(snapshot(Seq((1L, "a", 10.0), (2L, "b", 20.0))), ts("2024-01-01"))
+    val staged = snapshot(Seq((1L, "a", 11.0), (3L, "c", 30.0)))
+    def mergeAt(d: String) =
+      Scd2.merge(dim, staged, Seq("id"), Seq("name", "bal"), ts(d)).collect()
+    mergeAt("2024-02-01")
+    val c0 = graft.util.HostMetrics.codegenCompiles()
+    assert(mergeAt("2024-03-01").length == 4)
+    assert(graft.util.HostMetrics.codegenCompiles() - c0 == 0)
+  }
 }

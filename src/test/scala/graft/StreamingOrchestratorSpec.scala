@@ -206,6 +206,76 @@ class StreamingOrchestratorSpec extends AnyFunSuite {
     assert(e3.getMessage.contains("tempPath"))
   }
 
+  test("a rerun of a streaming SCD2 job reuses its generated code and " +
+    "leaves the caller's session conf as it was") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-sreuse").toString
+    val in = s"$base/in"
+    Files.createDirectories(java.nio.file.Paths.get(in))
+    val cfg = JobConfig.parse(
+      s"""{
+         |"jobName": "reuse",
+         |"mode": "streaming",
+         |"tempPath": "$base/ckpt",
+         |"inputs": [{"dataFrameName": "changes", "format": "parquet", "path": "$in",
+         |  "options": {"maxFilesPerTrigger": "1"},
+         |  "watermarkColumn": "ts", "watermarkDelay": "10 minutes"}],
+         |"validations": [
+         |  {"type": "nullValueCheck", "dataFrameName": "changes", "primaryKeys": ["id"]},
+         |  {"type": "duplicateRecordCheck", "dataFrameName": "changes",
+         |   "primaryKeys": ["id", "change_id"], "orderByCols": ["ts"]}],
+         |"transformations": [{"functionName": "stage", "outputDFName": "staged",
+         |  "sqlQuery": "SELECT id, change_id, ts, v FROM changes"}],
+         |"sinks": [
+         |  {"dataFrameName": "staged", "loadType": "scdType2Insert", "format": "parquet",
+         |   "path": "$base/dim", "scdKeys": ["id"], "scdTrackedCols": ["v"],
+         |   "options": {"scdBuckets": "4"}},
+         |  {"dataFrameName": "staged", "loadType": "simpleInsert", "savemode": "append",
+         |   "format": "deltalake", "path": "$base/audit"}],
+         |"errorSink": {"dataFrameName": "errors", "format": "parquet", "savemode": "append",
+         |  "path": "$base/errors"}
+         |}""".stripMargin)
+    // file f: keys 1-5 (a value change on two of them), one null key and
+    // one redelivered row the dedup drops
+    def land(f: Int): Unit = {
+      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime + f * 60000L
+      val rows = (1L to 5L).map(k => (Option(k), f * 10L + k,
+        new java.sql.Timestamp(t0 + k), if (k <= 2) s"v$f" else "v")) :+
+        ((Option.empty[Long], f * 10L + 9, new java.sql.Timestamp(t0), "null"))
+      (rows :+ rows.head).toDF("id", "change_id", "ts", "v")
+        .coalesce(1).write.mode("append").parquet(in)
+    }
+    val key = "spark.sql.artifact.isolation.enabled"
+    def run(): Int = {
+      val qs = new graft.run.StreamingOrchestrator(spark).run(cfg)
+      qs.foreach(_.awaitTermination())
+      qs.foreach(_.stop())
+      qs.foreach(q => q.exception.foreach(e => throw e))
+      qs.head.recentProgress.count(_.numInputRows > 0)
+    }
+    // first run: initialize plus two merges, so every stage shape exists
+    (0 until 3).foreach(land)
+    assert(spark.conf.getAll.get(key).isEmpty)
+    assert(run() == 3)
+    assert(spark.conf.getAll.get(key).isEmpty, s"run left $key set on the caller's session")
+    (3 until 5).foreach(land)
+    spark.conf.set(key, "true")
+    try {
+      val c0 = graft.util.HostMetrics.codegenCompiles()
+      val batches = run()
+      val compiles = graft.util.HostMetrics.codegenCompiles() - c0
+      assert(batches == 2)
+      assert(compiles <= 2L * batches,
+        s"rerun compiled $compiles generated classes over $batches micro-batches")
+      assert(spark.conf.getAll.get(key).contains("true"))
+    } finally spark.conf.unset(key)
+    val dim = graft.sources.VersionedParquet.read(spark, s"$base/dim")
+    assert(dim.filter(col("is_current")).count() == 5)
+    assert(dim.count() == 5 + 2 * 4) // two keys change in each of files 1-4
+    assert(spark.read.parquet(s"$base/errors").count() == 5)
+    assert(graft.sources.VersionedParquet.read(spark, s"$base/audit").count() == 25)
+  }
+
   test("unwatermarked aggregation in append mode fails fast, not silently") {
     val out = Files.createTempDirectory("graft-sscd").toString
     val cfg = JobConfig.parse(
