@@ -37,10 +37,10 @@ class Orchestrator(spark: SparkSession) {
 
   /** `commitToken`: stable identity of one logical pipeline-step execution
     * across its retry attempts (O2). When set (and `tempPath` exists), each
-    * sink that commits drops a marker file; a retry of the same token skips
-    * already-committed sinks, so a job that fails AFTER an append-mode sink
-    * committed doesn't re-append (duplicate) its rows on the next attempt
-    * (ADVICE r1 — SCD2 is merge-idempotent, simpleInsert append is not).
+    * sink and error write that commits drops a marker file; a retry of the
+    * same token skips already-committed writes, so a job that fails AFTER
+    * an append-mode sink committed doesn't re-append (duplicate) its rows
+    * on the next attempt (ADVICE r1 — SCD2 is merge-idempotent, simpleInsert append is not).
     * Markers are cleared when the run succeeds. */
   def run(cfg: JobConfig, commitToken: Option[String]): DataFrame =
     runHolding(cfg, commitToken)._1
@@ -53,7 +53,7 @@ class Orchestrator(spark: SparkSession) {
   private[run] def runHolding(cfg: JobConfig,
       commitToken: Option[String]): (DataFrame, Seq[DataFrame]) = {
     if (cfg.mode == "streaming") {
-      new StreamingOrchestrator(spark).runOnce(cfg)
+      new StreamingOrchestrator(spark).run(cfg).foreach { q => q.awaitTermination(); q.stop() }
       return (null, Nil)
     }
     cfg.sparkConfig.foreach { case (k, v) => spark.conf.set(k, v) }
@@ -73,7 +73,7 @@ class Orchestrator(spark: SparkSession) {
         Files.writeString(m.resolveSibling(s"${cfg.jobName}_SUCCESS"),
           java.time.Instant.now().toString)
       }
-      clearSinkMarkers(cfg, commitToken)
+      clearCommitMarkers(cfg, commitToken)
       (out, staged.toSeq)
     } catch {
       case e: Throwable => staged.foreach(Staging.release); throw e
@@ -96,53 +96,86 @@ class Orchestrator(spark: SparkSession) {
       in.dataFrameName -> cleaned
     }.toMap
 
+    // phase_2 — validations: one tagged frame per validated view, its rules in config order
+    val tagged = cfg.validations.map(_.dataFrameName).distinct.map { name =>
+      name -> cfg.validations.filter(_.dataFrameName == name)
+        .foldLeft(Validations.untagged(spark.table(name))) {
+          case (t, NullValueCheck(_, pks))          => Validations.tagNullKeys(t, pks)
+          case (t, DuplicateRecordCheck(_, pks, o)) => Validations.tagDuplicates(t, pks, o)
+        }
+    }
+    val last = runTagged(cfg, tagged, commitToken, None, staged)
+
+    cfg.archiveInput.foreach { a =>
+      cfg.inputs.flatMap(_.path).foreach(p =>
+        SinkWriter.archiveInput(p, a.archivePath, a.deleteSourceAfterArchival))
+    }
+    cfg.postExecutionScripts.foreach(runScript)
+    last.getOrElse(inputFrames.values.lastOption.orNull)
+  }
+
+  /** One micro-batch of a [[StreamingOrchestrator]] job: `batch` is the
+    * streamed input `name`, tagged when it is validated. The commit token
+    * `<identity>_<batchId>` lets a replay skip the writes it committed. */
+  private[run] def runMicroBatch(cfg: JobConfig, name: String, batch: DataFrame,
+      streamBatch: (Long, String)): Unit = {
+    val token = Some(s"${streamBatch._2}_${streamBatch._1}")
+    val tagged = if (cfg.validations.exists(_.dataFrameName == name)) Seq(name -> batch) else Nil
+    batch.createOrReplaceTempView(name)
+    val staged = mutable.ArrayBuffer.empty[DataFrame]
+    try {
+      runTagged(cfg, tagged, token, Some(streamBatch), staged)
+      clearCommitMarkers(cfg, token)
+    } finally staged.foreach(Staging.release)
+  }
+
+  /** The phases after tagging, shared by a batch step and each streaming
+    * micro-batch (`streamBatch` = its id and stream identity). Returns the
+    * last transformation's frame.
+    *
+    * Each tagged frame is staged once: the gate's counts, the error-sink
+    * rows, the re-registered good view and everything downstream read the
+    * staged blocks. The input is parsed once and shuffled for dedup once,
+    * and every consumer sees the same dedup tie-break decision. Staging is
+    * LocalCheckpoint, not persist(): re-registering the good view under the
+    * validated frame's name uncaches every cached plan that names the view,
+    * so the input was parsed again anyway; and a cache of the unaliased
+    * phase-1 frame, which survives that, raised the daily_pipeline
+    * benchmark's heap peak from ~218 MB to 264-292 MB. */
+  private def runTagged(cfg: JobConfig, tagged: Seq[(String, DataFrame)],
+      commitToken: Option[String], streamBatch: Option[(Long, String)],
+      staged: mutable.Buffer[DataFrame]): Option[DataFrame] = {
     // row counts this run has already taken, by view name: reconciliation
     // compares against them instead of recounting the batch
     val rows = mutable.HashMap.empty[String, Long]
-
-    // phase_2 — validations. Each validated frame becomes ONE tagged frame
-    // (its rules in config order, each setting a nullable error_reason on
-    // the rows it rejects) staged once: the gate's counts, the error-sink
-    // rows, the re-registered good view and everything downstream read
-    // the staged blocks. The input is parsed once and shuffled for dedup
-    // once, and every consumer sees the same dedup tie-break decision.
-    // Staging is LocalCheckpoint, not persist(): re-registering the good
-    // view under the validated frame's name uncaches every cached plan
-    // that names the view, so the input was parsed again anyway; and a
-    // cache of the unaliased phase-1 frame, which survives that, raised
-    // the daily_pipeline benchmark's heap peak from ~218 MB to 264-292 MB.
-    var goodTotal, badTotal = 0L
-    cfg.validations.map(_.dataFrameName).distinct.foreach { name =>
-      val tagged = Staging.LocalCheckpoint.stage(
-        cfg.validations.filter(_.dataFrameName == name)
-          .foldLeft(Validations.untagged(spark.table(name))) {
-            case (t, NullValueCheck(_, pks))          => Validations.tagNullKeys(t, pks)
-            case (t, DuplicateRecordCheck(_, pks, o)) => Validations.tagDuplicates(t, pks, o)
-          },
-        s"validated_$name")
-      staged += tagged
-      val counts = tagged.agg(count(lit(1)), count(col(Validations.ErrorReason))).head()
-      val nBad = counts.getLong(1)
-      val nGood = counts.getLong(0) - nBad
-      val routed = Validations.route(tagged)
-      if (nBad > 0) cfg.errorSink.foreach(es => SinkWriter.writeErrors(spark, routed.bad, cfg.jobName, es))
-      routed.good.createOrReplaceTempView(name)
-      rows(name) = nGood
-      goodTotal += nGood
-      badTotal += nBad
+    val routed = tagged.map { case (name, t) =>
+      val s = Staging.LocalCheckpoint.stage(t, s"validated_$name")
+      staged += s
+      val counts = s.agg(count(lit(1)), count(col(Validations.ErrorReason))).head()
+      rows(name) = counts.getLong(0) - counts.getLong(1)
+      (name, Validations.route(s), counts.getLong(1))
     }
     // threshold denominator: SURVIVING rows counted once per validated
     // frame, plus every rejected row
-    if (cfg.thresholdLimit.isDefined && cfg.validations.nonEmpty)
-      Validations.thresholdGate(goodTotal, badTotal, cfg.thresholdLimit.get)
+    if (routed.nonEmpty) cfg.thresholdLimit.foreach(Validations.thresholdGate(
+      routed.map(r => rows(r._1)).sum, routed.map(_._3).sum, _))
+    routed.zipWithIndex.foreach { case ((name, r, nBad), i) =>
+      // the error write commits under the token like a sink, so a retried
+      // attempt does not append the same rejected rows again
+      for (es <- cfg.errorSink if nBad > 0 && !committed(cfg, commitToken, s"err$i")) {
+        SinkWriter.writeErrors(spark, r.bad, cfg.jobName, es)
+        markCommitted(cfg, commitToken, s"err$i")
+      }
+      r.good.createOrReplaceTempView(name)
+    }
 
     // phase_2 — transformation chain (spark.json:54-65); sqlQuery may be
     // inline SQL or a .sql file path (spark.json:57); a step without SQL
     // dispatches its functionName to the named-operator registry
-    var last: DataFrame = inputFrames.values.lastOption.orNull
+    var last = Option.empty[DataFrame]
     cfg.transformations.foreach { t =>
       val out =
-        if (t.sqlQuery.nonEmpty) spark.sql(resolveSql(t.sqlQuery))
+        if (t.sqlQuery.nonEmpty) spark.sql(Orchestrator.resolveSql(t.sqlQuery))
         else TransformFunctions.dispatch(spark, t)
       // pre-flight plan lint: a typo'd join predicate is invisible at dev
       // scale and a cluster-week at 100 TB — catch it before execution.
@@ -176,20 +209,20 @@ class Orchestrator(spark: SparkSession) {
         case None => rows -= t.outputDFName; out
       }
       view.createOrReplaceTempView(t.outputDFName)
-      last = out
+      last = Some(out)
     }
 
     // phase_3 — sinks (fan-out persists once when several sinks share a
-    // frame; per-sink commit markers make the retry loop idempotent)
+    // frame, except in a micro-batch, whose stateless steps re-read its
+    // staged blocks; per-sink commit markers make the retry loop idempotent)
     cfg.sinks.zipWithIndex.groupBy(_._1.dataFrameName).foreach { case (name, sinksIdx) =>
       val df = spark.table(name)
-      val (done, pending) = sinksIdx.partition { case (_, i) =>
-        sinkMarker(cfg, commitToken, i).exists(Files.exists(_))
-      }
+      val (done, pending) = sinksIdx.partition { case (_, i) => committed(cfg, commitToken, s"sink$i") }
       done.foreach { case (s, i) =>
         System.err.println(s"[orchestrator] sink $name[$i] already committed in a prior attempt; skipping")
       }
-      val cached = if (pending.sizeIs > 1) df.persist() else df
+      val fanOut = pending.sizeIs > 1 && streamBatch.isEmpty
+      val cached = if (fanOut) df.persist() else df
       // the batch size every reconciled sink of this frame compares
       // against: a count this run already took, else one count (of the
       // fan-out cache, which is freed only after reconciliation)
@@ -204,27 +237,16 @@ class Orchestrator(spark: SparkSession) {
       }.toMap
       try {
         pending.foreach { case (s, i) =>
-          SinkWriter.write(spark, cached, s)
-          sinkMarker(cfg, commitToken, i).foreach { m =>
-            Files.createDirectories(m.getParent)
-            Files.writeString(m, java.time.Instant.now().toString)
-          }
+          SinkWriter.write(spark, cached, s, streamBatch)
+          markCommitted(cfg, commitToken, s"sink$i")
         }
         sinksIdx.filter(_._1.reconciliation).foreach { case (s, i) =>
           s.path.foreach(p => reconcileSink(name, batchRows, s, p, preStates.get(i)))
         }
-      } finally if (pending.sizeIs > 1) { cached.unpersist(); () }
+      } finally if (fanOut) { cached.unpersist(); () }
     }
-
-    cfg.archiveInput.foreach { a =>
-      cfg.inputs.flatMap(_.path).foreach(p =>
-        SinkWriter.archiveInput(p, a.archivePath, a.deleteSourceAfterArchival))
-    }
-    cfg.postExecutionScripts.foreach(runScript)
     last
   }
-
-  private def resolveSql(sql: String): String = Orchestrator.resolveSql(sql)
 
   private def isDeltaFormat(s: SinkSpec): Boolean =
     s.format == "delta" || s.format == "deltalake"
@@ -315,15 +337,26 @@ class Orchestrator(spark: SparkSession) {
       throw new IllegalStateException(s"reconciliation failed for sink $name → $p")
   }
 
-  /** Marker path for sink `i` of this (job, pipeline-step-execution): needs
-    * both a commit token and a tempPath to be trackable. */
-  private def sinkMarker(cfg: JobConfig, token: Option[String], i: Int): Option[java.nio.file.Path] =
+  /** Marker path for one write of this (job, pipeline-step-execution):
+    * sink `i` is `sink<i>`, the error write of the `i`-th validated frame
+    * `err<i>`. Needs both a commit token and a tempPath to be trackable. */
+  private def commitMarker(cfg: JobConfig, token: Option[String], part: String): Option[java.nio.file.Path] =
     for (t <- token; tmp <- cfg.tempPath)
-      yield Paths.get(tmp, "_commits", s"${cfg.jobName}_${t}_sink$i")
+      yield Paths.get(tmp, "_commits", s"${cfg.jobName}_${t}_$part")
 
-  private def clearSinkMarkers(cfg: JobConfig, token: Option[String]): Unit =
-    (0 until cfg.sinks.size).foreach(i =>
-      sinkMarker(cfg, token, i).foreach(Files.deleteIfExists(_)))
+  private def committed(cfg: JobConfig, token: Option[String], part: String): Boolean =
+    commitMarker(cfg, token, part).exists(Files.exists(_))
+
+  private def markCommitted(cfg: JobConfig, token: Option[String], part: String): Unit =
+    commitMarker(cfg, token, part).foreach { m =>
+      Files.createDirectories(m.getParent)
+      Files.writeString(m, java.time.Instant.now().toString)
+    }
+
+  private def clearCommitMarkers(cfg: JobConfig, token: Option[String]): Unit =
+    (cfg.sinks.indices.map(i => s"sink$i") ++
+      cfg.validations.map(_.dataFrameName).distinct.indices.map(i => s"err$i"))
+      .foreach(commitMarker(cfg, token, _).foreach(Files.deleteIfExists(_)))
 
   /** P3 duplicate-run guard (spark.json:8-9): marker-file check-and-create
     * under the temp path; caller releases the marker when the run ends, a

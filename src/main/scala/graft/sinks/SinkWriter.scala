@@ -27,8 +27,9 @@ object SinkWriter {
   /** Write `df` through the sink's load strategy. `streamBatch` is the
     * (micro-batch id, [[streamIdentity]]) pair of a foreachBatch body: an
     * scdType2Insert into a bucketed dimension carries it into
-    * [[scd2InsertPartitioned]]'s replay guard, every other load ignores
-    * it. Callers outside a stream pass neither value. */
+    * [[scd2InsertPartitioned]]'s replay guard, an ivfMaintainedIngest
+    * ([[ivfIngest]]) needs its batch id, every other load ignores it.
+    * Callers outside a stream pass neither value. */
   def write(spark: SparkSession, df: DataFrame, sink: SinkSpec,
       streamBatch: Option[(Long, String)] = None): Unit =
     writeLaid(spark, applyZOrder(df, sink), sink, streamBatch)
@@ -87,6 +88,8 @@ object SinkWriter {
         graft.operators.Upsert.upsert(spark, df,
           sink.path.getOrElse(sys.error(s"sink ${sink.dataFrameName} needs path")),
           sink.scdKeys)
+      case "ivfmaintainedingest" => ivfIngest(sink)(df, streamBatch.fold(
+        sys.error(s"sink ${sink.dataFrameName}: ivfMaintainedIngest runs only in streaming mode"))(_._1))
       case other            => sys.error(s"unknown loadType '$other'")
     }
     // W9 sftp sink (spark.json:83-87): push the written output to the
@@ -356,6 +359,71 @@ object SinkWriter {
       .map(v => graft.sources.VersionedParquet.commitMeta(path, v)
         .filter(_._1.startsWith("scd2BatchHwm")))
       .collectFirst { case m if m.nonEmpty => m }.getOrElse(Map.empty)
+
+  /** `loadType: "ivfMaintainedIngest"` — the drift-maintained IVF vector
+    * store ([[graft.streaming.StreamingJobs.ivfMaintainBatch]]) declared
+    * as an ordinary config sink of a streaming job; returns the ingest
+    * of one micro-batch under its id. The sink's `path` is the layout;
+    * the seed geometry and drift queries are BATCH parquet paths in
+    * `options` (they parameterize the store — they are not part of the
+    * stream):
+    *
+    * {{{
+    *   {"dataFrameName": "embeddings", "loadType": "ivfMaintainedIngest",
+    *    "path": "/stores/docs_ivf",
+    *    "options": {"centroidsPath": "/stores/seed_centroids",
+    *                "queriesPath": "/stores/drift_probes",
+    *                "driftEvery": "8", "driftThreshold": "0.05"}}
+    * }}}
+    *
+    * Column names and policy knobs mirror the Scala defaults key-for-key
+    * (idCol/centroidIdCol/vecCol/qIdCol, k, nprobe, driftEvery,
+    * driftThreshold, targetBytes, compactEvery); unknown keys and
+    * malformed numbers are LOUD config errors (a typo'd knob silently
+    * running the default is the config-surface bug class this registry
+    * bans). The refresh geometry is the library default (one exact Lloyd
+    * step); callers needing a custom re-quantizer use the Scala surface.
+    *
+    * Requires an explicit `tempPath`: the store's exactly-once watermark
+    * is keyed by MICRO-BATCH ID, which only a durable checkpoint keeps
+    * monotone across runs. With a fresh checkpoint every rerun, newly
+    * arrived files re-batch into already-committed bids and are silently
+    * skipped. A store is bound to one checkpoint lineage for its life;
+    * pointing a NEW checkpoint at an existing store is safe only as a
+    * full replay of the exact same input set. */
+  private[graft] def ivfIngest(s: SinkSpec): (DataFrame, Long) => Unit = {
+    val o = s.options
+    val allowed = Set("centroidsPath", "queriesPath", "idCol",
+      "centroidIdCol", "vecCol", "qIdCol", "k", "nprobe", "driftEvery",
+      "driftThreshold", "targetBytes", "compactEvery")
+    val unknown = o.keySet -- allowed
+    require(unknown.isEmpty,
+      s"ivfMaintainedIngest sink: unknown options ${unknown.toSeq.sorted.mkString(", ")} " +
+        s"— allowed: ${allowed.toSeq.sorted.mkString(", ")}")
+    def req(k: String) = o.getOrElse(k,
+      sys.error(s"ivfMaintainedIngest sink needs options.$k"))
+    def num[A](k: String, dflt: A, parse: String => A): A =
+      o.get(k).map(v => try parse(v.trim) catch {
+        case _: NumberFormatException =>
+          sys.error(s"ivfMaintainedIngest sink: options.$k = '$v' is not a number")
+      }).getOrElse(dflt)
+    val (centroids, queries) = (req("centroidsPath"), req("queriesPath"))
+    val layout = s.path.getOrElse(
+      sys.error("ivfMaintainedIngest sink needs a path (the layout dir)"))
+    val (k, nprobe, driftEvery, driftThreshold, targetBytes, compactEvery) =
+      (num("k", 10, _.toInt), num("nprobe", 3, _.toInt), num("driftEvery", 8, _.toInt),
+        num("driftThreshold", 0.05, _.toDouble), num("targetBytes", 8L << 20, _.toLong),
+        num("compactEvery", 8, _.toInt))
+    (batch, bid) => {
+      val read = batch.sparkSession.read
+      graft.streaming.StreamingJobs.ivfMaintainBatch(batch, bid, read.parquet(centroids),
+        o.getOrElse("idCol", "vec_id"), o.getOrElse("centroidIdCol", "centroid_id"),
+        o.getOrElse("vecCol", "embedding"), layout, read.parquet(queries),
+        o.getOrElse("qIdCol", "q_id"), k, nprobe, driftEvery, driftThreshold,
+        targetBytes = targetBytes, compactEvery = compactEvery)
+      ()
+    }
+  }
 
   /** W8 error-record sink (spark.json:97-101): `bad` frames already carry
     * `error_reason`; stamp the job + time and write with the same machinery.

@@ -1157,27 +1157,4 @@ object StreamingJobs {
       }
     }
   }
-
-  /** Streaming wrapper of [[ivfMaintainBatch]]: the ingest of
-    * [[startIvfIngest]] upgraded to the self-maintaining store — drift
-    * measured every `driftEvery` batches, rebuild triggered when the
-    * stale geometry costs more than `driftThreshold` mean recall@k.
-    * Policy contract, crash windows, and the store-owned-geometry rule:
-    * [[ivfMaintainBatch]]. */
-  def startIvfIngestWithMaintenance(embeddings: DataFrame,
-      seedCentroids: DataFrame,
-      idCol: String, centroidIdCol: String, vecCol: String,
-      layoutPath: String, checkpoint: String,
-      driftQueries: DataFrame, qIdCol: String,
-      k: Int = 10, nprobe: Int = 3,
-      driftEvery: Int = 8, driftThreshold: Double = 0.05,
-      refresh: (DataFrame, DataFrame) => DataFrame = null,
-      targetBytes: Long = 8L << 20, compactEvery: Int = 8,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    start(embeddings, checkpoint, trigger) { (batch: DataFrame, bid: Long) =>
-      ivfMaintainBatch(batch, bid, seedCentroids, idCol, centroidIdCol,
-        vecCol, layoutPath, driftQueries, qIdCol, k, nprobe,
-        driftEvery, driftThreshold, refresh, targetBytes, compactEvery)
-      ()
-    }
 }

@@ -181,6 +181,29 @@ class OrchestratorSpec extends AnyFunSuite {
     held.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
   }
 
+  test("the error write commits under the step's token: a retry after a " +
+      "failed sink does not append the rejected rows again") {
+    val dir = tmpDir()
+    val job = validatedCsvJob(dir, "50%")
+    // the sink refuses an existing target, so attempt 1 fails after the
+    // error write; attempt 2 finds the target gone
+    val cfg = job.copy(tempPath = Some(s"$dir/tmp"),
+      sinks = job.sinks.map(_.copy(loadType = "simpleInsert", savemode = "errorIfExists")))
+    Files.createDirectories(Paths.get(dir, "kept"))
+    Files.writeString(Paths.get(dir, "kept", "taken"), "")
+    var attempts = 0
+    new PipelineRunner(spark) {
+      override protected def runAttempt(c: JobConfig, token: Option[String]): Unit = {
+        attempts += 1
+        if (attempts == 2) graft.util.Fs.walk(Paths.get(dir, "kept")).reverse.foreach(Files.delete)
+        super.runAttempt(c, token)
+      }
+    }.run(Seq(PipelineStep("drop", cfg)))
+    assert(attempts == 2)
+    assert(spark.read.parquet(s"$dir/kept").count() == 11)
+    assert(spark.read.parquet(s"$dir/errors").count() == 9)
+  }
+
   test("count-validated transformation: staged once, so its input is read " +
       "once and the check takes the staged row count") {
     // no validations: only the transformation's own staging can keep the

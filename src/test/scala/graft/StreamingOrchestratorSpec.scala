@@ -94,10 +94,10 @@ class StreamingOrchestratorSpec extends AnyFunSuite {
       .withColumn("is_current", lit(true))
       .write.parquet(old)
     graft.util.Fs.walk(Paths.get(dim)).reverse.foreach(F.deleteIfExists(_))
-    val commit1 = Paths.get(s"$ckpt/scd_stream_sink0/commits/1")
+    val commit1 = Paths.get(s"$ckpt/scd_stream_checkpoint/commits/1")
     assert(F.exists(commit1), "batch 1 commit marker expected in checkpoint")
     F.delete(commit1)
-    F.deleteIfExists(Paths.get(s"$ckpt/scd_stream_sink0/commits/.1.crc"))
+    F.deleteIfExists(Paths.get(s"$ckpt/scd_stream_checkpoint/commits/.1.crc"))
 
     // restart: recovery must complete the interrupted swap, then the
     // replayed merge must be a no-op (same tracked hashes) — the
@@ -295,5 +295,116 @@ class StreamingOrchestratorSpec extends AnyFunSuite {
     // isn't what foreachBatch sinks use, so the engine should surface the
     // analysis error rather than hang
     intercept[Exception] { new Orchestrator(spark).run(cfg) }
+  }
+
+  test("one query per job: a micro-batch that fails after its append sink " +
+    "replays without writing the audit or error rows twice") {
+    import spark.implicits._
+    import graft.sources.VersionedParquet
+    val base = Files.createTempDirectory("graft-sreplay").toString
+    val in = s"$base/in"; val dim = s"$base/dim"
+    Files.createDirectories(java.nio.file.Paths.get(in))
+    val cfg = JobConfig.parse(
+      s"""{
+         |"jobName": "replay",
+         |"mode": "streaming",
+         |"tempPath": "$base/ckpt",
+         |"inputs": [{"dataFrameName": "changes", "format": "parquet", "path": "$in",
+         |  "options": {"maxFilesPerTrigger": "1"},
+         |  "watermarkColumn": "ts", "watermarkDelay": "10 minutes"}],
+         |"validations": [
+         |  {"type": "nullValueCheck", "dataFrameName": "changes", "primaryKeys": ["id"]},
+         |  {"type": "duplicateRecordCheck", "dataFrameName": "changes",
+         |   "primaryKeys": ["id", "change_id"], "orderByCols": ["ts"]}],
+         |"transformations": [{"functionName": "stage", "outputDFName": "staged",
+         |  "sqlQuery": "SELECT id, change_id, ts, v FROM changes"}],
+         |"sinks": [
+         |  {"dataFrameName": "staged", "loadType": "simpleInsert", "savemode": "append",
+         |   "format": "deltalake", "path": "$base/audit"},
+         |  {"dataFrameName": "staged", "loadType": "scdType2Insert", "format": "parquet",
+         |   "path": "$dim", "scdKeys": ["id"], "scdTrackedCols": ["v"],
+         |   "options": {"scdBuckets": "4"}}],
+         |"errorSink": {"dataFrameName": "errors", "format": "parquet", "savemode": "append",
+         |  "path": "$base/errors"}
+         |}""".stripMargin)
+    // two files of 7 rows: keys 1-5 (two of them changed in file 1), one
+    // null key, and one redelivered row the dedup drops
+    (0 until 2).foreach { f =>
+      val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime + f * 60000L
+      val rows = (1L to 5L).map(k => (Option(k), f * 10L + k,
+        new java.sql.Timestamp(t0 + k), if (k <= 2) s"v$f" else "v")) :+
+        ((Option.empty[Long], f * 10L + 9, new java.sql.Timestamp(t0), "null"))
+      (rows :+ rows.head).toDF("id", "change_id", "ts", "v")
+        .coalesce(1).write.mode("append").parquet(in)
+    }
+    // a raw non-empty directory at the dimension's path: the SCD2 sink
+    // refuses it after the audit sink and the error write committed
+    Files.createDirectories(java.nio.file.Paths.get(dim))
+    Files.writeString(java.nio.file.Paths.get(dim, "part-00000.parquet"), "raw")
+    val first = new graft.run.StreamingOrchestrator(spark).run(cfg)
+    assert(first.size == 1)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      first.head.awaitTermination())
+    assert(e.getMessage.contains("_graft_log"), e.getMessage)
+    assert(VersionedParquet.read(spark, s"$base/audit").count() == 5)
+    assert(spark.read.parquet(s"$base/errors").count() == 1)
+
+    // rerun on the same checkpoint: batch 0 replays and skips the writes
+    // it committed, batch 1 runs whole
+    graft.util.Fs.walk(java.nio.file.Paths.get(dim)).reverse.foreach(Files.delete)
+    val qs = new graft.run.StreamingOrchestrator(spark).run(cfg)
+    assert(qs.size == 1)
+    qs.head.awaitTermination()
+    qs.head.stop()
+    assert(qs.head.recentProgress.map(_.numInputRows).sum == 14)
+    val audit = VersionedParquet.read(spark, s"$base/audit")
+    assert(audit.count() == 10 && audit.select("change_id").distinct().count() == 10)
+    val errors = spark.read.parquet(s"$base/errors")
+    assert(errors.count() == 2 && errors.select("change_id").distinct().count() == 2)
+    assert(VersionedParquet.versions(dim).size == 2)
+    val dimRows = VersionedParquet.read(spark, dim)
+    assert(dimRows.count() == 5 + 2 && dimRows.filter(col("is_current")).count() == 5)
+  }
+
+  test("a watermarked window aggregation is refused before start, naming its step") {
+    val out = Files.createTempDirectory("graft-swin").toString
+    val cfg = JobConfig.parse(
+      s"""{
+         |"jobName": "stream_hourly",
+         |"mode": "streaming",
+         |"tempPath": "$out/ckpt",
+         |"inputs": [{"dataFrameName": "events", "format": "parquet", "path": "$eventsDir",
+         |  "watermarkColumn": "ts", "watermarkDelay": "1 day"}],
+         |"transformations": [{"functionName": "hourly", "outputDFName": "hourly_counts",
+         |  "sqlQuery": "SELECT window(ts, '1 hour') AS w, COUNT(*) AS n FROM events GROUP BY window(ts, '1 hour')"}],
+         |"sinks": [{"dataFrameName": "hourly_counts", "format": "parquet",
+         |  "path": "$out/counts", "savemode": "append"}]
+         |}""".stripMargin)
+    val e = intercept[RuntimeException](new Orchestrator(spark).run(cfg))
+    assert(e.getMessage.contains("'hourly_counts'") && e.getMessage.contains("Aggregate"),
+      e.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(out, "counts")))
+    assert(!Files.exists(java.nio.file.Paths.get(out, "ckpt", "stream_hourly_checkpoint")))
+  }
+
+  test("a checkpoint of the old per-sink query layout is refused, naming its " +
+    "path, with nothing written") {
+    val out = Files.createTempDirectory("graft-sold").toString
+    val old = java.nio.file.Paths.get(out, "ckpt", "stream_old_sink0")
+    Files.createDirectories(old.resolve("commits"))
+    Files.writeString(old.resolve("commits").resolve("0"), "v1")
+    val cfg = JobConfig.parse(
+      s"""{
+         |"jobName": "stream_old",
+         |"mode": "streaming",
+         |"tempPath": "$out/ckpt",
+         |"inputs": [{"dataFrameName": "events", "format": "parquet", "path": "$eventsDir"}],
+         |"sinks": [{"dataFrameName": "events", "format": "parquet",
+         |  "path": "$out/events", "savemode": "append"}]
+         |}""".stripMargin)
+    val e = intercept[IllegalArgumentException](new Orchestrator(spark).run(cfg))
+    assert(e.getMessage.contains(old.toString), e.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(out, "events")))
+    assert(graft.util.Fs.list(java.nio.file.Paths.get(out, "ckpt")) == Seq(old))
   }
 }
