@@ -34,10 +34,11 @@ object ColumnBridge {
 
   /** A local checkpoint of `df` whose `LogicalRDD` carries EXACT
     * statistics. One job over the lazily checkpointed RDD materializes its
-    * blocks and returns each partition's row count and `UnsafeRow` bytes;
-    * the `LogicalRDD` is rebuilt with those as its origin statistics,
-    * keeping its output, RDD, partitioning and ordering. An eager
-    * `localCheckpoint` runs the same one job but carries the origin
+    * blocks and returns each partition's row count, `UnsafeRow` bytes and
+    * per-column null counts; the `LogicalRDD` is rebuilt with those as its
+    * origin statistics (the null counts as column statistics that hold
+    * nothing else), keeping its output, RDD, partitioning and ordering.
+    * An eager `localCheckpoint` runs the same one job but carries the origin
     * plan's ESTIMATED statistics instead, which compound in loops that
     * read the previous stage twice (union + anti-join). */
   def localCheckpointWithStats(df: org.apache.spark.sql.Dataset[Row]): org.apache.spark.sql.DataFrame = {
@@ -46,17 +47,26 @@ object ColumnBridge {
     val cp = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].localCheckpoint(false)
     val lr = cp.logicalPlan.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
     val otherRowBytes = 8L + lr.output.map(_.dataType.defaultSize.toLong).sum
+    val width = lr.output.size
     val parts = lr.rdd.sparkContext.runJob(lr.rdd, (it: Iterator[InternalRow]) => {
       var rows, bytes = 0L
+      val nulls = new Array[Long](width)
       it.foreach { r =>
         rows += 1
         bytes += (r match { case u: UnsafeRow => u.getSizeInBytes.toLong; case _ => otherRowBytes })
+        var i = 0
+        while (i < width) { if (r.isNullAt(i)) nulls(i) += 1; i += 1 }
       }
-      (rows, bytes)
+      (rows, bytes, nulls)
     })
+    val nulls = parts.map(_._3).foldLeft(new Array[Long](width))((a, b) => a.lazyZip(b).map(_ + _))
     val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(
       sizeInBytes = BigInt(math.max(1L, parts.map(_._2).sum)),
-      rowCount = Some(BigInt(parts.map(_._1).sum)))
+      rowCount = Some(BigInt(parts.map(_._1).sum)),
+      attributeStats = org.apache.spark.sql.catalyst.expressions.AttributeMap(
+        lr.output.zip(nulls).map { case (a, n) =>
+          a -> org.apache.spark.sql.catalyst.plans.logical.ColumnStat(nullCount = Some(BigInt(n)))
+        }))
     val exact = org.apache.spark.sql.execution.LogicalRDD(
       lr.output, lr.rdd, lr.outputPartitioning, lr.outputOrdering,
       lr.isStreaming, lr.stream)(cp.sparkSession, Some(stats), Some(lr.constraints))

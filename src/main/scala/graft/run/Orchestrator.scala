@@ -1,7 +1,7 @@
 package graft.run
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.functions.col
 import graft.config._
 import graft.operators.Validations
 import graft.sinks.SinkWriter
@@ -104,7 +104,8 @@ class Orchestrator(spark: SparkSession) {
           case (t, DuplicateRecordCheck(_, pks, o)) => Validations.tagDuplicates(t, pks, o)
         }
     }
-    val last = runTagged(cfg, tagged, commitToken, None, staged)
+    val last = runTagged(cfg, tagged, commitToken, staged,
+      (df, s, _) => SinkWriter.write(spark, df, s))
 
     cfg.archiveInput.foreach { a =>
       cfg.inputs.flatMap(_.path).foreach(p =>
@@ -116,26 +117,33 @@ class Orchestrator(spark: SparkSession) {
 
   /** One micro-batch of a [[StreamingOrchestrator]] job: `batch` is the
     * streamed input `name`, tagged when it is validated. The commit token
-    * `<identity>_<batchId>` lets a replay skip the writes it committed. */
+    * `<identity>_<batchId>` lets a replay skip the writes it committed.
+    * `ivf` holds the ingest of each ivfMaintainedIngest sink, by sink
+    * index. */
   private[run] def runMicroBatch(cfg: JobConfig, name: String, batch: DataFrame,
-      streamBatch: (Long, String)): Unit = {
+      streamBatch: (Long, String), ivf: Map[Int, (DataFrame, Long) => Unit]): Unit = {
     val token = Some(s"${streamBatch._2}_${streamBatch._1}")
     val tagged = if (cfg.validations.exists(_.dataFrameName == name)) Seq(name -> batch) else Nil
     batch.createOrReplaceTempView(name)
     val staged = mutable.ArrayBuffer.empty[DataFrame]
     try {
-      runTagged(cfg, tagged, token, Some(streamBatch), staged)
+      runTagged(cfg, tagged, token, staged, (df, s, i) => ivf.get(i) match {
+        case Some(ingest) => ingest(df, streamBatch._1)
+        case None         => SinkWriter.write(spark, df, s, Some(streamBatch))
+      })
       clearCommitMarkers(cfg, token)
     } finally staged.foreach(Staging.release)
   }
 
   /** The phases after tagging, shared by a batch step and each streaming
-    * micro-batch (`streamBatch` = its id and stream identity). Returns the
-    * last transformation's frame.
+    * micro-batch, which differ only in how a sink writes (`write` gets the
+    * frame, the sink and its index). Returns the last transformation's
+    * frame.
     *
-    * Each tagged frame is staged once: the gate's counts, the error-sink
-    * rows, the re-registered good view and everything downstream read the
-    * staged blocks. The input is parsed once and shuffled for dedup once,
+    * Each tagged frame is staged once: the gate's counts come from the
+    * staging pass's own statistics, and the error-sink rows, the
+    * re-registered good view and everything downstream read the staged
+    * blocks. The input is parsed once and shuffled for dedup once,
     * and every consumer sees the same dedup tie-break decision. Staging is
     * LocalCheckpoint, not persist(): re-registering the good view under the
     * validated frame's name uncaches every cached plan that names the view,
@@ -143,17 +151,17 @@ class Orchestrator(spark: SparkSession) {
     * phase-1 frame, which survives that, raised the daily_pipeline
     * benchmark's heap peak from ~218 MB to 264-292 MB. */
   private def runTagged(cfg: JobConfig, tagged: Seq[(String, DataFrame)],
-      commitToken: Option[String], streamBatch: Option[(Long, String)],
-      staged: mutable.Buffer[DataFrame]): Option[DataFrame] = {
+      commitToken: Option[String], staged: mutable.Buffer[DataFrame],
+      write: (DataFrame, SinkSpec, Int) => Unit): Option[DataFrame] = {
     // row counts this run has already taken, by view name: reconciliation
     // compares against them instead of recounting the batch
     val rows = mutable.HashMap.empty[String, Long]
     val routed = tagged.map { case (name, t) =>
       val s = Staging.LocalCheckpoint.stage(t, s"validated_$name")
       staged += s
-      val counts = s.agg(count(lit(1)), count(col(Validations.ErrorReason))).head()
-      rows(name) = counts.getLong(0) - counts.getLong(1)
-      (name, Validations.route(s), counts.getLong(1))
+      // the staging pass counted the untagged rows: no job of its own
+      rows(name) = Staging.stagedNulls(s, Validations.ErrorReason)
+      (name, Validations.route(s), Staging.stagedRows(s) - rows(name))
     }
     // threshold denominator: SURVIVING rows counted once per validated
     // frame, plus every rejected row
@@ -213,16 +221,14 @@ class Orchestrator(spark: SparkSession) {
     }
 
     // phase_3 — sinks (fan-out persists once when several sinks share a
-    // frame, except in a micro-batch, whose stateless steps re-read its
-    // staged blocks; per-sink commit markers make the retry loop idempotent)
+    // frame; per-sink commit markers make the retry loop idempotent)
     cfg.sinks.zipWithIndex.groupBy(_._1.dataFrameName).foreach { case (name, sinksIdx) =>
       val df = spark.table(name)
       val (done, pending) = sinksIdx.partition { case (_, i) => committed(cfg, commitToken, s"sink$i") }
       done.foreach { case (s, i) =>
         System.err.println(s"[orchestrator] sink $name[$i] already committed in a prior attempt; skipping")
       }
-      val fanOut = pending.sizeIs > 1 && streamBatch.isEmpty
-      val cached = if (fanOut) df.persist() else df
+      val cached = if (pending.sizeIs > 1) df.persist() else df
       // the batch size every reconciled sink of this frame compares
       // against: a count this run already took, else one count (of the
       // fan-out cache, which is freed only after reconciliation)
@@ -237,13 +243,13 @@ class Orchestrator(spark: SparkSession) {
       }.toMap
       try {
         pending.foreach { case (s, i) =>
-          SinkWriter.write(spark, cached, s, streamBatch)
+          write(cached, s, i)
           markCommitted(cfg, commitToken, s"sink$i")
         }
         sinksIdx.filter(_._1.reconciliation).foreach { case (s, i) =>
           s.path.foreach(p => reconcileSink(name, batchRows, s, p, preStates.get(i)))
         }
-      } finally if (fanOut) { cached.unpersist(); () }
+      } finally if (pending.sizeIs > 1) { cached.unpersist(); () }
     }
     last
   }

@@ -1,8 +1,9 @@
 package graft.run
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate,
-  DeduplicateWithinWatermark, Distinct, FlatMapGroupsWithState, Join, Window}
+import org.apache.spark.sql.catalyst.plans.{InnerLike, LeftAnti, LeftOuter, LeftSemi, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical.{CTERelationDef, EventTimeWatermark, Filter,
+  Generate, Join, LeafNode, LogicalPlan, Project, ResolvedHint, SubqueryAlias, Union, View, WithCTE}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.config._
@@ -14,7 +15,9 @@ import graft.streaming.StreamingJobs
   * `"mode": "streaming"` reads the job's one file input as a stream and
   * starts ONE query, whose `foreachBatch` hands each micro-batch to the
   * batch [[Orchestrator]]'s phases, so the batch load strategies —
-  * including scdType2Insert — work per micro-batch.
+  * including scdType2Insert — work per micro-batch. `sql` inputs are
+  * static side views, bound when the query starts: its session, which
+  * each micro-batch runs in, is cloned from the caller's then.
   *
   * The stream plan keeps only what needs streaming state or every row,
   * in config order:
@@ -52,17 +55,21 @@ class StreamingOrchestrator(spark: SparkSession) {
       .filter(_.getFileName.toString.matches(s"\\Q${cfg.jobName}\\E_(sink|err)\\d+"))
     require(old.isEmpty, s"streaming job ${cfg.jobName}: ${old.mkString(", ")} is a " +
       "per-sink checkpoint of the old layout; finish those queries and remove it")
-    cfg.sinks.filter(_.loadType.equalsIgnoreCase("ivfMaintainedIngest")).foreach { s =>
-      require(cfg.tempPath.isDefined, "ivfMaintainedIngest sink needs an explicit " +
-        "tempPath: its exactly-once watermark is keyed by micro-batch id")
-      SinkWriter.ivfIngest(s)
-    }
+    // each store's options are parsed and its geometry bound once, here
+    val ivf = cfg.sinks.zipWithIndex.collect {
+      case (s, i) if s.loadType.equalsIgnoreCase("ivfMaintainedIngest") =>
+        require(cfg.tempPath.isDefined, "ivfMaintainedIngest sink needs an explicit " +
+          "tempPath: its exactly-once watermark is keyed by micro-batch id")
+        i -> SinkWriter.ivfIngest(spark, s)
+    }.toMap
 
-    // phase_1 — the one streamed input (schema from a batch probe)
-    val in = cfg.inputs match {
+    // phase_1 — the one streamed file input (schema from a batch probe);
+    // `sql` inputs are static views over the session's tables
+    val (static, streamed) = cfg.inputs.partition(_.format == "sql")
+    val in = streamed match {
       case Seq(in) => in
       case ins => sys.error(s"streaming job ${cfg.jobName} streams exactly one file input; " +
-        s"its inputs are: ${ins.map(_.dataFrameName).mkString(", ")}")
+        s"its file inputs are: ${ins.map(_.dataFrameName).mkString(", ")}")
     }
     val stream = in.format match {
       case f @ ("parquet" | "orc" | "json" | "csv" | "text") =>
@@ -80,14 +87,15 @@ class StreamingOrchestrator(spark: SparkSession) {
     }
     require(cfg.validations.forall(_.dataFrameName == in.dataFrameName),
       s"streaming validations must name the streamed input '${in.dataFrameName}'")
-    refuseStatefulSteps(cfg, in.dataFrameName, stream)
+    refuseStatefulSteps(cfg, in.dataFrameName, stream, static)
 
     val job = cfg.copy(tempPath = Some(tmp))
     val checkpoint = s"$tmp/${cfg.jobName}_checkpoint"
     val identity = SinkWriter.streamIdentity(checkpoint)
     Seq(StreamingJobs.start(validated(cfg, in, stream), checkpoint, trigger) {
       (batch: DataFrame, bid: Long) =>
-        new Orchestrator(batch.sparkSession).runMicroBatch(job, in.dataFrameName, batch, bid -> identity)
+        new Orchestrator(batch.sparkSession).runMicroBatch(
+          job, in.dataFrameName, batch, bid -> identity, ivf)
     })
   }
 
@@ -108,12 +116,20 @@ class StreamingOrchestrator(spark: SparkSession) {
   /** Refuses, naming the step, what a micro-batch would silently answer
     * differently: named-operator dispatch (batch-only — most registered
     * operators aggregate or join in ways a streaming plan can't express
-    * incrementally), and a step whose plan over the stream needs streaming
-    * state, which would see one micro-batch instead of the stream. The
-    * chain is analyzed in the caller's session, which each micro-batch's
-    * session is cloned from. */
-  private def refuseStatefulSteps(cfg: JobConfig, name: String, stream: DataFrame): Unit = {
+    * incrementally), and a step whose plan over the stream holds anything
+    * but row-at-a-time operators — an aggregate, dedup, window, limit or
+    * sort would see one micro-batch instead of the stream. The views are
+    * bound and the chain analyzed in the caller's session, which each
+    * micro-batch's session is cloned from. */
+  private def refuseStatefulSteps(cfg: JobConfig, name: String, stream: DataFrame,
+      static: Seq[InputSpec]): Unit = {
     stream.createOrReplaceTempView(name)
+    static.foreach { s =>
+      val side = graft.sources.SourceReader.read(spark, s)
+      require(!side.isStreaming, s"streaming input '${s.dataFrameName}': its sql reads " +
+        "the stream — declare it as a transformation")
+      side.createOrReplaceTempView(s.dataFrameName)
+    }
     cfg.transformations.foreach { t =>
       if (t.sqlQuery.isEmpty) sys.error(
         s"streaming transformation '${t.outputDFName}': functionName " +
@@ -121,13 +137,31 @@ class StreamingOrchestrator(spark: SparkSession) {
           "a sqlQuery, or run the job in batch mode")
       val out = spark.sql(Orchestrator.resolveSql(t.sqlQuery))
       out.queryExecution.analyzed.collectWithSubqueries {
-        case p @ (_: Aggregate | _: Distinct | _: Deduplicate | _: DeduplicateWithinWatermark |
-            _: Window | _: FlatMapGroupsWithState) if p.isStreaming => p.nodeName
-        case j: Join if j.left.isStreaming && j.right.isStreaming => "stream-stream Join"
+        case p if p.isStreaming && !StreamingOrchestrator.perRow(p) => p.nodeName
       }.headOption.foreach(node => sys.error(
-        s"streaming transformation '${t.outputDFName}': a stateful $node over the " +
-          "stream would answer per micro-batch — run the step in batch mode"))
+        s"streaming transformation '${t.outputDFName}': a $node over the stream " +
+          "would answer per micro-batch — run the step in batch mode"))
       out.createOrReplaceTempView(t.outputDFName)
     }
+  }
+}
+
+object StreamingOrchestrator {
+  /** A plan node over the stream whose answer on a micro-batch is its
+    * answer on the stream restricted to that batch's rows. A union or
+    * join is one when no static row is emitted with every batch: a union
+    * of streams only, a join with exactly one streaming side that pads
+    * no unmatched static row. */
+  private def perRow(p: LogicalPlan): Boolean = p match {
+    case _: LeafNode | _: Project | _: Filter | _: Generate | _: SubqueryAlias | _: View |
+        _: EventTimeWatermark | _: ResolvedHint | _: WithCTE | _: CTERelationDef => true
+    case u: Union => u.children.forall(_.isStreaming)
+    case j: Join => (j.joinType, j.left.isStreaming, j.right.isStreaming) match {
+      case (_: InnerLike, l, r)                           => l != r
+      case (LeftOuter | LeftSemi | LeftAnti, true, false) => true
+      case (RightOuter, false, true)                      => true
+      case _                                              => false
+    }
+    case _ => false
   }
 }

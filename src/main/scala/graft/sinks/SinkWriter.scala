@@ -27,9 +27,8 @@ object SinkWriter {
   /** Write `df` through the sink's load strategy. `streamBatch` is the
     * (micro-batch id, [[streamIdentity]]) pair of a foreachBatch body: an
     * scdType2Insert into a bucketed dimension carries it into
-    * [[scd2InsertPartitioned]]'s replay guard, an ivfMaintainedIngest
-    * ([[ivfIngest]]) needs its batch id, every other load ignores it.
-    * Callers outside a stream pass neither value. */
+    * [[scd2InsertPartitioned]]'s replay guard, every other load ignores
+    * it. Callers outside a stream pass neither value. */
   def write(spark: SparkSession, df: DataFrame, sink: SinkSpec,
       streamBatch: Option[(Long, String)] = None): Unit =
     writeLaid(spark, applyZOrder(df, sink), sink, streamBatch)
@@ -88,8 +87,8 @@ object SinkWriter {
         graft.operators.Upsert.upsert(spark, df,
           sink.path.getOrElse(sys.error(s"sink ${sink.dataFrameName} needs path")),
           sink.scdKeys)
-      case "ivfmaintainedingest" => ivfIngest(sink)(df, streamBatch.fold(
-        sys.error(s"sink ${sink.dataFrameName}: ivfMaintainedIngest runs only in streaming mode"))(_._1))
+      case "ivfmaintainedingest" => // a streaming job writes it through [[ivfIngest]]
+        sys.error(s"sink ${sink.dataFrameName}: ivfMaintainedIngest runs only in streaming mode")
       case other            => sys.error(s"unknown loadType '$other'")
     }
     // W9 sftp sink (spark.json:83-87): push the written output to the
@@ -361,37 +360,24 @@ object SinkWriter {
       .collectFirst { case m if m.nonEmpty => m }.getOrElse(Map.empty)
 
   /** `loadType: "ivfMaintainedIngest"` — the drift-maintained IVF vector
-    * store ([[graft.streaming.StreamingJobs.ivfMaintainBatch]]) declared
-    * as an ordinary config sink of a streaming job; returns the ingest
-    * of one micro-batch under its id. The sink's `path` is the layout;
-    * the seed geometry and drift queries are BATCH parquet paths in
-    * `options` (they parameterize the store — they are not part of the
-    * stream):
+    * store ([[graft.streaming.StreamingJobs.ivfMaintainBatch]]) as a config
+    * sink of a streaming job: returns the ingest of one micro-batch under
+    * its id, with the options checked and the seed and probe frames bound
+    * once, when the stream starts. `path` is the layout; `options` hold
+    * the BATCH parquet paths `centroidsPath` (seed geometry) and
+    * `queriesPath` (drift probes), and the Scala defaults' knobs key for
+    * key (idCol/centroidIdCol/vecCol/qIdCol, k, nprobe, driftEvery,
+    * driftThreshold, targetBytes, compactEvery). Unknown keys and
+    * malformed numbers are LOUD config errors: a typo'd knob must not
+    * silently run the default. The refresh geometry is the library
+    * default (one exact Lloyd step).
     *
-    * {{{
-    *   {"dataFrameName": "embeddings", "loadType": "ivfMaintainedIngest",
-    *    "path": "/stores/docs_ivf",
-    *    "options": {"centroidsPath": "/stores/seed_centroids",
-    *                "queriesPath": "/stores/drift_probes",
-    *                "driftEvery": "8", "driftThreshold": "0.05"}}
-    * }}}
-    *
-    * Column names and policy knobs mirror the Scala defaults key-for-key
-    * (idCol/centroidIdCol/vecCol/qIdCol, k, nprobe, driftEvery,
-    * driftThreshold, targetBytes, compactEvery); unknown keys and
-    * malformed numbers are LOUD config errors (a typo'd knob silently
-    * running the default is the config-surface bug class this registry
-    * bans). The refresh geometry is the library default (one exact Lloyd
-    * step); callers needing a custom re-quantizer use the Scala surface.
-    *
-    * Requires an explicit `tempPath`: the store's exactly-once watermark
-    * is keyed by MICRO-BATCH ID, which only a durable checkpoint keeps
-    * monotone across runs. With a fresh checkpoint every rerun, newly
-    * arrived files re-batch into already-committed bids and are silently
-    * skipped. A store is bound to one checkpoint lineage for its life;
-    * pointing a NEW checkpoint at an existing store is safe only as a
-    * full replay of the exact same input set. */
-  private[graft] def ivfIngest(s: SinkSpec): (DataFrame, Long) => Unit = {
+    * The job needs an explicit `tempPath`: the store's exactly-once
+    * watermark is keyed by MICRO-BATCH ID, which only a durable checkpoint
+    * keeps monotone across runs (a fresh one re-batches new files into
+    * committed ids, which are then skipped). A store is bound to one
+    * checkpoint lineage for its life. */
+  private[graft] def ivfIngest(spark: SparkSession, s: SinkSpec): (DataFrame, Long) => Unit = {
     val o = s.options
     val allowed = Set("centroidsPath", "queriesPath", "idCol",
       "centroidIdCol", "vecCol", "qIdCol", "k", "nprobe", "driftEvery",
@@ -407,7 +393,8 @@ object SinkWriter {
         case _: NumberFormatException =>
           sys.error(s"ivfMaintainedIngest sink: options.$k = '$v' is not a number")
       }).getOrElse(dflt)
-    val (centroids, queries) = (req("centroidsPath"), req("queriesPath"))
+    val (centroids, queries) =
+      (spark.read.parquet(req("centroidsPath")), spark.read.parquet(req("queriesPath")))
     val layout = s.path.getOrElse(
       sys.error("ivfMaintainedIngest sink needs a path (the layout dir)"))
     val (k, nprobe, driftEvery, driftThreshold, targetBytes, compactEvery) =
@@ -415,10 +402,9 @@ object SinkWriter {
         num("driftThreshold", 0.05, _.toDouble), num("targetBytes", 8L << 20, _.toLong),
         num("compactEvery", 8, _.toInt))
     (batch, bid) => {
-      val read = batch.sparkSession.read
-      graft.streaming.StreamingJobs.ivfMaintainBatch(batch, bid, read.parquet(centroids),
+      graft.streaming.StreamingJobs.ivfMaintainBatch(batch, bid, centroids,
         o.getOrElse("idCol", "vec_id"), o.getOrElse("centroidIdCol", "centroid_id"),
-        o.getOrElse("vecCol", "embedding"), layout, read.parquet(queries),
+        o.getOrElse("vecCol", "embedding"), layout, queries,
         o.getOrElse("qIdCol", "q_id"), k, nprobe, driftEvery, driftThreshold,
         targetBytes = targetBytes, compactEvery = compactEvery)
       ()

@@ -35,11 +35,13 @@ trait Staging {
 object Staging {
 
   /** Eager local checkpoint: executor-memory blocks, no durability. The
-    * one job that materializes the blocks also counts their rows and
-    * bytes, and the staged frame carries both as its statistics
+    * one job that materializes the blocks also counts their rows, bytes
+    * and per-column nulls, and the staged frame carries them as its
+    * statistics
     * ([[org.apache.spark.sql.graftbridge.ColumnBridge.localCheckpointWithStats]]).
     * Catalyst's join selection and [[broadcastIfSmall]] then see true
-    * sizes, read as [[stagedRows]] with no further job, and the statistics
+    * sizes, read as [[stagedRows]] and [[stagedNulls]] with no further
+    * job, and the statistics
     * cannot compound across a loop that joins each stage to the last. */
   object LocalCheckpoint extends Staging {
     override def stage(df: DataFrame, hint: String): DataFrame =
@@ -48,6 +50,13 @@ object Staging {
 
   /** The exact row count of a frame [[LocalCheckpoint]] staged. */
   def stagedRows(df: DataFrame): Long = df.queryExecution.optimizedPlan.stats.rowCount.get.toLong
+
+  /** The exact number of rows whose `column` is null in a frame
+    * [[LocalCheckpoint]] staged. */
+  def stagedNulls(df: DataFrame, column: String): Long =
+    df.queryExecution.optimizedPlan.stats.attributeStats
+      .collectFirst { case (a, s) if a.name == column => s.nullCount.get.toLong }
+      .getOrElse(sys.error(s"staged frame has no column $column"))
 
   /** `df` with a broadcast hint when its size is at most the session's
     * `spark.sql.autoBroadcastJoinThreshold` (−1 never broadcasts). Runs

@@ -582,4 +582,18 @@ class GuardsSpec extends AnyFunSuite {
     Staging.release(edges)
     Staging.release(visited)
   }
+
+  test("a staged frame's null counts are exact per column, from the staging job") {
+    import graft.util.Staging
+    val df = spark.range(0, 1000, 1, 4).select(col("id"),
+      when(col("id") % 7 === 0, lit("tagged")).as("reason"),
+      when(col("id") < 10, lit(null).cast("long")).otherwise(col("id")).as("x"))
+    val staged = Staging.LocalCheckpoint.stage(df, "nulls")
+    assert(Staging.stagedRows(staged) == 1000)
+    assert(Staging.stagedNulls(staged, "id") == 0)
+    assert(Staging.stagedNulls(staged, "reason") == 1000 - 143)
+    assert(Staging.stagedNulls(staged, "x") == 10)
+    assert(staged.filter(col("reason").isNull).count() == 1000 - 143)
+    Staging.release(staged)
+  }
 }

@@ -387,6 +387,62 @@ class StreamingOrchestratorSpec extends AnyFunSuite {
     assert(!Files.exists(java.nio.file.Paths.get(out, "ckpt", "stream_hourly_checkpoint")))
   }
 
+  test("a LIMIT, or a union with static rows, over the stream is refused " +
+    "before start, naming its step") {
+    Seq("SELECT event_id, user_id FROM events LIMIT 5" -> "Limit",
+      "SELECT event_id, user_id FROM events UNION ALL SELECT 0L, 0L" -> "Union").foreach {
+      case (sql, node) =>
+        val out = Files.createTempDirectory("graft-slimit").toString
+        val cfg = JobConfig.parse(
+          s"""{
+             |"jobName": "stream_top",
+             |"mode": "streaming",
+             |"tempPath": "$out/ckpt",
+             |"inputs": [{"dataFrameName": "events", "format": "parquet", "path": "$eventsDir"}],
+             |"transformations": [{"functionName": "first", "outputDFName": "first_events",
+             |  "sqlQuery": "$sql"}],
+             |"sinks": [{"dataFrameName": "first_events", "format": "parquet",
+             |  "path": "$out/first", "savemode": "append"}]
+             |}""".stripMargin)
+        val e = intercept[RuntimeException](new Orchestrator(spark).run(cfg))
+        assert(e.getMessage.contains("'first_events'") && e.getMessage.contains(node),
+          e.getMessage)
+        assert(!Files.exists(java.nio.file.Paths.get(out, "first")))
+    }
+  }
+
+  test("a sql input is a static side view: a stream-static join runs per micro-batch") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-sside").toString
+    val in = s"$base/in"
+    (0 until 2).foreach { f =>
+      (1L to 4L).map(k => (k, f * 10L + k)).toDF("id", "change_id")
+        .coalesce(1).write.mode("append").parquet(in)
+    }
+    val cfg = JobConfig.parse(
+      s"""{
+         |"jobName": "stream_side",
+         |"mode": "streaming",
+         |"tempPath": "$base/ckpt",
+         |"inputs": [
+         |  {"dataFrameName": "labels", "format": "sql",
+         |   "sql": "SELECT * FROM VALUES (1L, 'a'), (3L, 'c') AS t(id, label)"},
+         |  {"dataFrameName": "changes", "format": "parquet", "path": "$in",
+         |   "options": {"maxFilesPerTrigger": "1"}}],
+         |"transformations": [{"functionName": "label", "outputDFName": "labelled",
+         |  "sqlQuery": "SELECT c.change_id, l.label FROM changes c JOIN labels l ON c.id = l.id"}],
+         |"sinks": [{"dataFrameName": "labelled", "format": "parquet",
+         |  "path": "$base/out", "savemode": "append"}]
+         |}""".stripMargin)
+    val qs = new graft.run.StreamingOrchestrator(spark).run(cfg)
+    assert(qs.size == 1)
+    qs.head.awaitTermination()
+    qs.head.stop()
+    assert(qs.head.recentProgress.count(_.numInputRows > 0) == 2)
+    val got = spark.read.parquet(s"$base/out").as[(Long, String)].collect().sorted
+    assert(got.toSeq == Seq((1L, "a"), (3L, "c"), (11L, "a"), (13L, "c")))
+  }
+
   test("a checkpoint of the old per-sink query layout is refused, naming its " +
     "path, with nothing written") {
     val out = Files.createTempDirectory("graft-sold").toString
