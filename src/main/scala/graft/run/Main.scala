@@ -45,6 +45,7 @@ object Main {
       case (k, v) => builder = builder.config(k, v)
     })
     val spark = builder.getOrCreate()
+    graft.util.LocalFs.install(spark)
     spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOG", "WARN"))
 
     try {

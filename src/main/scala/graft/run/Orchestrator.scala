@@ -52,6 +52,7 @@ class Orchestrator(spark: SparkSession) {
     * retried attempt does not pile a second copy on top. */
   private[run] def runHolding(cfg: JobConfig,
       commitToken: Option[String]): (DataFrame, Seq[DataFrame]) = {
+    graft.util.LocalFs.install(spark)
     if (cfg.mode == "streaming") {
       new StreamingOrchestrator(spark).run(cfg).foreach { q => q.awaitTermination(); q.stop() }
       return (null, Nil)
@@ -272,22 +273,19 @@ class Orchestrator(spark: SparkSession) {
   /** The data files under a plain file target, with their lengths. Hidden
     * and metadata entries (`_SUCCESS`, `.crc`, `_temporary/`) are skipped,
     * as Spark's own file index skips them; `k=v` partition directories
-    * are data. */
+    * are data. The walk lists plain statuses: a located status
+    * (`listFiles`) loads each local file's permissions, one `ls` process
+    * per file. */
   private def dataFiles(p: String): Map[String, Long] = {
     val root = new org.apache.hadoop.fs.Path(p)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Map.empty
-    val top = fs.makeQualified(root)
     def hidden(n: String) = n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
-    val files = fs.listFiles(top, true)
-    val out = Map.newBuilder[String, Long]
-    while (files.hasNext) {
-      val f = files.next()
-      if (!Iterator.iterate(f.getPath)(_.getParent)
-          .takeWhile(q => q != null && q != top).exists(q => hidden(q.getName)))
-        out += f.getPath.toString -> f.getLen
-    }
-    out.result()
+    def walk(dir: org.apache.hadoop.fs.Path): Iterator[(String, Long)] =
+      fs.listStatus(dir).iterator.filterNot(s => hidden(s.getPath.getName)).flatMap { s =>
+        if (s.isDirectory) walk(s.getPath) else Iterator.single(s.getPath.toString -> s.getLen)
+      }
+    walk(fs.makeQualified(root)).toMap
   }
 
   /** V5 reconciliation re-read (ADVICE r1) against `batchRows`, the row

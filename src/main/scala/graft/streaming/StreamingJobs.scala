@@ -45,6 +45,7 @@ object StreamingJobs {
     * flipped value. */
   def start(stream: DataFrame, checkpoint: String, trigger: Trigger)(
       body: (DataFrame, Long) => Unit): StreamingQuery = {
+    graft.util.LocalFs.install(stream.sparkSession)
     val writer = stream.writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

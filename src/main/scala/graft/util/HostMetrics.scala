@@ -46,7 +46,7 @@ object HostMetrics {
     * verifies exactly what the bench times. */
   def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    SparkSession.builder()
+    val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -69,6 +69,8 @@ object HostMetrics {
       // mode at no code change (scale-deployment escape hatch).
       .config("spark.sql.ansi.enabled", sys.env.getOrElse("SPARK_GRAFT_ANSI", "false"))
       .getOrCreate()
+    LocalFs.install(s)
+    s
   }
 
   /** Executor task-CPU accounting: hypervisor steal stretches WALL time

@@ -49,7 +49,14 @@ object Staging {
   }
 
   /** The exact row count of a frame [[LocalCheckpoint]] staged. */
-  def stagedRows(df: DataFrame): Long = df.queryExecution.optimizedPlan.stats.rowCount.get.toLong
+  def stagedRows(df: DataFrame): Long = stagedRowCount(df).get
+
+  /** [[stagedRows]] when `df`'s plan carries a row count, as a frame
+    * [[LocalCheckpoint]] staged does; `None` for one [[PathStaging]]
+    * staged. A [[Staging]] whose frames carry a row count must carry the
+    * exact one. */
+  def stagedRowCount(df: DataFrame): Option[Long] =
+    df.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong)
 
   /** The exact number of rows whose `column` is null in a frame
     * [[LocalCheckpoint]] staged. */

@@ -844,7 +844,10 @@ object Graph {
     * plan for a frontier/visited set that big. An EMPTY frontier
     * short-circuits the remaining rounds outright — they would union
     * nothing (output identical), and at fixture scale those no-op rounds
-    * were real wall.
+    * were real wall. A round's frontier is the rows its stage added, so
+    * when both visited stages carry exact row counts
+    * ([[graft.util.Staging.stagedRowCount]]) the emptiness test is their
+    * difference and runs no job; otherwise it probes the frontier.
     * Synchronous frontiers make `dist` the true
     * BFS layer number: a node is labeled the FIRST round it is reached,
     * and the anti-join keeps later rounds from relabeling it. The
@@ -867,11 +870,12 @@ object Graph {
     val spark = edgesIn.sparkSession
     import spark.implicits._
     var frontier = seeds.toDF("node")
+    var frontierRows: Option[Long] = Some(seeds.size.toLong)
     var visited = staging.stage(frontier.withColumn("dist", lit(0L)), "bfs-v0")
     var h = 1
     var exhausted = false
     while (h <= maxHops && !exhausted) {
-      if (frontier.isEmpty) exhausted = true
+      if (frontierRows.fold(frontier.isEmpty)(_ == 0L)) exhausted = true
       else {
         val fSide = Staging.broadcastIfSmall(frontier.withColumnRenamed("node", "src"))
         val vSide = Staging.broadcastIfSmall(visited.select("node"))
@@ -880,8 +884,11 @@ object Graph {
           .select(col("dst").as("node")).distinct()
           .join(vSide, Seq("node"), "left_anti")
           .withColumn("dist", lit(h.toLong))
+        val before = visited
         visited = staging.stage(visited.unionByName(next), s"bfs-v$h")
         frontier = visited.filter(col("dist") === h).select("node")
+        frontierRows = for (n <- Staging.stagedRowCount(visited); b <- Staging.stagedRowCount(before))
+          yield n - b
         h += 1
       }
     }

@@ -798,4 +798,72 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(4)).sum
     assert(one === 0L, s"single-community q_num sum should be 0, got $one")
   }
+
+  test("bfsHops: exact staged counts test each frontier with no job, one job " +
+    "fewer per round, with the labels the probing path gives") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    // seed 1 reaches 2 and 3 at hop 1, 4 at hop 2, 5 at hop 3; at
+    // maxHops 5, rounds 2-5 test a frontier (round 5's is empty)
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L)).toDF("src", "dst")
+    /** LocalCheckpoint's blocks without their row count, as PathStaging
+      * stages: bfsHops probes each frontier with `isEmpty`. */
+    object Uncounted extends Staging {
+      override def stage(df: DataFrame, hint: String): DataFrame = {
+        val s = Staging.LocalCheckpoint.stage(df, hint)
+        s.sparkSession.createDataFrame(s.rdd, s.schema)
+      }
+    }
+    val group = "graph-spec-bfs-jobs"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Boolean] // is it a probe
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.add(e.stageInfos.exists(_.name.startsWith("isEmpty at"))); ()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.add(e.jobId); () }
+    }
+    // every event posted so far has reached the listener once a fence
+    // job's end has
+    def drain(): Unit = {
+      val f = spark.sparkContext.parallelize(Seq(1), 1).countAsync()
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration(60, "s"))
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!f.jobIds.forall(ended.contains) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(f.jobIds.forall(ended.contains), "listener bus did not drain")
+    }
+    /** The labels, and bfsHops's own jobs: all of them, and its probes. */
+    def run(st: Staging): (Seq[(Long, Long)], Int, Int) = {
+      jobs.clear()
+      spark.sparkContext.setJobGroup(group, "bfsHops jobs")
+      val out = try Graph.bfsHops(edges, "src", "dst", Seq(1L), maxHops = 5, staging = st)
+      finally spark.sparkContext.clearJobGroup()
+      drain()
+      val all = jobs.asScala.toSeq
+      (out.as[(Long, Long)].collect().toSeq.sorted, all.size, all.count(identity))
+    }
+    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Seq(prevThreshold, "-1").foreach { threshold =>
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        val (counted, countedJobs, countedProbes) = run(Staging.LocalCheckpoint)
+        val (probed, probedJobs, probes) = run(Uncounted)
+        assert(counted == Seq((1L, 0L), (2L, 1L), (3L, 1L), (4L, 2L), (5L, 3L)))
+        assert(probed == counted, s"threshold $threshold")
+        assert(countedProbes == 0, s"threshold $threshold")
+        // a probe is one job per round, more when its first partitions are empty
+        assert(probes >= 4, s"threshold $threshold: $probes probe jobs over 4 rounds")
+        // the unsized stages broadcast nothing; with no broadcasts the
+        // two runs differ by the probes alone
+        if (threshold == "-1")
+          assert(probedJobs - probes == countedJobs, s"$countedJobs jobs vs $probedJobs")
+      }
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    }
+  }
 }
