@@ -271,6 +271,30 @@ class OrchestratorSpec extends AnyFunSuite {
     assert(errs.columns.contains("error_reason") && errs.columns.contains("error_job"))
   }
 
+  test("a job aggregates without the row-based fast hash map, unless the " +
+      "session set that key itself") {
+    val key = "spark.sql.codegen.aggregate.map.twolevel.enabled"
+    def fastMap(s: org.apache.spark.sql.SparkSession): Boolean = {
+      s.conf.set("spark.sql.adaptive.enabled", "false")
+      val agg = s.read.parquet(s"$sf/orders.parquet").groupBy("o_custkey").count()
+      org.apache.spark.sql.execution.debug.codegenString(agg.queryExecution.executedPlan)
+        .contains("FastHashMap")
+    }
+    def job(out: String) = JobConfig.parse(
+      s"""{"jobName": "one_page_agg",
+         |"inputs": [{"dataFrameName": "orders", "format": "parquet", "path": "$sf/orders.parquet"}],
+         |"sinks": [{"dataFrameName": "orders", "format": "parquet", "path": "$out/orders",
+         |           "savemode": "overwrite"}]}""".stripMargin)
+    val fresh = spark.newSession()
+    assert(fastMap(fresh), "Spark's default plan no longer has a fast hash map to turn off")
+    new Orchestrator(fresh).run(job(tmpDir()))
+    assert(fresh.conf.get(key) == "false" && !fastMap(fresh))
+    val chosen = spark.newSession()
+    chosen.conf.set(key, "true")
+    new Orchestrator(chosen).run(job(tmpDir()))
+    assert(chosen.conf.get(key) == "true" && fastMap(chosen))
+  }
+
   test("append sinks reconcile against the written delta, not the whole target") {
     val out = tmpDir()
     def cfg(sinkJson: String) = JobConfig.parse(
