@@ -279,50 +279,22 @@ object SinkWriter {
     * replayed from the checkpoint.
     *
     * Streaming replays (`streamBatch` = (foreachBatch id, stream identity
-    * from [[streamIdentity]])): each commit carries the
-    * identity-qualified monotone high-watermark `scd2BatchHwm.<identity>
-    * = max(batchId, prev hwm)` in its manifest meta; a batch of the SAME
-    * identity at or below its watermark has completed WHOLE (micro-batch
-    * ids are strictly increasing within one checkpoint lineage and
-    * foreachBatch runs sequentially) and is skipped — one manifest-meta
-    * read, no Spark job (the [[graft.streaming.StreamingJobs
-    * .incrementalNearDupBatch]] contract, including its backward scan
-    * past untagged maintenance commits). An UNKNOWN identity — a restart
-    * with a fresh checkpoint (batch ids reset to 0) or a second query
-    * writing the same dimension — starts at watermark −1 and merges
-    * everything. Every commit re-carries ALL identities' watermarks, so
-    * interleaved writers and batch merges can't bury each other's replay
-    * state. Residual (and safe) race: two DIFFERENT identities committing
-    * concurrently can re-carry each other's watermark one commit stale —
-    * a replayed batch then re-merges, which is content-idempotent, and a
-    * batch of NEW data is never skipped, because an identity's own
-    * watermark only ever advances through its own strictly-sequential
-    * stream. */
+    * from [[streamIdentity]])): each commit carries the stream replay
+    * watermark of [[graft.sources.VersionedParquet.batchMeta]], and a
+    * batch that [[graft.sources.VersionedParquet.batchCommitted]] reports
+    * committed is skipped whole — one manifest-meta read, no Spark job.
+    * The watermark is identity-qualified: a restart with a fresh
+    * checkpoint (batch ids reset to 0) or a second query writing the
+    * same dimension merges everything, and a replay re-merge is
+    * content-idempotent anyway. */
   def scd2InsertPartitioned(spark: SparkSession, staged: DataFrame, sink: SinkSpec,
       nBuckets: Int, midCommitHook: () => Unit = () => (),
       streamBatch: Option[(Long, String)] = None): Unit = {
     import graft.sources.VersionedParquet
     val path = sink.path.getOrElse(sys.error("scd2 sink needs path"))
-    require(Files.exists(Paths.get(path, "_graft_log")) ||
-      !graft.util.Fs.nonEmptyDir(Paths.get(path)),
-      s"scd2 sink ${sink.dataFrameName}: $path is a non-empty directory " +
-        "without a _graft_log — a raw-layout dimension, which partitioned " +
-        "SCD2 no longer writes; migrate it into a VersionedParquet table " +
-        "or point the sink at a new path")
-    def hwmOf(m: Map[String, String], id: String): Long =
-      m.get(s"scd2BatchHwm.$id").flatMap(s => scala.util.Try(s.toLong).toOption)
-        .getOrElse(-1L)
+    VersionedParquet.requireVersioned(path, s"scd2 sink ${sink.dataFrameName}")
     // replay guard first: one manifest read, before any Spark job
-    if (streamBatch.exists { case (b, id) => b <= hwmOf(scd2HwmMap(path), id) }) return
-    // all identities' watermarks ride every commit so maintenance commits
-    // (or merges of other identities) can't bury them; this identity's
-    // entry advances to max(batchId, previous)
-    def hwmMeta(): Map[String, String] = {
-      val hm = scd2HwmMap(path)
-      streamBatch.fold(hm) { case (b, id) =>
-        hm + (s"scd2BatchHwm.$id" -> math.max(b, hwmOf(hm, id)).toString)
-      }
-    }
+    if (streamBatch.exists(VersionedParquet.batchCommitted(path, _))) return
     val batchTs = java.sql.Timestamp.from(java.time.Instant.now())
     val stagedB = staged.withColumn("scd_bucket", Scd2.bucketCol(sink.scdKeys, nBuckets))
     if (VersionedParquet.versions(path).isEmpty) {
@@ -331,8 +303,8 @@ object SinkWriter {
       // and fail with an unresolved-column puzzle instead of initializing
       // (ADVICE r13) — mirror the merge branch's empty-batch no-op
       if (staged.isEmpty) return
-      VersionedParquet.writePartitioned(
-        Scd2.initialize(stagedB, batchTs), path, "scd_bucket", hwmMeta())
+      VersionedParquet.writePartitioned(Scd2.initialize(stagedB, batchTs), path,
+        "scd_bucket", VersionedParquet.batchMeta(path, streamBatch))
     } else {
       val touched = stagedB.select("scd_bucket").distinct()
         .collect().map(_.getInt(0)).toSeq.sorted.map(_.toString)
@@ -342,22 +314,9 @@ object SinkWriter {
         VersionedParquet.readPartitions(spark, path, touched, Some(base)),
         stagedB, sink.scdKeys, sink.scdTrackedCols, batchTs)
       VersionedParquet.overwritePartitions(merged, path, "scd_bucket",
-        touched, Some(base), hwmMeta(), midCommitHook)
+        touched, Some(base), VersionedParquet.batchMeta(path, streamBatch), midCommitHook)
     }
   }
-
-  /** All replay watermarks of a versioned dimension: every meta entry
-    * whose key starts with `scd2BatchHwm`, read from the newest manifest
-    * that carries ANY of them — one backward scan, so an untagged
-    * maintenance commit can't reset the replay state. Complete by
-    * induction: every SCD2 commit re-carries the full map, so the newest
-    * tagged manifest holds every identity's newest watermark. Empty when
-    * the dimension has never seen a tagged commit. */
-  private def scd2HwmMap(path: String): Map[String, String] =
-    graft.sources.VersionedParquet.versions(path).reverse.iterator
-      .map(v => graft.sources.VersionedParquet.commitMeta(path, v)
-        .filter(_._1.startsWith("scd2BatchHwm")))
-      .collectFirst { case m if m.nonEmpty => m }.getOrElse(Map.empty)
 
   /** `loadType: "ivfMaintainedIngest"` — the drift-maintained IVF vector
     * store ([[graft.streaming.StreamingJobs.ivfMaintainBatch]]) as a config

@@ -68,11 +68,19 @@ object VersionedParquet {
       .map(_.getFileName.toString).filter(_.endsWith(".json"))
       .map(_.stripSuffix(".json").toLong).sorted
 
+  /** The data files of `version`, as full paths. A manifest lists each
+    * file relative to the table root (`data/c-<uuid>/...`), so a copied
+    * or moved table reads its own files; this resolver is the one place
+    * that turns entries back into paths, and every consumer sees the same
+    * strings. Entries written before that (absolute, or prefixed by the
+    * table path as its writer gave it) are kept as they are. */
   private def manifestFiles(path: String, version: Long): Seq[String] = {
     val txt = new String(Files.readAllBytes(logDir(path).resolve(s"$version.json")), "UTF-8")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.readTree(txt)
-    node.get("files").elements().asScala.map(_.asText()).toSeq
+    node.get("files").elements().asScala.map(_.asText()).map { f =>
+      if (f.startsWith("data/")) Paths.get(path).resolve(f).toString else f
+    }.toSeq
   }
 
   /** Number of data files in the latest committed snapshot — the signal
@@ -152,9 +160,9 @@ object VersionedParquet {
     * snapshot-sized delta; schedule compaction right after a refresh.
     * The compacted commit CARRIES FORWARD the replaced snapshot's commit
     * metadata verbatim: compaction is a physical rewrite of the same
-    * logical snapshot, and consumers that key replay/watermark state off
-    * the newest version's meta (the streaming near-dedup's
-    * `streamBatchHwm`) must not lose it to a maintenance op. */
+    * logical snapshot, and the stream replay watermark ([[batchMeta]])
+    * that the streaming near-dedup reads off the newest tagged version
+    * must not be lost to a maintenance op. */
   def compact(spark: SparkSession, path: String, targetFiles: Int = 1,
       midCommitHook: () => Unit = () => ()): Unit = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
@@ -195,7 +203,8 @@ object VersionedParquet {
   }
 
   /** Drop history: delete manifests older than the last `keepVersions`
-    * commits and every data file no surviving manifest references. The
+    * commits and every data file below `<path>/data` that no surviving
+    * manifest references (an entry outside it is another table's). The
     * storage-reclamation sibling of [[compact]] — after it, time travel
     * reaches only the kept versions. Runs driver-side (file listing +
     * deletes); at object-store scale the same walk batches into bulk
@@ -225,8 +234,19 @@ object VersionedParquet {
     val (dead, referenced) = withCommitLock(path) {
       val vs = versions(path)
       val (dropped, kept) = vs.splitAt((vs.size - keepVersions).max(0))
+      // a file belongs to this table only below <table>/data, attributed
+      // to the data dir named by its first segment there: a `/data/`
+      // higher up (a table under a directory named `data`) must not
+      // count, or every live dir orphans; and an absolute entry of a
+      // copied table names the ORIGINAL's file, which is not ours to delete
+      val root = Paths.get(path, "data").toAbsolutePath.normalize
+      def below(f: String): Option[java.nio.file.Path] = {
+        val p = Paths.get(f).toAbsolutePath.normalize
+        if (p.startsWith(root) && p != root) Some(root.relativize(p)) else None
+      }
       val keptFiles = kept.flatMap(manifestFiles(path, _)).toSet
-      val dead = dropped.flatMap(manifestFiles(path, _)).toSet -- keptFiles
+      val dead = (dropped.flatMap(manifestFiles(path, _)).toSet -- keptFiles)
+        .filter(below(_).nonEmpty)
       dropped.foreach(v => Files.deleteIfExists(logDir(path).resolve(s"$v.json")))
       // metadata strays a crashed commit/reclaimer left in the log dir
       // (.N.staging manifests, .commit.lock.reclaim-* renames) — tiny
@@ -239,10 +259,7 @@ object VersionedParquet {
         .filter(p => scala.util.Try(System.currentTimeMillis() -
           Files.getLastModifiedTime(p).toMillis > staleLockMs).getOrElse(false))
         .foreach(Files.deleteIfExists)
-      val referenced = keptFiles.flatMap { f =>
-        val i = f.indexOf("/data/")
-        if (i < 0) None else Some(f.substring(i + 6).takeWhile(_ != '/'))
-      }
+      val referenced = keptFiles.flatMap(below(_).map(_.getName(0).toString))
       (dead, referenced)
     }
     // Phase 2 — outside the lock: bulk data-file deletes + the orphan
@@ -285,6 +302,73 @@ object VersionedParquet {
       m.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
     }.getOrElse(Map.empty)
   }
+
+  /** Manifest-meta key prefix of the stream replay watermark,
+    * `<prefix>.<identity> = highest committed micro-batch id`. It keeps
+    * the name of its first user, partitioned SCD2, because dimensions
+    * written before the watermark moved here carry exactly this key:
+    * renaming it would reset their replay state. */
+  private val ReplayHwm = "scd2BatchHwm"
+
+  /** Every identity's replay watermark: the watermark entries of the
+    * newest manifest that carries meta — one backward scan, so an untagged
+    * commit (a plain write, an older compaction) can't reset the replay
+    * state. Complete by induction: every tagged commit re-carries the
+    * whole map ([[batchMeta]]). A newest tagged manifest whose meta holds
+    * no watermark was tagged by another replay protocol; guessing which
+    * batches it committed could skip new data or clobber committed
+    * output, so it is refused. */
+  private def replayHwms(path: String): Map[String, String] =
+    versions(path).reverse.iterator.map(v => v -> commitMeta(path, v))
+      .collectFirst { case (v, m) if m.nonEmpty =>
+        val hwms = m.filter(_._1.startsWith(ReplayHwm))
+        require(hwms.nonEmpty,
+          s"versioned table $path: its newest tagged commit (version $v) " +
+            s"carries ${m.keys.toSeq.sorted.mkString(", ")} but no " +
+            s"$ReplayHwm.<identity> replay watermark — it was tagged by an " +
+            "older replay protocol; start a new store at a new path")
+        hwms
+      }.getOrElse(Map.empty)
+
+  private def hwmOf(hwms: Map[String, String], identity: String): Long =
+    hwms.get(s"$ReplayHwm.$identity").flatMap(s => scala.util.Try(s.toLong).toOption)
+      .getOrElse(-1L)
+
+  /** Has micro-batch `batchId` of the stream `identity`
+    * ([[graft.sinks.SinkWriter.streamIdentity]]) committed to `path`?
+    * True at or below the identity's watermark: micro-batch ids increase
+    * strictly within one checkpoint lineage and foreachBatch runs batches
+    * in order, so such a batch completed WHOLE. An unknown identity (a
+    * fresh checkpoint, whose ids restart at 0, or a second query) has
+    * committed nothing. One manifest-meta read, no Spark job. */
+  def batchCommitted(path: String, batch: (Long, String)): Boolean =
+    batch._1 <= hwmOf(replayHwms(path), batch._2)
+
+  /** Commit meta for a write that carries `batch`: every identity's
+    * watermark re-carried, so commits of other identities (or plain
+    * merges, `batch = None`) can't bury them, and this identity's entry
+    * advanced to `max(batchId, previous)`. Residual, safe race: two
+    * identities committing concurrently can re-carry each other's entry
+    * one commit stale; a replay then re-runs (harmless for idempotent
+    * writers), and new data is never skipped, because an identity's own
+    * entry only advances through its own sequential stream. */
+  def batchMeta(path: String, batch: Option[(Long, String)]): Map[String, String] = {
+    val hwms = replayHwms(path)
+    batch.fold(hwms) { case (b, id) =>
+      hwms + (s"$ReplayHwm.$id" -> math.max(b, hwmOf(hwms, id)).toString)
+    }
+  }
+
+  /** Refuse a non-empty directory without a `_graft_log` (a raw-layout
+    * store, such as an unversioned dimension or a sketch store an older
+    * build wrote): committing a versioned table over it would hide its
+    * rows from every read. */
+  private[graft] def requireVersioned(path: String, what: String): Unit =
+    require(Files.exists(logDir(path)) || !graft.util.Fs.nonEmptyDir(Paths.get(path)),
+      s"$what: $path is a non-empty directory without a _graft_log — a " +
+        "raw-layout store, whose rows a versioned commit over it would hide " +
+        "from every read; migrate it into a VersionedParquet table or point " +
+        "the job at a new path")
 
   def write(df: DataFrame, path: String, mode: String): Unit =
     write(df, path, mode, Map.empty[String, String])
@@ -617,7 +701,14 @@ object VersionedParquet {
         if (meta.isEmpty) ""
         else meta.toSeq.sorted.map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
           .mkString(""", "meta": {""", ",", "}")
+      // entries relative to the table root ([[manifestFiles]] resolves
+      // them); a carried entry from outside the root stays as it was
+      val root = Paths.get(path)
       val manifest = (carry ++ newFiles)
+        .map { f =>
+          val p = Paths.get(f)
+          if (p.startsWith(root)) root.relativize(p).toString else f
+        }
         .map(f => "\"" + esc(f) + "\"")
         .mkString("""{"version": """ + next + """, "files": [""", ",", "]" + metaJson + "}")
       val staged = Files.createTempFile(logDir(path), s".$next", ".staging")

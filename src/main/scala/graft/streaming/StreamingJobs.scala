@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.config.SinkSpec
 import graft.sinks.SinkWriter
+import graft.sources.VersionedParquet
 
 /** Streaming extension (SURVEY.md §2.8, mandated by the north star — the
   * reference itself is batch-only, deploy.yaml:13 schedules reruns). Design:
@@ -619,39 +620,17 @@ object StreamingJobs {
 
   /** Streaming distinct-count via HLL registers: each micro-batch's
     * register rows ([[graft.x.Sketches.hllRegisters]]) are merged into a
-    * parquet register STORE by `max(mj)` per (group, j) — the idempotent,
+    * register STORE by `max(mj)` per (group, j) — the idempotent,
     * lossless merge the register representation exists for. State is the
     * store itself (≤ groups × 2^b rows), NOT streaming state: no
     * watermark needed, the merge is associative and commutative, and a
     * replayed batch can only re-assert maxima it already set, so the
     * store is exactly-once-correct under at-least-once foreachBatch
-    * (contrast a count store, where replays double-count — the same
-    * reasoning as the SCD2 foreachBatch merge above).
-    * [[graft.x.Sketches.hllEstimateFromRegisters]] over the store gives
-    * the running estimate at any time, equal to the batch sketch of
-    * everything ingested so far.
-    *
-    * Crash-safety: the store is a directory of numbered GENERATIONS
-    * (`gen=00000007/` parquet dirs); each batch writes the merged
-    * registers as a brand-new generation and never touches the prior one,
-    * so there is no window where a failure loses the store (the old
-    * rewrite-in-place had one: overwrite deletes before it copies). A
-    * generation COMMITS by an explicit `_GRAFT_COMMIT` marker written
-    * after its parquet job returns — the store does not depend on the
-    * committer's `_SUCCESS` (disabled by the common object-store override
-    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false`), though a
-    * pre-existing `_SUCCESS`-only generation (written by an older build)
-    * still counts as committed. The current state is the highest committed
-    * generation; a torn write leaves a markerless directory that readers
-    * and the next batch ignore and GC later removes. Replays after a
-    * crash re-merge into a fresh generation; max-merge makes that a
-    * no-op. A LEGACY store (flat parquet files from the old
-    * rewrite-in-place layout) is adopted in place as `gen=00000001` on
-    * first touch, so upgrading never silently drops accumulated state.
-    * GC keeps the new + one prior committed generation and best-effort
-    * deletes everything else, torn directories included. All path
-    * operations go through the Hadoop FileSystem of `storeDir`, so an
-    * object-store or HDFS store path behaves identically to local disk. */
+    * (contrast a count store, where replays double-count).
+    * [[graft.x.Sketches.hllEstimateFromRegisters]] over
+    * `VersionedParquet.read(storeDir)` gives the running estimate at any
+    * time, equal to the batch sketch of everything ingested so far.
+    * Store layout and crash safety: [[startMergedSketchStore]]. */
   def startHllRegisterStore(stream: DataFrame, groupCols: Seq[String],
       valueCol: String, storeDir: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
@@ -664,11 +643,10 @@ object StreamingJobs {
   /** The bitmap sibling of [[startHllRegisterStore]] — EXACT streaming
     * distinct over non-negative integer ids: each batch's
     * [[graft.x.Sketches.bitmapWords]] rows `bit_or`-merge into the store
-    * (idempotent, so batch replay after a crash is a no-op), behind the
-    * same crash-safe numbered generations. Read back with
-    * [[readSketchStore]] + [[graft.x.Sketches.bitmapDistinct]] /
-    * `bitmapIntersect` for exact audience counts and overlaps without
-    * rescanning history. */
+    * (idempotent, so batch replay after a crash is a no-op). Read back
+    * with `VersionedParquet.read(storeDir)` +
+    * [[graft.x.Sketches.bitmapDistinct]] / `bitmapIntersect` for exact
+    * audience counts and overlaps without rescanning history. */
   def startBitmapStore(stream: DataFrame, groupCols: Seq[String],
       idCol: String, storeDir: String, checkpoint: String,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
@@ -677,181 +655,100 @@ object StreamingJobs {
       (cur, incoming) =>
         graft.x.Sketches.bitmapMerge(cur.unionByName(incoming), groupCols))
 
-  /** Generation-safe persist-and-merge loop shared by the sketch stores:
-    * `build` turns a batch into mergeable sketch rows, `merge` folds them
-    * into the prior committed generation (must be idempotent under batch
-    * replay — max for HLL registers, bit_or for bitmaps, sum only when
-    * the checkpoint guarantees exactly-once). Each refresh writes a NEW
-    * `gen=N` dir, commits it with an explicit marker (never the
-    * committer's _SUCCESS, which object-store configs may disable), then
-    * GCs stale + torn generations best-effort. */
+  /** Persist-and-merge loop shared by the sketch stores: `build` turns a
+    * batch into mergeable sketch rows, `merge` folds them into the latest
+    * version of the [[VersionedParquet]] table at `storeDir` (it must be
+    * idempotent under batch replay — max for HLL registers, bit_or for
+    * bitmaps), and the merged rows commit as a new overwrite version. A
+    * crash before the manifest publish leaves only an unreferenced data
+    * dir, which readers never see and `vacuum` reclaims; a replay re-merges
+    * rows the store already holds, so no replay watermark is needed.
+    * Each batch vacuums down to its own version and the one before. A
+    * non-empty directory that is not a versioned table (a store an older
+    * build wrote) is refused when the query starts. Like every
+    * [[VersionedParquet]] table, the store lives on a local or locally
+    * mounted file system. */
   private def startMergedSketchStore(stream: DataFrame, storeDir: String,
       checkpoint: String, trigger: Trigger)(build: DataFrame => DataFrame)(
-      merge: (DataFrame, DataFrame) => DataFrame): StreamingQuery =
+      merge: (DataFrame, DataFrame) => DataFrame): StreamingQuery = {
+    VersionedParquet.requireVersioned(storeDir, "sketch store")
     start(stream, checkpoint, trigger) { (batch: DataFrame, _: Long) =>
-      val spark = batch.sparkSession
       val incoming = build(batch)
-      val gens = completeGenerations(spark, storeDir)
-      val merged = gens.lastOption match {
-        case Some(cur) => merge(spark.read.parquet(cur.toString), incoming)
-        case None => incoming
-      }
-      val nextId = gens.lastOption
-        .map(_.getName.stripPrefix("gen=").toLong + 1L).getOrElse(1L)
-      val root = new org.apache.hadoop.fs.Path(storeDir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val next = new org.apache.hadoop.fs.Path(root, f"gen=$nextId%08d")
-      merged.write.mode("overwrite").parquet(next.toString)
-      // commit: our own marker, not the committer's _SUCCESS
-      fs.create(new org.apache.hadoop.fs.Path(next, CommitMarker), true).close()
-      // keep the new + one prior committed generation; GC everything
-      // else best-effort — stale committed gens AND torn markerless dirs
-      val keep = Set(next.getName) ++ gens.lastOption.map(_.getName)
-      fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
-        .map(_.getPath).filterNot(p => keep(p.getName))
-        .foreach(p => try { fs.delete(p, true); () }
-          catch { case _: Throwable => () })
+      val merged =
+        if (VersionedParquet.versions(storeDir).isEmpty) incoming
+        else merge(VersionedParquet.read(batch.sparkSession, storeDir), incoming)
+      VersionedParquet.write(merged, storeDir, "overwrite")
+      VersionedParquet.vacuum(storeDir, keepVersions = 2)
+      ()
     }
-
-  private val CommitMarker = "_GRAFT_COMMIT"
-
-  /** Committed generations of a register store, oldest first; empty if
-    * the store doesn't exist yet. Committed = carries [[CommitMarker]],
-    * or `_SUCCESS` from a generation written by an older build. A legacy
-    * FLAT store (parquet files directly under `storeDir`, the pre-
-    * generation layout) is adopted in place as `gen=00000001` so
-    * upgraded deployments keep their accumulated registers. */
-  private def completeGenerations(spark: SparkSession,
-      storeDir: String): Seq[org.apache.hadoop.fs.Path] = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Seq.empty
-    def committed(p: Path): Boolean =
-      fs.exists(new Path(p, CommitMarker)) || fs.exists(new Path(p, "_SUCCESS"))
-    val entries = fs.listStatus(root).toSeq
-    val gens = entries
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
-      .map(_.getPath)
-    val flat = entries.filter(_.isFile).map(_.getPath)
-    if (gens.isEmpty && flat.exists(_.getName.endsWith(".parquet"))) {
-      // legacy rewrite-in-place layout: adopt the flat files as gen 1
-      val g1 = new Path(root, "gen=00000001")
-      fs.mkdirs(g1)
-      flat.foreach(f => fs.rename(f, new Path(g1, f.getName)))
-      fs.create(new Path(g1, CommitMarker), true).close()
-      Seq(g1)
-    } else gens.filter(committed).sortBy(_.getName)
   }
-
-  /** Read the current state of a generation store ([[startHllRegisterStore]]
-    * / [[startBitmapStore]]): the sketch rows of the latest complete
-    * generation (empty-schema-safe only once a generation exists; call
-    * after the first batch). */
-  def readSketchStore(spark: SparkSession, storeDir: String): DataFrame = {
-    val gens = completeGenerations(spark, storeDir)
-    require(gens.nonEmpty, s"no complete sketch-store generation under $storeDir")
-    spark.read.parquet(gens.last.toString)
-  }
-
-  /** Historical name for [[readSketchStore]] (HLL was the first store). */
-  def readHllRegisterStore(spark: SparkSession, storeDir: String): DataFrame =
-    readSketchStore(spark, storeDir)
 
   /** One micro-batch of the streaming near-dedup (the foreachBatch body
     * of [[startIncrementalNearDup]], exposed so the crash-replay spec can
-    * re-invoke a batch id directly). Exactly-once EFFECT on an
-    * at-least-once channel, without a second marker system — the band
-    * store's own versioned commit IS the marker:
+    * re-invoke a batch directly). `streamBatch` is the (micro-batch id,
+    * [[SinkWriter.streamIdentity]]) pair, as in [[SinkWriter.write]].
+    * Exactly-once EFFECT on an at-least-once channel, without a second
+    * marker system — the band store's own versioned commit IS the marker:
     *
-    *  1. replay detection: each store append carries BOTH its own
-    *     `streamBatchId = <bid>` and the monotone high-watermark
-    *     `streamBatchHwm = max(bid, previous hwm)` in its commit manifest
-    *     ([[graft.sources.VersionedParquet.commitMeta]] — a log lookup,
-    *     no Spark job). "Already committed" is `bid <= hwm(newest
-    *     version)` — ONE manifest read per batch regardless of store
-    *     age (micro-batch ids from a checkpointed stream are strictly
-    *     increasing, and foreachBatch runs batches sequentially, so a
-    *     bid at or below the newest hwm has completed WHOLE — including
-    *     its `persistAdmitted`, because a later batch can only have run
-    *     after the earlier one finished). Legacy stores whose newest
-    *     commit predates the hwm key fall back to that commit's own
-    *     `streamBatchId` tag, which is the largest committed bid for
-    *     the same ordering reason. A batch at or below the watermark is
-    *     skipped WHOLE, because step 2 guarantees its output is already
-    *     complete. VACUUM SAFETY: [[graft.sources.VersionedParquet.vacuum]]
-    *     always retains the newest version (`keepVersions >= 1` is
-    *     enforced), and the hwm is re-carried into every subsequent
-    *     commit, so vacuuming old tagged manifests can never reopen
-    *     crash window (b) below — the one store operation that WOULD
-    *     break the contract is deleting the version log itself while a
-    *     batch is still replayable.
+    *  1. replay detection: each store append carries the stream replay
+    *     watermark ([[VersionedParquet.batchMeta]]), the same
+    *     identity-qualified one partitioned SCD2 uses, and a batch that
+    *     [[VersionedParquet.batchCommitted]] reports committed is skipped
+    *     WHOLE — one backward manifest scan, no Spark job, and including
+    *     its `persistAdmitted`, because a later batch of the same stream
+    *     only runs after the earlier one finished. A restart on a fresh
+    *     checkpoint is a new identity whose batches all run. VACUUM
+    *     SAFETY: [[VersionedParquet.vacuum]] always keeps the newest
+    *     version and every tagged commit re-carries the watermark, so
+    *     vacuum can never reopen crash window (b) below.
     *  2. ordering inside [[graft.x.Dedup.incrementalNearDup]]:
     *     `persistAdmitted` runs BEFORE the store commit, and the admitted
-    *     output goes to a batch-scoped directory (`admittedDir/batch=<bid>`,
-    *     overwrite). Crash windows: (a) after persist, before commit —
-    *     replay recomputes against the UNCHANGED store, reproduces the
-    *     identical admitted set (the decision is deterministic in
-    *     (store, batch)), overwrites the same directory, then commits;
-    *     (b) after commit — replay sees the tag and touches nothing.
-    *     Without the tag, window (b) would be fatal: the replayed batch
-    *     now HITS the store on its own buckets, admits nothing, and an
-    *     unconditional overwrite would clobber the committed output with
-    *     an empty directory.
+    *     output goes to a batch-scoped directory
+    *     (`admittedDir/batch=<identity>_<bid>`, overwrite; the identity
+    *     keeps a fresh checkpoint's batch 0 off the first lineage's).
+    *     Crash windows: (a) after persist, before commit — replay
+    *     recomputes against the UNCHANGED store, reproduces the identical
+    *     admitted set (the decision is deterministic in (store, batch)),
+    *     overwrites the same directory, then commits; (b) after commit —
+    *     replay sees the watermark and touches nothing. Without it, window
+    *     (b) would be fatal: the replayed batch now HITS the store on its
+    *     own buckets, admits nothing, and an unconditional overwrite would
+    *     clobber the committed output with an empty directory.
     *
     * A batch whose admitted set is EMPTY commits no store version (there
     * is nothing to append), so its replay recomputes — and deterministically
-    * admits nothing again; idempotent without a marker.
+    * admits nothing again; idempotent without a marker. A store whose
+    * newest tagged commit carries another protocol's tags is refused
+    * before any write.
     *
     * SINGLE WRITER (PLANS.md "Store concurrency contracts"): the
     * admit/reject decision is deterministic in (store state, batch) —
     * two concurrent admitters would each decide against a store missing
     * the other's bands. foreachBatch sequencing is the serialization;
     * never point two ingest streams at one store path. */
-  def incrementalNearDupBatch(batch: DataFrame, bid: Long,
+  def incrementalNearDupBatch(batch: DataFrame, streamBatch: (Long, String),
       textCol: String, idCol: String, storePath: String, admittedDir: String,
       n: Int = 3, k: Int = 32, bands: Int = 8,
-      compactAtFiles: Int = 64, compactTarget: Int = 4): Unit = {
-    // one manifest read, newest version only (scaladoc step 1): hwm if
-    // present, else the legacy per-version tag — both are the largest
-    // committed bid because batches commit in order. LEGACY HOLE: a
-    // store whose NEWEST commit carries no tag at all (a pre-upgrade
-    // compaction rewrite, before VersionedParquet.compact carried meta
-    // forward) must not read as "never committed" — treating it so
-    // would replay an already-committed batch, which recomputes an
-    // EMPTY admitted set against the populated store and clobbers the
-    // committed admittedDir/batch=<bid>. Scan backwards to the newest
-    // TAGGED manifest in that one degenerate case; the very next commit
-    // carries the hwm forward, so the scan is one-time, not steady-state.
-    def tagOf(v: Long): Option[Long] = {
-      val meta = graft.sources.VersionedParquet.commitMeta(storePath, v)
-      meta.get("streamBatchHwm").orElse(meta.get("streamBatchId"))
-        .flatMap(s => scala.util.Try(s.toLong).toOption)
-    }
-    val prevHwm = graft.sources.VersionedParquet.versions(storePath)
-      .reverse.iterator.map(tagOf).collectFirst { case Some(t) => t }
-      .getOrElse(-1L)
-    if (bid > prevHwm) {
+      compactAtFiles: Int = 64, compactTarget: Int = 4): Unit =
+    if (!VersionedParquet.batchCommitted(storePath, streamBatch)) {
+      val (bid, identity) = streamBatch
       graft.x.Dedup.incrementalNearDup(batch, textCol, idCol, storePath,
         n = n, k = k, bands = bands,
         persistAdmitted = adm => adm.write.mode("overwrite")
-          .parquet(s"$admittedDir/batch=$bid"),
+          .parquet(s"$admittedDir/batch=${identity}_$bid"),
         compactAtFiles = compactAtFiles, compactTarget = compactTarget,
-        storeMeta = Map("streamBatchId" -> bid.toString,
-          "streamBatchHwm" -> math.max(bid, prevHwm).toString))
+        storeMeta = VersionedParquet.batchMeta(storePath, Some(streamBatch)))
       ()
     }
-  }
 
   /** Streaming twin of [[graft.x.Dedup.incrementalNearDup]]: each
     * micro-batch admits only documents that are near-duplicates of
     * neither the retained corpus (the persistent band store) nor a
     * smaller-id batch sibling, appends the admitted documents' band
     * buckets to the store, and lands the admitted rows under
-    * `admittedDir/batch=<bid>`. Store compaction rides the batch path's
-    * own `compactAtFiles` cadence — the standing maintenance a
-    * continuously-ingesting dedup store needs. Read the running corpus
+    * `admittedDir/batch=<identity>_<bid>`. Store compaction rides the
+    * batch path's own `compactAtFiles` cadence — the standing maintenance
+    * a continuously-ingesting dedup store needs. Read the running corpus
     * as `spark.read.parquet(s"$admittedDir/batch=*")` or each batch
     * directory individually. Exactly-once contract and crash windows:
     * [[incrementalNearDupBatch]]. */
@@ -859,11 +756,13 @@ object StreamingJobs {
       storePath: String, admittedDir: String, checkpoint: String,
       n: Int = 3, k: Int = 32, bands: Int = 8,
       compactAtFiles: Int = 64, compactTarget: Int = 4,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
+    val identity = SinkWriter.streamIdentity(checkpoint)
     start(docs, checkpoint, trigger) { (batch: DataFrame, bid: Long) =>
-      incrementalNearDupBatch(batch, bid, textCol, idCol, storePath,
+      incrementalNearDupBatch(batch, bid -> identity, textCol, idCol, storePath,
         admittedDir, n, k, bands, compactAtFiles, compactTarget)
     }
+  }
 
   /** One micro-batch of the streaming IVF-layout ingest (the foreachBatch
     * body of [[startIvfIngest]], exposed so the replay/crash spec can

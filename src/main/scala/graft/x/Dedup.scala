@@ -225,8 +225,8 @@ object Dedup {
       val newBuckets = bb.join(admitted.select(col(idCol)), Seq(idCol), "left_semi")
         .select("band", "bh").distinct()
       // storeMeta rides the version manifest — the streaming twin tags each
-      // append with its micro-batch id so an at-least-once replay can
-      // recognize a committed batch (see StreamingJobs.startIncrementalNearDup)
+      // append with its stream replay watermark (VersionedParquet.batchMeta)
+      // so an at-least-once replay can recognize a committed batch
       graft.sources.VersionedParquet.write(newBuckets, storePath, "append",
         storeMeta)
       if (compactAtFiles > 0 &&

@@ -91,6 +91,63 @@ class FormatsSpec extends AnyFunSuite {
     assert(VersionedParquet.read(spark, p2).count() == 2)
   }
 
+  test("vacuum keeps live data of a table under a directory named data") {
+    val path = Files.createTempDirectory("graft-vacdata").toString + "/data/tbl"
+    VersionedParquet.write(Seq((1, "a")).toDF("id", "v"), path, "overwrite")
+    VersionedParquet.write(Seq((2, "b")).toDF("id", "v"), path, "append")
+    VersionedParquet.write(Seq((3, "c")).toDF("id", "v"), path, "append")
+    // an orphan from a crashed commit, older than the grace period
+    val orphan = Paths.get(path, "data", "c-orphan")
+    Files.createDirectories(orphan)
+    val f = Files.writeString(orphan.resolve("part-0.parquet"), "torn")
+    val old = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 60000)
+    Files.setLastModifiedTime(f, old); Files.setLastModifiedTime(orphan, old)
+    assert(VersionedParquet.vacuum(path, keepVersions = 1, orphanGraceMs = 0) == 1)
+    assert(!Files.exists(orphan), "the orphan dir survived")
+    assert(VersionedParquet.read(spark, path).as[(Int, String)].collect().sorted.toSeq ==
+      Seq((1, "a"), (2, "b"), (3, "c")))
+  }
+
+  test("manifests list files relative to the table: a copied table reads its " +
+      "own files; absolute entries written before still read, and a copy's " +
+      "vacuum leaves them alone") {
+    val base = Files.createTempDirectory("graft-vpcopy")
+    def copyTable(from: String, to: java.nio.file.Path): Unit =
+      graft.util.Fs.walk(Paths.get(from)).foreach { p =>
+        val t = to.resolve(Paths.get(from).relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+      }
+    val orig = base.resolve("orig").toString
+    VersionedParquet.write(Seq((1, "a"), (2, "b")).toDF("id", "v"), orig, "overwrite")
+    VersionedParquet.write(Seq((3, "c")).toDF("id", "v"), orig, "append")
+    val copy = base.resolve("copy")
+    copyTable(orig, copy)
+    graft.util.Fs.walk(Paths.get(orig)).reverse.foreach(Files.delete)
+    val c = copy.toString
+    assert(VersionedParquet.read(spark, c).count() == 3)
+    assert(VersionedParquet.read(spark, c, Some(0L)).count() == 2)
+    assert(VersionedParquet.readChanges(spark, c, fromVersion = 0)
+      .select("id").as[Int].collect().toSeq == Seq(3))
+
+    // a manifest from before: absolute entries, as older builds wrote them
+    val legacy = base.resolve("legacy").toString
+    VersionedParquet.write(Seq((1, "a")).toDF("id", "v"), legacy, "overwrite")
+    val abs = graft.util.Fs.walk(Paths.get(legacy, "data"))
+      .map(_.toAbsolutePath.toString).filter(_.endsWith(".parquet"))
+    Files.writeString(Paths.get(legacy, "_graft_log", "0.json"),
+      abs.map("\"" + _ + "\"").mkString("""{"version": 0, "files": [""", ",", "]}"))
+    // a copy's absolute entries name the ORIGINAL's files: dropping them
+    // from the copy's history must not delete them
+    val legacyCopy = base.resolve("legacy-copy").toString
+    copyTable(legacy, Paths.get(legacyCopy))
+    VersionedParquet.write(Seq((9, "z")).toDF("id", "v"), legacyCopy, "overwrite")
+    VersionedParquet.vacuum(legacyCopy, keepVersions = 1, orphanGraceMs = 0)
+    VersionedParquet.write(Seq((2, "b")).toDF("id", "v"), legacy, "append")
+    VersionedParquet.vacuum(legacy, keepVersions = 1, orphanGraceMs = 0)
+    assert(VersionedParquet.read(spark, legacy).as[(Int, String)].collect().sorted.toSeq ==
+      Seq((1, "a"), (2, "b")))
+  }
+
   test("versioned table change feed: manifest diffs yield insert/delete rows") {
     val path = Files.createTempDirectory("graft-cdf").toString + "/tbl"
     VersionedParquet.write(Seq((1, "a"), (2, "b")).toDF("id", "v"), path, "overwrite") // v0

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.config.JobConfig
 import graft.run.Orchestrator
 import graft.streaming.StreamingJobs
+import graft.sources.VersionedParquet
 import java.nio.file.Files
 
 class StatefulStreamingSpec extends AnyFunSuite {
@@ -45,7 +46,7 @@ class StatefulStreamingSpec extends AnyFunSuite {
     }
     runBatches("graft-bmck1")
     def counts() = graft.x.Sketches
-      .bitmapDistinct(StreamingJobs.readSketchStore(spark, store), Seq("event_type"))
+      .bitmapDistinct(VersionedParquet.read(spark, store), Seq("event_type"))
       .select("event_type", "distinct_cnt")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     // the streamed store answers the EXACT batch distinct — not an estimate
@@ -58,9 +59,8 @@ class StatefulStreamingSpec extends AnyFunSuite {
     assert(counts() == exact, "replay was not idempotent")
   }
 
-  test("HLL register store: torn generations ignored, replay idempotent, " +
-      "stale + torn dirs GC'd, legacy flat layout adopted") {
-    import org.apache.hadoop.fs.Path
+  test("HLL register store: a crashed write leaves the answer unchanged, " +
+      "a fresh-checkpoint replay is idempotent, at most 2 versions remain") {
     val batchDf = spark.read.parquet(eventsDir)
     val store = Files.createTempDirectory("graft-hllcrash").resolve("regs").toString
     def runBatches(ckptName: String): Unit = {
@@ -73,42 +73,61 @@ class StatefulStreamingSpec extends AnyFunSuite {
     }
     runBatches("graft-hllck1")
     def estimate() = graft.x.Sketches.hllEstimateFromRegisters(
-        StreamingJobs.readHllRegisterStore(spark, store), Seq("event_type"))
+        VersionedParquet.read(spark, store), Seq("event_type"))
       .orderBy("event_type").collect().toSeq
     val afterFirst = estimate()
-    // a crash mid-write leaves a markerless (torn) generation sorting
-    // NEWEST — readers must keep answering from the last committed one
-    val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val torn = new Path(store, "gen=99999999")
-    fs.mkdirs(torn)
-    fs.create(new Path(torn, "part-00000.parquet"), true).close() // 0-byte torn file
-    assert(estimate() == afterFirst, "torn generation changed the answer")
+    assert(afterFirst == graft.x.Sketches.hllDistinct(batchDf, Seq("event_type"),
+      "user_id").orderBy("event_type").collect().toSeq)
+    assert(VersionedParquet.versions(store).size <= 2,
+      s"vacuum left versions ${VersionedParquet.versions(store)}")
+    // a crash after the data stage, before the manifest publish: a data
+    // dir no manifest references, holding registers that would change
+    // the answer if anything read them
+    graft.x.Sketches.hllRegisters(
+        batchDf.withColumn("user_id", col("user_id") + 1000000L),
+        Seq("event_type"), "user_id")
+      .write.parquet(java.nio.file.Paths.get(store, "data", "c-torn").toString)
+    assert(estimate() == afterFirst, "an unpublished data dir changed the answer")
     // a full replay of every batch (fresh checkpoint, same data) must be a
-    // no-op under max-merge, and GC must remove the torn dir + stale gens
+    // no-op under max-merge
+    val versionsBefore = VersionedParquet.versions(store)
     runBatches("graft-hllck2")
     assert(estimate() == afterFirst, "replay was not idempotent")
-    assert(!fs.exists(torn), "GC left the torn generation behind")
-    val gens = fs.listStatus(new Path(store)).map(_.getPath.getName)
-      .filter(_.startsWith("gen=")).sorted
-    assert(gens.length <= 2, s"GC left ${gens.mkString(", ")}")
-    // every surviving generation carries the explicit commit marker — the
-    // store must not depend on the committer's _SUCCESS setting
-    gens.foreach(g => assert(
-      fs.exists(new Path(new Path(store, g), "_GRAFT_COMMIT")),
-      s"$g lacks the explicit commit marker"))
+    val vs = VersionedParquet.versions(store)
+    assert(vs.max > versionsBefore.max, "the replay committed nothing")
+    assert(vs.size <= 2, s"vacuum left versions $vs")
+  }
 
-    // legacy flat layout (pre-generation store): registers directly under
-    // storeDir are adopted as gen=00000001, nothing dropped
-    val legacy = Files.createTempDirectory("graft-hlllegacy").resolve("regs").toString
-    graft.x.Sketches.hllRegisters(batchDf, Seq("event_type"), "user_id")
-      .coalesce(1).write.mode("overwrite").parquet(legacy)
-    // strip the committer's _SUCCESS to model marksuccessfuljobs=false
-    fs.delete(new Path(legacy, "_SUCCESS"), false)
-    val adopted = graft.x.Sketches.hllEstimateFromRegisters(
-        StreamingJobs.readHllRegisterStore(spark, legacy), Seq("event_type"))
-      .orderBy("event_type").collect().toSeq
-    assert(adopted == afterFirst, "legacy store adoption lost state")
-    assert(fs.exists(new Path(legacy, "gen=00000001/_GRAFT_COMMIT")))
+  test("sketch stores refuse a pre-versioned generation or flat store, naming it") {
+    import org.apache.hadoop.fs.Path
+    val batchDf = spark.read.parquet(eventsDir)
+    val regs = graft.x.Sketches.hllRegisters(batchDf, Seq("event_type"), "user_id")
+    val base = Files.createTempDirectory("graft-sketchold")
+    val genStore = base.resolve("gens").toString
+    regs.write.parquet(s"$genStore/gen=00000001")
+    val fs = new Path(genStore).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.create(new Path(s"$genStore/gen=00000001", "_GRAFT_COMMIT"), true).close()
+    val flatStore = base.resolve("flat").toString
+    regs.write.parquet(flatStore)
+    def listing(p: String) =
+      graft.util.Fs.walk(java.nio.file.Paths.get(p)).map(_.toString).toSet
+    for (store <- Seq(genStore, flatStore)) {
+      val before = listing(store)
+      val ckpt = Files.createTempDirectory("graft-sketcholdck").toString
+      val stream = StreamingJobs.fileStream(spark, eventsDir, batchDf.schema,
+        maxFilesPerTrigger = 2)
+      val e = intercept[IllegalArgumentException] {
+        val q = StreamingJobs.startHllRegisterStore(stream, Seq("event_type"),
+          "user_id", store, ckpt)
+        try q.processAllAvailable() finally q.stop()
+      }
+      assert(e.getMessage.contains(store) && e.getMessage.contains("_graft_log"),
+        e.getMessage)
+      assert(listing(store) == before, s"a refused store was modified: $store")
+      intercept[IllegalArgumentException] {
+        StreamingJobs.startBitmapStore(stream, Seq("event_type"), "user_id", store, ckpt)
+      }
+    }
   }
 
   test("flatMapGroupsWithState sessions agree with session_window on closed sessions") {
@@ -403,6 +422,7 @@ class StatefulStreamingSpec extends AnyFunSuite {
     val q = StreamingJobs.startIncrementalNearDup(stream, "text", "doc_id",
       store, admitted, s"$base/ckpt", n = 3, k = 16, bands = 4)
     q.awaitTermination()
+    val sid = graft.sinks.SinkWriter.streamIdentity(s"$base/ckpt")
     val got = spark.read.parquet(s"$admitted/batch=*")
       .select("doc_id").collect().map(_.getLong(0)).sorted
     // sequential batch-mode reference on a fresh store
@@ -423,7 +443,7 @@ class StatefulStreamingSpec extends AnyFunSuite {
     val versionsBefore = graft.sources.VersionedParquet.versions(store)
     val admittedBefore = spark.read.parquet(s"$admitted/batch=*")
       .collect().map(_.toString).sorted
-    StreamingJobs.incrementalNearDupBatch(b1, bid = 1L, "text", "doc_id",
+    StreamingJobs.incrementalNearDupBatch(b1, streamBatch = 1L -> sid, "text", "doc_id",
       store, admitted, n = 3, k = 16, bands = 4)
     assert(graft.sources.VersionedParquet.versions(store) == versionsBefore,
       "replay appended a duplicate store version")
@@ -432,9 +452,9 @@ class StatefulStreamingSpec extends AnyFunSuite {
     assert(admittedAfter.sameElements(admittedBefore),
       "replay clobbered the committed admitted output")
     // an EARLIER batch (bid strictly below the newest watermark) must also
-    // be a no-op: detection reads ONE manifest (the newest version's
-    // streamBatchHwm), not a scan of every version for a matching tag
-    StreamingJobs.incrementalNearDupBatch(b0, bid = 0L, "text", "doc_id",
+    // be a no-op: detection reads ONE manifest (the newest tagged
+    // version's watermark), not a scan of every version for a matching tag
+    StreamingJobs.incrementalNearDupBatch(b0, streamBatch = 0L -> sid, "text", "doc_id",
       store, admitted, n = 3, k = 16, bands = 4)
     assert(graft.sources.VersionedParquet.versions(store) == versionsBefore,
       "below-watermark replay appended a store version")
@@ -581,15 +601,16 @@ class StatefulStreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-legacyhwm").toString
     val store = s"$base/store"; val admitted = s"$base/admitted"
+    val sid = graft.sinks.SinkWriter.streamIdentity(s"$base/ckpt")
     val b0 = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
       (2L, "completely different words live over here now")).toDF("doc_id", "text")
-    StreamingJobs.incrementalNearDupBatch(b0, bid = 0L, "text", "doc_id",
+    StreamingJobs.incrementalNearDupBatch(b0, streamBatch = 0L -> sid, "text", "doc_id",
       store, admitted, n = 3, k = 16, bands = 4)
-    val admittedBefore = spark.read.parquet(s"$admitted/batch=0")
+    val admittedBefore = spark.read.parquet(s"$admitted/batch=${sid}_0")
       .collect().map(_.toString).sorted
     assert(admittedBefore.nonEmpty)
     // a maintenance rewrite from BEFORE meta was carried forward: the
-    // newest version carries no streamBatchHwm/streamBatchId at all
+    // newest version carries no replay watermark at all
     graft.sources.VersionedParquet.write(
       graft.sources.VersionedParquet.read(spark, store), store, "overwrite")
     assert(graft.sources.VersionedParquet.commitMeta(store,
@@ -597,15 +618,90 @@ class StatefulStreamingSpec extends AnyFunSuite {
     // replaying the committed batch must still be detected (backward scan
     // to the newest TAGGED manifest) — an undetected replay recomputes an
     // EMPTY admitted set against the populated store and clobbers the
-    // committed batch=0 output
+    // committed batch output
     val versionsBefore = graft.sources.VersionedParquet.versions(store)
-    StreamingJobs.incrementalNearDupBatch(b0, bid = 0L, "text", "doc_id",
+    StreamingJobs.incrementalNearDupBatch(b0, streamBatch = 0L -> sid, "text", "doc_id",
       store, admitted, n = 3, k = 16, bands = 4)
     assert(graft.sources.VersionedParquet.versions(store) == versionsBefore,
       "replay after an untagged commit appended a store version")
-    assert(spark.read.parquet(s"$admitted/batch=0")
+    assert(spark.read.parquet(s"$admitted/batch=${sid}_0")
       .collect().map(_.toString).sorted.sameElements(admittedBefore),
       "replay after an untagged commit clobbered committed output")
+  }
+
+  test("streaming near-dedup: a restart on a FRESH checkpoint (batch ids " +
+      "reset to 0) admits its new documents; run 1's output stays as it was") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-sneardupfresh").toString
+    val in = s"$base/in"
+    Seq((1L, "alpha beta gamma delta epsilon zeta eta theta"),
+      (2L, "completely different words live over here now"))
+      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
+    Thread.sleep(1100) // distinct mtimes -> deterministic batch order
+    Seq((3L, "yet another unrelated document body of words"))
+      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in)
+    val schema = spark.read.parquet(in).schema
+    val store = s"$base/store"; val admitted = s"$base/admitted"
+    def run(src: String, ckpt: String): Unit =
+      StreamingJobs.startIncrementalNearDup(
+        StreamingJobs.fileStream(spark, src, schema, maxFilesPerTrigger = 1),
+        "text", "doc_id", store, admitted, ckpt, n = 3, k = 16, bands = 4)
+        .awaitTermination()
+    // run 1 on checkpoint A: batches 0 and 1 admit docs 1, 2 and 3
+    run(in, s"$base/ckptA")
+    val sidA = graft.sinks.SinkWriter.streamIdentity(s"$base/ckptA")
+    def run1Files() = graft.util.Fs.walk(java.nio.file.Paths.get(admitted))
+      .filter(p => p.toString.contains(s"batch=${sidA}_") && Files.isRegularFile(p))
+      .map(p => p.toString -> java.util.Arrays.hashCode(Files.readAllBytes(p))).sorted
+    val run1 = run1Files()
+    assert(run1.nonEmpty)
+
+    // checkpoint A is lost; NEW documents arrive and the stream restarts
+    // on checkpoint B, whose batch 0 sits BELOW run 1's batch ids
+    val in2 = s"$base/in2"
+    Seq((4L, "fresh words that no earlier document ever used"),
+      (5L, "alpha beta gamma delta epsilon zeta eta iota"))
+      .toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(in2)
+    run(in2, s"$base/ckptB")
+    val got = spark.read.parquet(s"$admitted/batch=*")
+      .select("doc_id").collect().map(_.getLong(0)).sorted
+    // doc 4 is new and admitted; doc 5 near-duplicates retained doc 1
+    assert(got.sameElements(Seq(1L, 2L, 3L, 4L)),
+      s"fresh-checkpoint batch skipped or mis-admitted: ${got.mkString(",")}")
+    assert(run1Files() == run1, "run 2 rewrote run 1's admitted output")
+
+    // a replay WITHIN checkpoint B's identity is still skipped whole
+    val sidB = graft.sinks.SinkWriter.streamIdentity(s"$base/ckptB")
+    val before = graft.sources.VersionedParquet.versions(store)
+    val admittedB = spark.read.parquet(s"$admitted/batch=${sidB}_0")
+      .collect().map(_.toString).sorted
+    StreamingJobs.incrementalNearDupBatch(spark.read.parquet(in2),
+      streamBatch = 0L -> sidB, "text", "doc_id", store, admitted,
+      n = 3, k = 16, bands = 4)
+    assert(graft.sources.VersionedParquet.versions(store) == before,
+      "same-identity replay appended a store version")
+    assert(spark.read.parquet(s"$admitted/batch=${sidB}_0")
+      .collect().map(_.toString).sorted.sameElements(admittedB),
+      "same-identity replay clobbered committed output")
+  }
+
+  test("streaming near-dedup refuses a store tagged by another replay protocol") {
+    import spark.implicits._
+    val base = Files.createTempDirectory("graft-neardupold").toString
+    val store = s"$base/store"; val admitted = s"$base/admitted"
+    // a store written by the old protocol: its newest tagged commit holds
+    // only the unqualified batch tags, with no stream identity
+    graft.sources.VersionedParquet.write(Seq((0, 1L)).toDF("band", "bh"),
+      store, "append", Map("streamBatchId" -> "3", "streamBatchHwm" -> "3"))
+    val e = intercept[IllegalArgumentException] {
+      StreamingJobs.incrementalNearDupBatch(
+        Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"),
+        streamBatch = 0L -> "abc", "text", "doc_id", store, admitted,
+        n = 3, k = 16, bands = 4)
+    }
+    assert(e.getMessage.contains(store), e.getMessage)
+    assert(graft.sources.VersionedParquet.versions(store) == Seq(0L))
+    assert(!Files.exists(java.nio.file.Paths.get(admitted)))
   }
 
   test("streaming IVF ingest: probe equals full rebuild, compaction rides " +

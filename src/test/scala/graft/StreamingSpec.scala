@@ -285,13 +285,11 @@ class StreamingSpec extends AnyFunSuite {
       "user_id", store, ckpt)
     try q.processAllAvailable() finally q.stop()
     val streamed = graft.x.Sketches.hllEstimateFromRegisters(
-        StreamingJobs.readHllRegisterStore(spark, store), Seq("event_type"))
+        graft.sources.VersionedParquet.read(spark, store), Seq("event_type"))
       .orderBy("event_type").collect().toSeq
-    // generation layout: latest complete generation wins; at most the new
-    // + one prior generation survive GC
-    val gens = new java.io.File(store).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("gen=")).map(_.getName).sorted
-    assert(gens.length <= 2, s"generation GC left ${gens.mkString(", ")}")
+    // each batch commits a version and vacuums down to the last two
+    val vs = graft.sources.VersionedParquet.versions(store)
+    assert(vs.size <= 2, s"vacuum left versions $vs")
     val direct = graft.x.Sketches.hllDistinct(batchDf, Seq("event_type"), "user_id")
       .orderBy("event_type").collect().toSeq
     assert(streamed == direct)
